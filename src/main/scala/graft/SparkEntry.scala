@@ -1752,8 +1752,7 @@ object SparkEntry {
       // the entire point of the index. Approximate by design ⇒ rows-only
       // (a SQL twin cannot exist); the cost/recall point a user would run
       // is measured beside it in BASELINE.md (recall@5 vs the exact
-      // nprobe=nlist run, tools/RecallProbe) and distribution-pinned in
-      // SkewIvfStreamSpec.
+      // nprobe=nlist run) and distribution-pinned in SkewIvfStreamSpec.
       import org.apache.spark.sql.expressions.Window
       val emb = Tables.load(s, dir, "embeddings")
       val index = memoIvfIndex(s, dir, 8)
@@ -2001,7 +2000,7 @@ object SparkEntry {
 
   /** Reuse a path-based stored artifact ACROSS SESSIONS when its source
     * table is unchanged, else (re)build. Valid = `_SUCCESS` present (a
-    * partial write never serves — the PlanDiag r19-advice lesson: a bare
+    * partial write never serves — the r19-advice lesson: a bare
     * exists() check reads interrupted writes) AND the `_GRAFT_SRC_FPR`
     * marker matches the current [[sourceFingerprint]] (a driver-regenerated
     * testdata vintage never serves a stale rewrite). This is the production

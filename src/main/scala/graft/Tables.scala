@@ -101,8 +101,8 @@ object Tables {
   /** Spark session with the library's baseline settings. Scan-split knobs
     * are left at Spark's defaults (128 MB splits, 4 MB open cost — right
     * for real data) unless SPARK_GRAFT_MAX_PARTITION_BYTES overrides; the
-    * local bench/plan mains use [[harnessSession]], which adds the
-    * tiny-split tuning their 15-600 MB local inputs need (Verify builds
+    * local harnesses use [[harnessSessionFor]], which adds the
+    * small-split tuning their 15-600 MB local inputs need (Verify builds
     * its own minimal session — correctness is split-size-independent).
     * AQE re-plans partition counts on a real cluster, so the rest scales
     * out unchanged.
@@ -110,22 +110,16 @@ object Tables {
   def session(master: String = defaultMaster): SparkSession =
     build(master, sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES"))
 
-  /** Session for the LOCAL bench/plan mains ONLY. Scan-split size is
-    * matched to the HARNESS scale: inputs here are 15-600 MB per table, so
-    * the 128 MB default turns most scans into 1-4 tasks and leaves 28+ of
-    * the 32 cores idle on every scan-heavy query (measured at sf1: the ANN
-    * corpus scan ran single-task). 1 MB splits even the 6-8 MB
-    * text/embedding tables ~8 ways and the biggest local table ~140 ways.
-    * On real data this would explode task counts — library callers get
+  /** Session for the LOCAL harnesses ONLY (Bench, perfbench, StreamBench,
+    * Smoke), with the scan-split size matched to the HARNESS scale:
+    * `clamp(max(total/1024, largestFile/256), 1 MB, 128 MB)`. Inputs here
+    * are 15-600 MB per table, so the 128 MB default turns most scans into
+    * 1-4 tasks and leaves 28+ of the 32 cores idle on every scan-heavy
+    * query (measured at sf1: the ANN corpus scan ran single-task). On real
+    * data small splits would explode task counts — library callers get
     * [[session]], which keeps Spark's default. (Splitting also needs
     * multi-row-group parquet; tools/gen_sf.py writes small row groups for
     * the same reason.)
-    */
-  def harnessSession(master: String = defaultMaster): SparkSession =
-    build(master, Some(sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "1048576")))
-
-  /** [[harnessSession]] with the split size SCALED TO THE DATA:
-    * `clamp(max(total/1024, largestFile/256), 1 MB, 128 MB)`.
     *
     * Two regimes, both measured:
     *  - SMALL data wants small splits for parallelism: at sf0.1 (600 MB)

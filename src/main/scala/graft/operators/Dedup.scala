@@ -460,8 +460,9 @@ object Dedup {
     // would shuffle every document's set just to verify a handful. The
     // broadcast is bounded by that candidate count: a pathological batch
     // (one boilerplate doc band-colliding with millions of corpus docs)
-    // should pre-dedup within itself or take [[minhashIncremental]]'s
-    // shuffle-join path instead.
+    // should pre-dedup within itself or call [[minhashIncremental]] with
+    // `Some(corpusIndex)`, whose verify leg shuffle-joins the full index
+    // with no broadcast (its no-index path broadcasts candidate ids too).
     val shCorp = bandIndex
       .join(broadcast(vsCorpus.select(col("id_b").as("id")).distinct()), Seq("id"), "left_semi")
       .select(col("id"), col("sh")).dropDuplicates("id")

@@ -544,136 +544,6 @@ object FusedTopK {
     ColumnShim.internalCreateDataFrame(spark, rdd, pairSchema)
   }
 
-  /** SQ8-prefiltered candidate pairs — [[cosinePairs]]'s group scan run over
-    * int8 codes instead of float vectors, emitting every pair whose SOUND
-    * UPPER BOUND on the exact cosine can reach `threshold`. The point is
-    * exchange width: the `(cell, bucket)` repartition is the one
-    * vector-width exchange left in the dedup family (~600 MB of floats at
-    * sf10), and codes + scale are ~4× narrower. Soundness (no true pair
-    * ever dropped — the caller re-verifies survivors with the EXACT cosine,
-    * so extra candidates cost work, never correctness):
-    *
-    * with `x = a + e`, `‖e‖ ≤ r = (scale·√d/2)·(1+1e-6)` (per-element
-    * quantization error ≤ scale/2 exactly in real arithmetic; the 1e-6
-    * factor swallows every FP rounding in the chain), Cauchy-Schwarz gives
-    *   ⟨x,y⟩ ≤ ⟨a,b⟩ + ‖a‖·r_y + ‖b‖·r_x + r_x·r_y   (= num)
-    *   ‖x‖ ≥ ‖a‖ − r_x,  ‖y‖ ≥ ‖b‖ − r_y
-    * so for positive denominators cos(x,y) ≤ num / ((‖a‖−r_x)(‖b‖−r_y));
-    * num < 0 means cos < 0 < threshold (callers enforce threshold > 0) and
-    * the pair drops; a non-positive denominator proves nothing — keep.
-    * ⟨a,b⟩ = scaleA·scaleB·Σ codeA·codeB rides an INTEGER dot product.
-    * Mismatched code lengths score null-or-0.0 in the exact twin, neither
-    * ≥ a positive threshold — skipped. Null codes (null vector) likewise.
-    *
-    * Output `(id_a, id_b)` — candidates only, possibly with cross-bucket
-    * duplicates (callers dedup before the exact verify).
-    */
-  private[graft] def sq8PairCandidates(replicated: DataFrame, threshold: Double,
-      cellCol: String, bucketCol: String, origCol: String,
-      idCol: String, scaleCol: String, codesCol: String): DataFrame = {
-    val spark = replicated.sparkSession
-    require(threshold > 0.0,
-      s"FusedTopK.sq8PairCandidates: threshold must be positive, got $threshold (the " +
-        "num<0 early-drop and the zero-norm discipline assume it; use the exact scan otherwise)")
-    val proj = replicated
-      .filter(col(cellCol).isNotNull && col(bucketCol).isNotNull)
-      .select(col(cellCol).cast("int"), col(bucketCol).cast("int"),
-        col(origCol), col(idCol).cast("long"), col(scaleCol).cast("double"), col(codesCol))
-      .repartition(col(cellCol), col(bucketCol))
-      .sortWithinPartitions(cellCol, bucketCol)
-
-    val pairSchema = StructType(Seq(
-      StructField("id_a", LongType, nullable = false),
-      StructField("id_b", LongType, nullable = false)))
-
-    final case class M(orig: Boolean, id: Long, scale: Double,
-                       codes: Array[Byte], norm: Double, r: Double)
-
-    val slack = threshold - 1e-9 // FP headroom on the bound comparison
-
-    val rdd = ColumnShim.toInternalRdd(proj).mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      val members = scala.collection.mutable.ArrayBuffer.empty[M]
-      var curCell = 0
-      var curBucket = 0
-      var open = false
-
-      def flush(): Unit = {
-        val n = members.length
-        var xi = 0
-        while (xi < n) {
-          val x = members(xi)
-          var yi = 0
-          while (yi < n) {
-            val y = members(yi)
-            if (y.orig && x.id < y.id && x.codes != null && y.codes != null &&
-                x.codes.length == y.codes.length) {
-              val d = x.codes.length
-              var intDot = 0L
-              var i = 0
-              while (i < d) { intDot += x.codes(i).toLong * y.codes(i).toLong; i += 1 }
-              val num = x.scale * y.scale * intDot.toDouble +
-                x.norm * y.r + y.norm * x.r + x.r * y.r
-              val denA = x.norm - x.r
-              val denB = y.norm - y.r
-              val keep =
-                if (denA <= 0.0 || denB <= 0.0) true          // bound proves nothing
-                else if (num < 0.0) false                      // cos < 0 < threshold
-                else num / (denA * denB) >= slack
-              if (keep) {
-                val r = new GenericInternalRow(2)
-                r.setLong(0, x.id); r.setLong(1, y.id)
-                out += r
-              }
-            }
-            yi += 1
-          }
-          xi += 1
-        }
-        members.clear()
-      }
-
-      while (it.hasNext) {
-        val row = it.next()
-        val cell = row.getInt(0)
-        val bucket = row.getInt(1)
-        if (!open || cell != curCell || bucket != curBucket) {
-          if (open) flush()
-          curCell = cell; curBucket = bucket; open = true
-        }
-        val orig = !row.isNullAt(2) && row.getBoolean(2)
-        if (row.isNullAt(3))
-          throw new IllegalArgumentException(
-            "FusedTopK.sq8PairCandidates: null id — ids must be non-null exact integers")
-        val id = row.getLong(3)
-        var scale = 0.0
-        var codes: Array[Byte] = null
-        var norm = 0.0
-        var r = 0.0
-        if (!row.isNullAt(4) && !row.isNullAt(5)) {
-          scale = row.getDouble(4)
-          val a = row.getArray(5)
-          val d = a.numElements()
-          codes = new Array[Byte](d)
-          var csq = 0L
-          var i = 0
-          while (i < d) {
-            val c = a.getByte(i)
-            codes(i) = c
-            csq += c.toLong * c.toLong
-            i += 1
-          }
-          norm = scale * math.sqrt(csq.toDouble)
-          r = 0.5 * scale * math.sqrt(d.toDouble) * (1.0 + 1e-6)
-        }
-        members += M(orig, id, scale, codes, norm, r)
-      }
-      if (open) flush()
-      out.iterator
-    }
-    ColumnShim.internalCreateDataFrame(spark, rdd, pairSchema)
-  }
-
   // ---- shared plumbing ------------------------------------------------
 
   private def isFloatArray(dt: DataType): Boolean = dt match {

@@ -485,8 +485,8 @@ object Indexing {
     } finally d.unpersist(blocking = false)
   }
 
-  /** The bulk path's rebuild plan, exposed for the plan audit (graft.Plans /
-    * PlanPropertiesSpec pin its 100 TB properties: new rows derive by
+  /** The bulk path's rebuild plan, exposed for the plan audit
+    * (PlanPropertiesSpec pins its 100 TB properties: new rows derive by
     * distributed explode, departing rows by a left-anti join — no `isin`
     * literal list, no row-data collect; the only driver materialization is
     * the geometry-bounded touched-partition list this returns alongside).

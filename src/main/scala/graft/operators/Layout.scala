@@ -84,12 +84,17 @@ object Layout {
       // FileSystem impl here, so tests and local runs go through the same
       // code path. Listing errors (missing path, permission) land in the
       // NonFatal catch below → None → caller falls back to the scan.
+      // Names starting with `_` or `.` are hidden from the table, the same
+      // rule Spark's file index applies: a staged or aborted write left
+      // beside the data must not set the bound.
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(conf)
+      def visible(name: String) = !name.startsWith("_") && !name.startsWith(".")
       val parts: Seq[org.apache.hadoop.fs.Path] =
         if (fs.getFileStatus(root).isDirectory)
           fs.listStatus(root).toSeq
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+            .filter(s => s.isFile && visible(s.getPath.getName) &&
+              s.getPath.getName.endsWith(".parquet"))
             .map(_.getPath)
         else Seq(root)
       usable = parts.nonEmpty

@@ -113,51 +113,19 @@ object Lines {
     * needs them), but `row_number` is a running frame: WindowExec streams
     * each partition with constant state, so the corpus's most-repeated
     * boilerplate line costs a sort, never a buffer.
-    */
-  def dedupLines(df: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                 sep: String = "\n"): DataFrame =
-    dedupLines(df, idCol, textCol, sep, hashedExchange = false)
-
-  /** [[dedupLines]] with a choice of first-occurrence exchange key.
-    *
-    * `hashedExchange = true` keys the winner-selection window on
-    * `xxhash64(line)` instead of the line string: the exchange partitioner
-    * hashes 8 bytes per row instead of re-hashing the full line, and the
-    * in-bucket sort leads on the cheap key. Exactness is NOT surrendered to
-    * the hash — within a bucket rows sort by the FULL line (then id,
-    * ordinal), and a row wins iff it starts a run of its exact content
-    * (lag-comparison), so a 64-bit collision merely co-locates two distinct
-    * lines in one bucket where each still heads its own run. Same results
-    * as the string-keyed form at any corpus size (parity pinned in
-    * LinesSpec).
-    *
-    * Measured at sf100 (BASELINE.md "q_line_dedup prefilter experiment"):
-    * the exchange bytes are identical (content must ride for winner
-    * selection either way), so the delta is partitioner-hash + sort-key
-    * cost only. Kept as an option, not the default — see the measurement.
     *
     * (An aggregate-winners + join-back formulation was measured at sf10 and
     * LOST: min(struct) plans as SortAggregate — a map-side sort as costly
     * as the window's — and the join-back re-shuffles what the window marks
     * in place. 1.8 s window vs 6.7 s agg+join on 13.5M lines.)
     */
-  def dedupLines(df: DataFrame, idCol: String, textCol: String,
-                 sep: String, hashedExchange: Boolean): DataFrame = {
+  def dedupLines(df: DataFrame, idCol: String = "doc_id", textCol: String = "text",
+                 sep: String = "\n"): DataFrame = {
     checkCols(df, idCol, textCol)
     val lines = explodeLines(df, textCol, sep)
-    val marked = if (hashedExchange) {
-      val w = Window.partitionBy(xxhash64(col(LineCol)))
-        .orderBy(col(LineCol), col(idCol), col(OrdCol))
-      val prev = lag(col(LineCol), 1).over(w)
-      lines.withColumn(KeepCol,
-        // run head: no previous row, or previous row is a different line
-        // (NULL-line rows sort first and are excluded by isNotNull)
-        col(LineCol).isNotNull && coalesce(prev =!= col(LineCol), lit(true)))
-    } else {
-      val w = Window.partitionBy(col(LineCol)).orderBy(col(idCol), col(OrdCol))
-      lines.withColumn(KeepCol,
-        row_number().over(w) === 1 && col(LineCol).isNotNull)
-    }
+    val w = Window.partitionBy(col(LineCol)).orderBy(col(idCol), col(OrdCol))
+    val marked = lines.withColumn(KeepCol,
+      row_number().over(w) === 1 && col(LineCol).isNotNull)
     val nulled = marked
       .withColumn(WasLineCol, col(LineCol).isNotNull)
       // losers' content is dead weight from here on — see reassemble()

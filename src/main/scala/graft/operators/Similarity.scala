@@ -475,55 +475,14 @@ object Similarity {
     * construction (exact cosine, identical orientation and threshold
     * semantics — parity pinned in FusedTopKSpec); `fused = false` keeps the
     * join formulation.
-    *
-    * `sq8Prefilter = true` is an OPT-IN narrow-exchange variant: the
-    * replica exchange carries SQ8 codes (~4× narrower than float vectors),
-    * candidates come from a sound quantization-error upper bound
-    * ([[FusedTopK.sq8PairCandidates]] — no true pair ever dropped), and
-    * survivors re-verify with the exact cosine via shuffle-hash id joins
-    * against the corpus. It is NOT the default because the bound's slack
-    * (±2r/‖x‖ ≈ ±0.019 at dim 64) must fit inside the corpus's threshold
-    * MARGIN to discriminate: measured on the synthetic embeddings at
-    * threshold 0.999, the [threshold−slack, threshold) band holds 2.7M
-    * candidate pairs for ~4k true pairs at sf10 (~27M at sf100 — the
-    * vector-fetch broadcast this used to do OOM'd there, the r19 scale
-    * lesson), so the prefilter only pays when near-threshold pairs are
-    * rare. The pair set is identical on every path regardless — only the
-    * cost moves (threshold-sweep soundness pinned in FusedTopKSpec).
-    * A non-positive threshold falls back to the exact scan (the bound's
-    * early-drops assume threshold > 0).
     */
   def semDupesOnIndex(index: IvfIndex, dim: Int, threshold: Double = 0.95,
                       nbits: Int = 8, seed: Long = 7L,
-                      fused: Boolean = true,
-                      sq8Prefilter: Boolean = false): DataFrame = {
+                      fused: Boolean = true): DataFrame = {
     val idCol = index.idCol; val vecCol = index.vecCol
     val idx = index.assigned
       .withColumn("bucket", V.hyperplaneBucket(col(vecCol), dim, nbits, seed))
-    if (fused && sq8Prefilter && threshold > 0.0) {
-      val replicated = idx
-        .withColumn("__q", graft.plans.VectorExpressions.quantize8(col(vecCol)))
-        .select(col("cell"), col(idCol),
-          col("__q.scale").as("__scale"), col("__q.codes").as("__codes"),
-          col("bucket").as("__obk"),
-          explode(V.probeBuckets(col("bucket"), nbits)).as("bucket"))
-        .withColumn("__orig", col("bucket") === col("__obk"))
-      val cand = FusedTopK.sq8PairCandidates(replicated, threshold,
-          "cell", "bucket", "__orig", idCol, "__scale", "__codes")
-        .dropDuplicates("id_a", "id_b")
-      // exact re-verify: candidate ids fetch both vectors via shuffle-hash
-      // id joins (NEVER broadcast — the candidate frame scales with the
-      // near-threshold band, which at a slack-sized margin is millions of
-      // rows; a vector-carrying broadcast of it OOM'd at sf100), score
-      // with the SAME native cosine the exact paths use, keep ≥ threshold
-      val va = index.assigned.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
-      val vb = index.assigned.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
-      cand.hint("shuffle_hash").join(va, Seq("id_a"))
-        .hint("shuffle_hash").join(vb, Seq("id_b"))
-        .select(col("id_a"), col("id_b"), V.cosine(col("__va"), col("__vb")).as("score"))
-        .filter(col("score") >= threshold)
-        .dropDuplicates("id_a", "id_b")
-    } else if (fused) {
+    if (fused) {
       val replicated = idx.select(col("cell"), col(idCol), col(vecCol),
           col("bucket").as("__obk"),
           explode(V.probeBuckets(col("bucket"), nbits)).as("bucket"))

@@ -304,4 +304,20 @@ class PlanPropertiesSpec extends SparkSpec {
       s"re-attached table lost its bucket/sort metadata:\n$p2")
     assert(SparkEntry.queries("q_sessionize_bucketed")(spark, dir).collect().toSeq == raw)
   }
+
+  test("q_text_bm25_indexed: bucket-pruned scan; df aggregate and posting join add no exchange") {
+    // the postings index is bucketed by term: the term filter prunes buckets
+    // in the scan, the df aggregate groups on the stored hashpartitioning
+    // (term) and the posting join consumes it too (or broadcasts the
+    // ≤|query|-row df table) — the only hash exchange is the per-document
+    // score aggregate over slim scored rows, plus the output sort's range
+    // exchange
+    val p = plan("q_text_bm25_indexed")
+    assert(!p.contains("SortMergeJoin"), s"posting join must not sort-merge:\n$p")
+    assert("SelectedBucketsCount: 3 out of".r.findAllIn(p).nonEmpty,
+      s"the 3-term filter must prune the stored buckets:\n$p")
+    val hashEx = "Exchange hashpartitioning\\(([^,#]+)".r.findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(hashEx == Seq("id"),
+      s"expected only the per-document score exchange, got $hashEx:\n$p")
+  }
 }

@@ -115,39 +115,31 @@ class FusedTopKSpec extends SparkSpec {
     val df = spark.createDataFrame(rows.asJava, schema)
     val idxPlanted = Similarity.ivfIndex(df, nlist = 2, seed = 7L)
     for (thr <- Seq(0.999, 0.5)) {
-      val sq8 = Similarity.semDupesOnIndex(idxPlanted, dim = 3, threshold = thr,
-        nbits = 4, fused = true, sq8Prefilter = true).select("id_a", "id_b", "score")
       val fused = Similarity.semDupesOnIndex(idxPlanted, dim = 3, threshold = thr,
-        nbits = 4, fused = true, sq8Prefilter = false).select("id_a", "id_b", "score")
+        nbits = 4, fused = true).select("id_a", "id_b", "score")
       val join = Similarity.semDupesOnIndex(idxPlanted, dim = 3, threshold = thr,
         nbits = 4, fused = false).select("id_a", "id_b", "score")
       assert(sortedRows(fused) == sortedRows(join), s"threshold=$thr")
-      assert(sortedRows(sq8) == sortedRows(join), s"sq8, threshold=$thr")
     }
     // real embeddings with the q_dedup_semantic shape (planted exact dups);
-    // all three paths — SQ8-prefiltered (opt-in), exact fused (default),
-    // join — must produce the identical pair set with identical scores
+    // exact fused (default) and join must produce the identical pair set
+    // with identical scores
     val emb = Tables.load(spark, dir, "embeddings")
     val aug = emb.unionByName(emb.filter(col("vec_id") % 50 === 0)
       .withColumn("vec_id", col("vec_id") + 1000000000L))
     val index = Similarity.ivfIndex(aug, nlist = 8, seed = 7L)
-    val sq8R   = Similarity.semDupesOnIndex(index, dim = 64, threshold = 0.999,
-      sq8Prefilter = true)
-    val fusedR = Similarity.semDupesOnIndex(index, dim = 64, threshold = 0.999,
-      sq8Prefilter = false)
+    val fusedR = Similarity.semDupesOnIndex(index, dim = 64, threshold = 0.999)
     val joinR  = Similarity.semDupesOnIndex(index, dim = 64, threshold = 0.999, fused = false)
     assert(sortedRows(fusedR.select("id_a", "id_b", "score")) ==
-           sortedRows(joinR.select("id_a", "id_b", "score")))
-    assert(sortedRows(sq8R.select("id_a", "id_b", "score")) ==
            sortedRows(joinR.select("id_a", "id_b", "score")))
     assert(fusedR.count() > 0) // the planted dups are actually found
   }
 
-  test("SQ8 prefilter soundness: pair set identical to the exact scan across thresholds") {
-    // random unit-ish vectors stress the quantization-error bound where it
-    // matters — pairs NEAR the threshold; the SQ8 path may generate extra
-    // candidates (killed by the exact re-verify) but must never lose one.
-    // Low thresholds make the near-boundary band dense.
+  test("semDupesOnIndex: fused == join path across a dense near-threshold sweep") {
+    // random unit-ish vectors put many pairs NEAR each threshold, where a
+    // tie or rounding difference between the two scans would show; low
+    // thresholds make the near-boundary band dense, and -1.0 admits every
+    // co-bucketed pair (scores <= 0 and zero-norm pairs included)
     val rnd = new scala.util.Random(20260815L)
     val rows = (0L until 300L).map { i =>
       Row(i, Seq.fill(8)((rnd.nextGaussian() * 0.3).toFloat), 0)
@@ -158,21 +150,14 @@ class FusedTopKSpec extends SparkSpec {
       StructField("label", IntegerType, nullable = true)))
     val df = spark.createDataFrame(rows.asJava, schema)
     val index = Similarity.ivfIndex(df, nlist = 4, seed = 7L)
-    for (thr <- Seq(0.9, 0.5, 0.1)) {
-      val sq8 = Similarity.semDupesOnIndex(index, dim = 8, threshold = thr, nbits = 2,
-        sq8Prefilter = true).select("id_a", "id_b", "score")
-      val exact = Similarity.semDupesOnIndex(index, dim = 8, threshold = thr, nbits = 2,
-        sq8Prefilter = false).select("id_a", "id_b", "score")
-      assert(sortedRows(sq8) == sortedRows(exact), s"threshold=$thr")
-      assert(exact.count() > 0, s"threshold=$thr produced no pairs — test is vacuous")
+    for (thr <- Seq(0.9, 0.5, 0.1, -1.0)) {
+      val fused = Similarity.semDupesOnIndex(index, dim = 8, threshold = thr, nbits = 2,
+        fused = true).select("id_a", "id_b", "score")
+      val join = Similarity.semDupesOnIndex(index, dim = 8, threshold = thr, nbits = 2,
+        fused = false).select("id_a", "id_b", "score")
+      assert(sortedRows(fused) == sortedRows(join), s"threshold=$thr")
+      assert(fused.count() > 0, s"threshold=$thr produced no pairs — test is vacuous")
     }
-    // non-positive threshold falls back to the exact scan (scores ≤ 0 and
-    // zero-norm pairs are in play there; the bound's early-drop assumes > 0)
-    val all = Similarity.semDupesOnIndex(index, dim = 8, threshold = -1.0, nbits = 2,
-      sq8Prefilter = true).select("id_a", "id_b", "score")
-    val allExact = Similarity.semDupesOnIndex(index, dim = 8, threshold = -1.0, nbits = 2,
-      sq8Prefilter = false).select("id_a", "id_b", "score")
-    assert(sortedRows(all) == sortedRows(allExact))
   }
 
   test("real embeddings: fused bruteForceTopK scores bit-equal to the join path") {

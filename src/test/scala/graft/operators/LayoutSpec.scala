@@ -152,4 +152,19 @@ class LayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the plain long column next to them still answers
     assert(Layout.footerLongMax(spark, s"$dir/t", Seq("a")).contains(Map("a" -> 99L)))
   }
+  test("footerLongMax skips hidden part files the table does not read") {
+    // a stale `_staged.parquet` (an aborted staged write) holding a LARGER
+    // max sits beside the table; Spark's file index hides `_`/`.` names, so
+    // the footer bound must ignore it too or it overstates agg(max)
+    val dir = java.nio.file.Files.createTempDirectory("graft_footer_hidden").toString
+    (0L until 100L).toDF("a").write.mode("overwrite").parquet(s"$dir/t")
+    (0L until 10L).map(_ + 1000000L).toDF("a").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/stale")
+    val stalePart = new java.io.File(s"$dir/stale").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(stalePart.toPath, new java.io.File(s"$dir/t/_staged.parquet").toPath)
+    val want = spark.read.parquet(s"$dir/t").agg(max(col("a"))).head().getLong(0)
+    assert(want == 99L)
+    assert(Layout.footerLongMax(spark, s"$dir/t", Seq("a")).contains(Map("a" -> want)))
+  }
 }

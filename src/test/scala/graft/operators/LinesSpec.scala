@@ -117,26 +117,6 @@ class LinesSpec extends SparkSpec {
     assert(out == expected)
   }
 
-  test("dedupLines hashedExchange=true: exact parity with the string-keyed form") {
-    // Same 120-doc randomized corpus as the sequential-model test, plus the
-    // edge docs (all-dup, NULL text, empty lines) — both exchange keys must
-    // produce identical output (the hash only co-locates; winner selection
-    // is still by exact content + (id, ordinal)).
-    val rnd = new scala.util.Random(42)
-    val vocab = Vector("aa", "bb", "cc", "dd", "ee", "ff", "")
-    val docs: Seq[(Long, Option[String])] = (0L until 120L).map { i =>
-      val nLines = 1 + rnd.nextInt(6)
-      (i, Some(Seq.fill(nLines)(vocab(rnd.nextInt(vocab.size))).mkString("\n")))
-    } :+ (120L, None)
-    val df = docs.toDF("doc_id", "text").repartition(13)
-    def run(hashed: Boolean) =
-      Lines.dedupLines(df, "doc_id", "text", "\n", hashedExchange = hashed)
-        .orderBy("doc_id")
-        .select("doc_id", "text", "n_lines_kept", "n_lines_dropped")
-        .as[(Long, Option[String], Long, Long)].collect().toSeq
-    assert(run(true) == run(false))
-  }
-
   test("randomized filterLines parity with a sequential reference model") {
     val rnd = new scala.util.Random(7)
     val vocab = Vector("keep one", "drop two", "keep three", "drop four")
