@@ -3,6 +3,8 @@ package graft.api
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -47,7 +49,10 @@ object Cursor {
         case (k, v)    => (k, String.valueOf(v))
       }
       Cursor(orderKey, orderValue, String.valueOf(root("slug")))
-    } catch { case _: Throwable => throw new IllegalArgumentException("Invalid cursor") }
+    } catch {
+      // NonFatal only: an OOM or an interrupt is not a malformed cursor
+      case NonFatal(_) => throw new IllegalArgumentException("Invalid cursor")
+    }
 }
 
 sealed trait PageDirection
@@ -170,8 +175,8 @@ object Pagination {
     if (direction == Before) limited.orderBy(displaySort: _*) else limited
   }
 
-  /** Materialize one page with PageInfo. The only collect in the engine — of an
-    * already-limited `pageSize+1` probe (allowed: final page materialization).
+  /** Materialize one page with PageInfo: ONE job, a collect of the
+    * already-limited `pageSize+1` probe (final page materialization).
     * `cursorKey` is the user-facing order-key name to embed in emitted cursors
     * (defaults to `orderField`; callers sorting on a synthetic column pass the
     * original field name so cursors stay reference-shaped).

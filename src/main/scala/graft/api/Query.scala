@@ -73,10 +73,13 @@ final class Catalog(defs: Seq[SourceDef]) {
   * plan per query so Catalyst fuses filter + project + sort + limit and pushes
   * predicates into the parquet scan.
   *
-  * Scale design: filtering and keyset pagination run on the *base* source only;
-  * relation joins apply to the already-limited page (the reference similarly
-  * joins only loaded page records). Relation *filters* become semi-joins, so
-  * the base never materializes foreign data just to filter.
+  * Scale design: filtering and keyset pagination run on the *base* source only.
+  * Relation joins apply to the already-limited page: `execDf()` and `find()`
+  * join it lazily ([[Relations.nested]]), `exec()` resolves them against the
+  * collected page with one pushed-down foreign scan per relation hop
+  * ([[Relations.nestedPage]] — the reference likewise loads only the records
+  * the page references). Relation *filters* become semi-joins, so the base
+  * never materializes foreign data just to filter.
   */
 final class QueryBuilder private[api] (catalog: Catalog, src: SourceDef) {
   private var filters: Vector[QFilter]    = Vector.empty
@@ -260,19 +263,23 @@ final class QueryBuilder private[api] (catalog: Catalog, src: SourceDef) {
     }
   }
 
+  /** A relation's foreign (and through) source with internal custom-index
+    * columns stripped: relations embed every foreign column into the nested
+    * structs, and a hook column leaking there would surface in join output
+    * (and Ssg JSON).
+    */
+  private def joinSides(rel: Relation): (DataFrame, Option[DataFrame]) = (
+    GraftNames.dropCustomCols(catalog(rel.to).df),
+    rel match {
+      case t: ThroughRelation => Some(GraftNames.dropCustomCols(catalog(t.through).df))
+      case _                  => None
+    })
+
   private def applyJoins(df: DataFrame): DataFrame =
     joins.foldLeft(df) { (d, relName) =>
-      val rel     = src.relations(relName)
-      val foreign = catalog(rel.to)
-      val through = rel match {
-        case t: ThroughRelation => Some(GraftNames.dropCustomCols(catalog(t.through).df))
-        case _                  => None
-      }
-      // strip the FOREIGN side's internal custom-index columns too —
-      // Relations embeds every foreign column into the nested structs, and a
-      // hook column leaking there would surface in join output (and Ssg JSON)
-      Relations.nested(d, rel, GraftNames.dropCustomCols(foreign.df), through,
-        broadcastForeign = foreign.broadcastHint)
+      val rel = src.relations(relName)
+      val (foreign, through) = joinSides(rel)
+      Relations.nested(d, rel, foreign, through, broadcastForeign = catalog(rel.to).broadcastHint)
     }
 
   // ---- execution ---------------------------------------------------------
@@ -302,40 +309,43 @@ final class QueryBuilder private[api] (catalog: Catalog, src: SourceDef) {
 
   /** Materialize one page with `PageInfo` — reference `exec()`
     * (src/QueryBuilder.ts:160-175).
+    *
+    * Cost: one Spark job for the page (Pagination.exec's bounded probe), then
+    * relations resolve against the collected page like the reference's
+    * resolver ([[Relations.nestedPage]]): one pushed-down foreign scan per
+    * relation hop, no shuffle, the page's display order kept by position. A
+    * join page runs at most 1 + (relation hops) jobs, and the driver holds
+    * only the foreign rows nested into the rows it returns (plus a through
+    * relation's key pairs).
     */
   def exec(): PageResult = {
     val (df, ordCol) = withOrderCol(filteredBase())
     val cur  = decodedCursor()
     val info = Pagination.exec(df, ordCol, src.slugField, orderDesc, pageSz, cur, cursorDir,
       cursorKey = orderKey)
-    if (joins.isEmpty) {
-      // strip the synthetic order column AND any internal custom-index value
-      // columns so exec() rows match execDf()'s schema
-      val internalIdx = df.schema.fields.zipWithIndex.collect {
-        case (f, i) if f.name == "__graft_ord" && ordCol == "__graft_ord" => i
-        case (f, i) if f.name.startsWith("__graft_custom_")               => i
-      }.toSet
+    // strip the synthetic order column AND any internal custom-index value
+    // columns so exec() rows match execDf()'s schema
+    val internalIdx = df.schema.fields.zipWithIndex.collect {
+      case (f, i) if f.name == "__graft_ord" && ordCol == "__graft_ord" => i
+      case (f, i) if f.name.startsWith("__graft_custom_")               => i
+    }.toSet
+    val keep = df.schema.fields.indices.filterNot(internalIdx)
+    val pruned = org.apache.spark.sql.types.StructType(keep.map(df.schema.fields).toArray)
+    val page =
       if (internalIdx.isEmpty) info
-      else {
-        val keep = df.schema.fields.indices.filterNot(internalIdx)
-        val pruned = org.apache.spark.sql.types.StructType(
-          keep.map(df.schema.fields).toArray)
-        info.copy(data = info.data.map(r =>
-          // keep rows schema-bearing: getAs(name)/fieldIndex must still work
-          new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            keep.map(r.get).toArray, pruned)))
+      else info.copy(data = info.data.map(r =>
+        // keep rows schema-bearing: getAs(name)/fieldIndex must still work
+        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          keep.map(r.get).toArray, pruned)))
+    if (joins.isEmpty) page
+    else {
+      val (rows, _) = joins.foldLeft((page.data, pruned)) { case ((rs, schema), relName) =>
+        val rel = src.relations(relName)
+        val (foreign, through) = joinSides(rel)
+        val joined = Relations.nestedPage(rs, schema, rel, foreign, through)
+        (joined.collect().toSeq, joined.schema)
       }
-    } else {
-      // Joins run against the ALREADY-COLLECTED page as a local relation —
-      // the expensive filter+sort+limit scan is not repeated; foreign sides
-      // join against ≤ pageSize local rows.
-      val spark = df.sparkSession
-      val page  = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(info.data).asJava),
-        df.schema)
-      val data = GraftNames.dropCustomCols(resorted(applyJoins(page), ordCol))
-      PageResult(data.collect().toSeq, info.pageInfo)
+      page.copy(data = rows)
     }
   }
 

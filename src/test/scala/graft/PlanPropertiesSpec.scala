@@ -320,4 +320,56 @@ class PlanPropertiesSpec extends SparkSpec {
     assert(hashEx == Seq("id"),
       s"expected only the per-document score exchange, got $hashEx:\n$p")
   }
+
+  test("a join exec() page runs 1 + hops jobs: no exchange, no aggregate, page keys pushed into the foreign scan") {
+    import graft.api._
+    val c = Tables.catalog(spark, dir)
+    val cases = Seq[(() => QueryBuilder, String, String)](
+      (() => c.from("customer").where("c_nationkey", Eq, "3").join("orders").pageSize(10),
+        "orders", "In(o_custkey,"),
+      (() => c.from("orders").where("o_orderstatus", Eq, "F").orderBy("o_totalprice", "desc")
+        .join("customer").pageSize(20), "customer", "In(c_custkey,"))
+    for ((q, relName, pushed) <- cases) {
+      val group = s"exec-join-$relName"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val jobListener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               ns: Long): Unit = plans.add(qe.executedPlan.toString)
+        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      val page = q() // plan construction outside the measured window
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(jobListener)
+      spark.listenerManager.register(planListener)
+      val rows =
+        try {
+          spark.sparkContext.setJobGroup(group, group)
+          try page.exec().data finally spark.sparkContext.clearJobGroup()
+        } finally {
+          org.apache.spark.ListenerBusDrain(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(jobListener)
+          spark.listenerManager.unregister(planListener)
+        }
+      assert(rows.nonEmpty && rows.exists(r => r.get(r.fieldIndex(relName)) match {
+        case s: scala.collection.Seq[_] => s.nonEmpty
+        case _                          => false
+      }), s"$relName: the page must nest related rows")
+      val all = plans.toArray(Array.empty[String]).toSeq
+      assert(jobs.get == 2, s"$relName: expected the page probe + one foreign scan, got ${jobs.get} jobs")
+      for (p <- all) {
+        assert(!p.contains("Exchange"), s"$relName: a shuffle in\n$p")
+        assert(!p.contains("Aggregate"), s"$relName: an aggregate in\n$p")
+      }
+      val pushedFilters = all.flatMap("PushedFilters: \\[[^\\n]*".r.findAllIn(_))
+      assert(pushedFilters.exists(_.contains(pushed)),
+        s"$relName: expected $pushed in the foreign scan's pushed filters, got $pushedFilters")
+    }
+  }
 }

@@ -19,6 +19,13 @@ class PaginationSpec extends SparkSpec {
     assert(e.getMessage == "Invalid cursor")
   }
 
+  test("cursor whose order is not an object is invalid, not a ClassCastException") {
+    val json = """{"order":"c_name","slug":"1"}"""
+    val bad = java.util.Base64.getEncoder.encodeToString(json.getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](Cursor.decode(bad))
+    assert(e.getMessage == "Invalid cursor")
+  }
+
   test("unicode cursor roundtrip (reference pagenation.test.ts)") {
     val c = Cursor("name", "あいう", "ゴボウの育て方")
     assert(Cursor.decode(Cursor.encode(c)) == c)
