@@ -27,6 +27,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val Samples = 3
 
+  /** The subset listed in `envVar`: comma-separated name prefixes, None
+    * when the variable is unset or lists nothing (keep every query). Shared
+    * by SPARK_GRAFT_BENCH_ONLY here and Verify's SPARK_GRAFT_VERIFY_ONLY. */
+  private[graft] def subset(envVar: String): Option[Seq[String]] =
+    sys.env.get(envVar)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+
+  /** Whether `name` starts with any token of `only` (None keeps all). */
+  private[graft] def kept(only: Option[Seq[String]])(name: String): Boolean =
+    only.forall(_.exists(name.startsWith))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Tables.harnessSessionFor(sfDir) // shared harness tuning, split scaled to the data
@@ -57,11 +69,8 @@ object Bench {
     // Optional subset: SPARK_GRAFT_BENCH_ONLY="q_text,q_dedup" keeps queries
     // whose name equals or starts with any listed token — the sf10 scale runs
     // bench the 26-query heavy set without paying 3 passes over all ~100.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
-    def kept(n: String): Boolean = only.forall(_.exists(tok => n == tok || n.startsWith(tok)))
-    val names = SparkEntry.queries.keys.toSeq.sorted.filter(kept)
+    val only = subset("SPARK_GRAFT_BENCH_ONLY")
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(kept(only))
 
     // Pre-build the memoized stored artifacts (BM25/IVF indexes, md tree):
     // the build is a ONE-TIME cost the production shape amortizes away, so
@@ -70,7 +79,7 @@ object Bench {
     // q_text_bm25_indexed sf10 spread: 2.4–6.8 s across runs). Only the
     // artifacts whose consuming query survives the subset filter build —
     // per-family subset runs skip the others' builds and write I/O.
-    SparkEntry.prewarmStoredArtifacts(spark, sfDir, kept)
+    SparkEntry.prewarmStoredArtifacts(spark, sfDir, kept(only))
     // Interleaved sampling: all queries, Samples passes over the whole list.
     // A query that failed in an earlier pass is skipped (deterministic error).
     val samples = scala.collection.mutable.Map(names.map(_ -> List.empty[Double]): _*)

@@ -20,12 +20,9 @@ object Verify {
     // Optional subset (same contract as Bench's SPARK_GRAFT_BENCH_ONLY):
     // builder-side targeted oracle checks after touching one operator. The
     // driver's gate runs without the env var and always dumps everything.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
+    val only = Bench.subset("SPARK_GRAFT_VERIFY_ONLY")
     SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.exists(tok => name == tok || name.startsWith(tok))) }
+      .filter { case (name, _) => Bench.kept(only)(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

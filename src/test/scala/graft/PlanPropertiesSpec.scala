@@ -240,25 +240,72 @@ class PlanPropertiesSpec extends SparkSpec {
   test("stored layouts REUSE across sessions on a matching source fingerprint; stale marker rebuilds") {
     def newestPartMtime(p: String): Long =
       new java.io.File(p).listFiles().filter(_.getName.startsWith("part-")).map(_.lastModified).max
-    val p = SparkEntry.groupSortedLineitem(spark, dir) // built (or reused from a prior run)
+    val p = Artifact.GroupSortedLineitem(spark, dir) // built (or reused from a prior run)
     val m1 = newestPartMtime(p)
     // a new session finds the artifact on disk with a matching fingerprint
     // and must NOT rewrite it (the r19 sf100 lesson: a 600M-row in-session
     // rewrite swings same-session probe timings ±2.4×)
-    SparkEntry.clearStoredArtifactMemo()
-    assert(SparkEntry.groupSortedLineitem(spark, dir) == p)
+    Artifact.clearMemo()
+    assert(Artifact.GroupSortedLineitem(spark, dir) == p)
     assert(newestPartMtime(p) == m1, "matching-fingerprint artifact was rebuilt")
     // stale marker (a different testdata vintage at the same path) rebuilds
     java.nio.file.Files.write(new java.io.File(p, "_GRAFT_SRC_FPR").toPath,
       "stale-vintage".getBytes("UTF-8"))
     Thread.sleep(1100) // mtime resolution
-    SparkEntry.clearStoredArtifactMemo()
-    assert(SparkEntry.groupSortedLineitem(spark, dir) == p)
+    Artifact.clearMemo()
+    assert(Artifact.GroupSortedLineitem(spark, dir) == p)
     assert(newestPartMtime(p) > m1, "stale-fingerprint artifact was served without a rebuild")
     // and the reused layout still answers identically
     val raw = SparkEntry.queries("q_agg_pricing")(spark, dir).collect().toSeq
-    SparkEntry.clearStoredArtifactMemo()
+    Artifact.clearMemo()
     assert(SparkEntry.queries("q_agg_pricing_sorted")(spark, dir).collect().toSeq == raw)
+  }
+
+  // Each registry entry's `needs` must be exactly the stored artifacts its
+  // plan fetches: prewarm builds only declared needs, so an undeclared one
+  // would build inside a timed sample.
+  test("prewarm builds exactly a query's declared needs, and running it builds nothing more") {
+    val withNeeds = SparkEntry.registry.filter(_.needs.nonEmpty)
+    assert(withNeeds.nonEmpty)
+    for (q <- withNeeds) {
+      Artifact.clearMemo()
+      q.plan(spark, dir)
+      assert(Artifact.memoized(spark, dir) == q.needs,
+        s"${q.name} declares ${q.needs.map(_.what)} but fetches " +
+          s"${Artifact.memoized(spark, dir).map(_.what)}")
+      Artifact.clearMemo()
+      SparkEntry.prewarmStoredArtifacts(spark, dir, _ == q.name)
+      assert(Artifact.memoized(spark, dir) == q.needs,
+        s"${q.name}: prewarm built ${Artifact.memoized(spark, dir).map(_.what)}")
+      SparkEntry.queries(q.name)(spark, dir).collect()
+      assert(Artifact.memoized(spark, dir) == q.needs,
+        s"${q.name} fetched an artifact it does not declare: " +
+          s"${(Artifact.memoized(spark, dir) -- q.needs).map(_.what)}")
+    }
+  }
+
+  test("a query that declares no needs fetches no artifact") {
+    // artifacts are fetched while the plan is built, so building is enough
+    // to catch an undeclared one (the way a missed entry in a hand-kept
+    // prewarm list let a layout rewrite run inside a timed sample)
+    Artifact.clearMemo()
+    for (q <- SparkEntry.registry if q.needs.isEmpty) {
+      q.plan(spark, dir)
+      assert(Artifact.memoized(spark, dir).isEmpty,
+        s"${q.name} fetched ${Artifact.memoized(spark, dir).map(_.what)} without declaring it")
+    }
+  }
+
+  test("clearMemo drops every artifact and unpersists the in-memory IVF index") {
+    Artifact.clearMemo()
+    SparkEntry.prewarmStoredArtifacts(spark, dir, _ == "q_ann_ivf")
+    assert(Artifact.memoized(spark, dir) == Set(Artifact.IvfIndexInMemory))
+    val assigned = Artifact.IvfIndexInMemory(spark, dir).assigned
+    assert(assigned.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    Artifact.clearMemo()
+    assert(Artifact.memoized(spark, dir).isEmpty)
+    assert(assigned.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the dropped IVF assignment is still cached")
   }
 
   test("q_sessionize_bucketed: ZERO exchanges AND ZERO sorts in the pipeline, rows match raw") {
@@ -271,7 +318,7 @@ class PlanPropertiesSpec extends SparkSpec {
     // window → agg, nothing else. The exchange+sort floor r19's
     // decomposition named for q_sessionize is a layout property.
     val pipe = streaming.EventStreams.sessionize(
-        operators.Bucketing.table(spark, SparkEntry.bucketedEvents(spark, dir)))
+        operators.Bucketing.table(spark, Artifact.BucketedEvents(spark, dir)))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"), max(col("session_seq")).as("n_sessions"))
     val p = pipe.queryExecution.executedPlan.toString
@@ -287,15 +334,15 @@ class PlanPropertiesSpec extends SparkSpec {
     // (files survive), clear the session memo, and the helper must
     // RE-ATTACH the existing files (catalog DDL only, no rewrite), with the
     // exchange-free + sort-free shape and identical rows intact.
-    val t = SparkEntry.bucketedEvents(spark, dir)
+    val t = Artifact.BucketedEvents(spark, dir)
     val loc = new java.io.File(s"spark-warehouse/${t}_data")
     def newestPart(): Long =
       loc.listFiles().filter(_.getName.startsWith("part-")).map(_.lastModified).max
     val m1 = newestPart()
     spark.sql(s"DROP TABLE `$t`")
-    SparkEntry.clearStoredArtifactMemo()
+    Artifact.clearMemo()
     val reattached = streaming.EventStreams.sessionize(
-        operators.Bucketing.table(spark, SparkEntry.bucketedEvents(spark, dir)))
+        operators.Bucketing.table(spark, Artifact.BucketedEvents(spark, dir)))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"), max(col("session_seq")).as("n_sessions"))
     val p2 = reattached.queryExecution.executedPlan.toString
