@@ -106,21 +106,9 @@ object Pagination {
   ): DataFrame =
     scanPage(df, orderField, slugField, descending, pageSize, cursor, direction)
 
-  /** Like [[pageDf]] but scanning `pageSize+1` rows (still re-sorted to display
-    * order) — callers use the extra row to compute hasNext/hasPrev. For Before
-    * pages the extra row is the FIRST row in display order.
-    */
-  def probeDf(
-      df: DataFrame,
-      orderField: String,
-      slugField: String,
-      descending: Boolean,
-      pageSize: Int,
-      cursor: Option[Cursor],
-      direction: PageDirection
-  ): DataFrame =
-    scanPage(df, orderField, slugField, descending, pageSize, cursor, direction, probe = true)
-
+  /** `probe` scans `pageSize+1` rows (the extra one decides hasNext/hasPrev);
+    * `displayOrder = false` leaves a Before page in its reversed scan order
+    * (nearest the cursor first) for a caller that reverses it itself. */
   private def scanPage(
       df: DataFrame,
       orderField: String,
@@ -129,7 +117,8 @@ object Pagination {
       pageSize: Int,
       cursor: Option[Cursor],
       direction: PageDirection,
-      probe: Boolean = false
+      probe: Boolean = false,
+      displayOrder: Boolean = true
   ): DataFrame = {
     val orderCol   = col(orderField)
     val slugCol    = col(slugField)
@@ -172,11 +161,14 @@ object Pagination {
     val limited = scanned.limit(if (probe) pageSize + 1 else pageSize)
     // Before-pages were scanned in reverse; re-sort the (already limited)
     // result back to display order.
-    if (direction == Before) limited.orderBy(displaySort: _*) else limited
+    if (direction == Before && displayOrder) limited.orderBy(displaySort: _*) else limited
   }
 
   /** Materialize one page with PageInfo: ONE job, a collect of the
-    * already-limited `pageSize+1` probe (final page materialization).
+    * already-limited `pageSize+1` probe (final page materialization). A
+    * Before probe is collected in its reversed scan order and the collected
+    * array is reversed: re-sorting ≤ pageSize+1 rows in Spark would add a
+    * single-partition exchange and a Sort to the job.
     * `cursorKey` is the user-facing order-key name to embed in emitted cursors
     * (defaults to `orderField`; callers sorting on a synthetic column pass the
     * original field name so cursors stay reference-shaped).
@@ -192,7 +184,9 @@ object Pagination {
       cursorKey: String = null
   ): PageResult = {
     val keyName = Option(cursorKey).getOrElse(orderField)
-    val probe = probeDf(df, orderField, slugField, descending, pageSize, cursor, direction).collect()
+    val scanned = scanPage(df, orderField, slugField, descending, pageSize, cursor, direction,
+      probe = true, displayOrder = false).collect()
+    val probe = if (direction == Before) scanned.reverse else scanned
     // For Before, the probe row (if present) is the *first* in display order.
     val hasExtra = probe.length > pageSize
     val page = direction match {

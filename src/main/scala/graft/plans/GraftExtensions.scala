@@ -37,6 +37,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - `graft_topk(score, id, k)`  → AGGREGATE: array<struct<score, id>> top-k by score desc, id asc ties (k literal int)
   *  - `graft_url_canonical(url)`  → string (crawl-dedup URL canonical form; tracking params stripped)
   *  - `graft_money_sum(x, scale)` → AGGREGATE: double — exact `sum(cast(x as decimal(18,scale)))` via the 128-bit fixed-point accumulator (scale literal int)
+  *
+  * Optimizer rules, injected into the operator-optimization fixed point:
+  *  - [[CollectSizeToCount]], [[TopNThroughRiJoin]], [[RiJoinElimination]]
+  *    (RiRules.scala; the last two read the [[Constraints]] RELY registry)
+  *  - [[LateKernelMaterialization]] (LateKernels.scala): a top-K evaluates
+  *    graft kernels only on the rows it keeps
+  *  - [[PreAggregateGroupingSets]] (GroupingSetRules.scala)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -48,6 +55,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // CollapseProject / column pruning / limit pushdown.
     ext.injectOptimizerRule(_ => CollectSizeToCount)
     ext.injectOptimizerRule(_ => TopNThroughRiJoin)
+    // Constraint-free: graft kernels under a top-K run on the rows it
+    // keeps, not on every row (LateKernels.scala).
+    ext.injectOptimizerRule(_ => LateKernelMaterialization)
     ext.injectOptimizerRule(_ => RiJoinElimination)
     ext.injectOptimizerRule(_ => PreAggregateGroupingSets)
   }

@@ -342,7 +342,7 @@ object HtmlTextExtract {
 
 /** See [[HtmlTextExtract]] (object doc). struct<text, n_blocks, n_kept>. */
 case class HtmlTextExtract(child: Expression, rules: HtmlTextExtract.HtmlRules)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
   override def dataType: DataType = StructType(Seq(

@@ -36,7 +36,7 @@ object PiiExpressions {
 }
 
 case class PiiStats(child: Expression)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 

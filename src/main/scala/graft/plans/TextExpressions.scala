@@ -248,7 +248,7 @@ object TextExpressions {
 }
 
 case class MinHashState(child: Expression, k: Int, w: Int, bands: Int, seed: Long)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   // analysis-time type error for non-string inputs (these are SQL-registered)
   override def inputTypes = ColumnShim.stringInput
@@ -321,7 +321,7 @@ case class MinHashState(child: Expression, k: Int, w: Int, bands: Int, seed: Lon
 }
 
 case class ShingleSet(child: Expression, w: Int)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -361,7 +361,7 @@ case class ShingleSet(child: Expression, w: Int)
   * cascade. Zero hits → "und".
   */
 case class LangId(child: Expression, markers: Seq[(String, Seq[String])])
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   require(markers.nonEmpty && markers.size <= 64,
     s"LangId supports 1..64 languages, got ${markers.size}")
@@ -425,7 +425,7 @@ object LangId {
   * identical to TextFunctions.fingerprintColumns.
   */
 case class Fingerprint(child: Expression)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -536,7 +536,7 @@ object StopScan {
   * rounding semantics identical between paths.
   */
 case class StopwordRatio(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -564,7 +564,7 @@ case class StopwordRatio(child: Expression, stopwords: Seq[String])
   * the rounded outputs hash-match the oracle.
   */
 case class QualityScore(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -595,7 +595,7 @@ case class QualityScore(child: Expression, stopwords: Seq[String])
   * safe; zero bigrams (single-token doc) → 0.0 by definition.
   */
 case class RepetitionStats(child: Expression)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -654,7 +654,7 @@ case class RepetitionStats(child: Expression)
   * counts are codepoints, not UTF-16 units.
   */
 case class GopherStats(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -732,7 +732,7 @@ case class GopherStats(child: Expression, stopwords: Seq[String])
 }
 
 case class SimHash64(child: Expression)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -768,7 +768,7 @@ case class SimHash64(child: Expression)
   * check-only fast path with no reallocation.
   */
 case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   require(Seq("NFC", "NFD", "NFKC", "NFKD").contains(form),
     s"UnicodeNormalize: form must be NFC|NFD|NFKC|NFKD, got '$form'")
@@ -803,7 +803,7 @@ case class UnicodeNormalize(child: Expression, form: String)
   * the column twin BY SHARING THE OPERATOR, not by reimplementing it.
   */
 case class CollapseWhitespace(child: Expression)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -837,7 +837,7 @@ case class CollapseWhitespace(child: Expression)
   * byte count, which may shift across zlib builds.
   */
 case class CompressionRatio(child: Expression)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
 
@@ -906,7 +906,7 @@ object BpeishCount {
   * edges (CamelCase, digit runs, NBSP, surrogate pairs).
   */
 case class BpeishCount(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
   override def dataType: DataType = IntegerType
@@ -948,7 +948,7 @@ object TermCounts {
 
 /** See [[TextExpressions.termCounts]]. */
 case class TermCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
   override def dataType: DataType = StructType(Seq(
@@ -1006,7 +1006,7 @@ object BigramCounts {
 
 /** See [[TextExpressions.bigramCounts]]. */
 case class BigramCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
   override def dataType: DataType = StructType(Seq(
@@ -1128,7 +1128,7 @@ object WinnowFps {
   * pinned in WinnowSpec.
   */
 case class WinnowFps(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   require(k > 0 && w > 0, s"WinnowFps: k=$k and w=$w must be positive")
 
@@ -1217,7 +1217,7 @@ object HashedNgramLogit {
 
 /** See [[TextExpressions.hashedNgramLogit]]. */
 case class HashedNgramLogit(child: Expression, weightsMilli: Seq[Long], includeBigrams: Boolean)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   require(weightsMilli.nonEmpty, "HashedNgramLogit: empty weight table")
 
@@ -1262,7 +1262,7 @@ object KgramHashes {
 
 /** See [[TextExpressions.kgramHashes]]. */
 case class KgramHashes(child: Expression, k: Int, bits: Int = 48)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes with GraftKernel {
 
   require(k > 0, s"KgramHashes: k=$k must be positive")
   require(bits == 48 || bits == 64, s"KgramHashes: bits=$bits must be 48 or 64")
@@ -1453,7 +1453,7 @@ object TokStats {
 
 /** See [[TextExpressions.tokStats]]. */
 case class TokStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   override def inputTypes = ColumnShim.stringInput
   override def dataType: DataType = StructType(Seq(
@@ -1634,7 +1634,7 @@ object FilterLines {
 
 /** See [[TextExpressions.filterLines]]. */
 case class FilterLines(child: Expression, sep: String, rules: FilterLines.LineRules)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with GraftKernel {
 
   require(sep.nonEmpty, "FilterLines: sep must be non-empty")
 

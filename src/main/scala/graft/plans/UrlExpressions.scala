@@ -78,7 +78,7 @@ object UrlCanonical {
 }
 
 case class UrlCanonical(child: Expression, trackingParamPattern: String)
-    extends UnaryExpression with UnaryLike[Expression] {
+    extends UnaryExpression with UnaryLike[Expression] with GraftKernel {
 
   override def dataType: DataType = StringType
   override def checkInputDataTypes() =

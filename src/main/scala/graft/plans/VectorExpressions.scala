@@ -164,7 +164,7 @@ object DotProduct {
 }
 
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   override def inputTypes = Seq(VectorExpressions.vecType, VectorExpressions.vecType)
   override def dataType: DataType = DoubleType
@@ -230,7 +230,7 @@ object CosineSim {
   * uncast and are read natively.
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   override def inputTypes = Seq(VectorExpressions.vecType, VectorExpressions.vecType)
   override def dataType: DataType = DoubleType
@@ -270,7 +270,7 @@ object ArraySumFold {
 }
 
 case class ArraySumFold(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   override def inputTypes = Seq(VectorExpressions.vecType)
   override def dataType: DataType = DoubleType
@@ -354,7 +354,7 @@ object NearestCenter {
 }
 
 case class NearestCenter(child: Expression, centers: Seq[Seq[Double]])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   override def inputTypes = Seq(VectorExpressions.vecType)
   override def dataType: DataType = IntegerType
@@ -376,7 +376,7 @@ case class NearestCenter(child: Expression, centers: Seq[Seq[Double]])
 }
 
 case class HyperplaneBits(child: Expression, planes: Seq[Seq[Double]])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   override def inputTypes = Seq(VectorExpressions.vecType)
   override def dataType: DataType = IntegerType
@@ -490,7 +490,7 @@ object Int8ReconStats {
 
 /** See [[VectorExpressions.sq8Stats]]. */
 case class Int8ReconStats(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   override def inputTypes = Seq(VectorExpressions.vecType)
   override def dataType: DataType = StructType(Seq(
@@ -513,7 +513,7 @@ case class Int8ReconStats(child: Expression)
 }
 
 case class Int8Quantize(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   override def inputTypes = Seq(VectorExpressions.vecType)
   override def dataType: DataType = StructType(Seq(
@@ -575,7 +575,7 @@ object PqEncode {
 
 /** See [[VectorExpressions.pqEncode]]. */
 case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
     "PqEncode: empty codebook")
@@ -641,7 +641,7 @@ object PqDistTable {
 
 /** See [[VectorExpressions.pqDistTable]]. */
 case class PqDistTable(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
     "PqDistTable: empty codebook")
@@ -692,7 +692,7 @@ object AdcDistance {
 
 /** See [[VectorExpressions.adcDistance]]. */
 case class AdcDistance(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes with GraftKernel {
 
   require(ksub > 0, s"AdcDistance: ksub=$ksub must be positive")
 

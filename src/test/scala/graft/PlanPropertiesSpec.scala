@@ -62,6 +62,30 @@ class PlanPropertiesSpec extends SparkSpec {
     }
   }
 
+  test("top-k over a kernel: the kernel runs in TakeOrderedAndProject's projectList or above, never below") {
+    // Pinned on a session with graft's extensions (LateKernelMaterialization
+    // is an injected rule; the shared spec session has none).
+    val gs = SparkTestSession.withGraftExtensions
+    def kernel(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.exists(_.isInstanceOf[graft.plans.GraftKernel])
+    for (q <- Seq("q_dedup_minhash", "q_dedup_simhash", "q_text_fingerprint", "q_ann_buckets")) {
+      val p = SparkEntry.queries(q)(gs, dir).queryExecution.sparkPlan
+      val tops = p.collect { case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t }
+      assert(tops.size == 1, s"$q: expected one TakeOrderedAndProject:\n$p")
+      assert(!tops.head.child.exists(_.expressions.exists(kernel)),
+        s"$q evaluates its kernel on every row, below the top-K:\n$p")
+      assert(p.exists(_.expressions.exists(kernel)), s"$q: no kernel in the plan:\n$p")
+    }
+    // a serve page and peek carry no kernel: their optimized plans are the
+    // ones the rule-excluded optimizer produces
+    val c = Tables.catalog(gs, dir)
+    for (df <- Seq(
+        c.from("customer").where("c_nationkey", graft.api.Eq, "3").orderBy("c_acctbal").pageSize(25).execDf(),
+        c.from("customer").orderBy("c_name").pageSize(50).peek()))
+      assert(SparkTestSession.optimized(df) ==
+        SparkTestSession.optimized(df, graft.plans.LateKernelMaterialization.ruleName))
+  }
+
   test("q_text_repetition tokenizes once: a single RepetitionStats node in the plan") {
     val p = plan("q_text_repetition")
     val count = "(?i)repetitionstats".r.findAllIn(p).length
@@ -112,6 +136,19 @@ class PlanPropertiesSpec extends SparkSpec {
       assert("(?i)exchange".r.findAllIn(p).length == 1,
         s"$q must be scan-projection-only plus the final orderBy exchange:\n$p")
     }
+  }
+
+  test("q_text_winnow: WinnowFps above the one exchange, a doc_id range split; no global sort") {
+    // a range exchange over (doc_id, fp) rows samples its input by
+    // re-running the scan and the kernel: the order must come from
+    // range-partitioning the documents below the kernel instead
+    val p = plan("q_text_winnow")
+    val exchanges = "Exchange [^\n]*".r.findAllIn(p).toSeq
+    assert(exchanges.size == 1 && exchanges.head.startsWith("Exchange rangepartitioning(doc_id") &&
+      !exchanges.head.contains("fp#"), s"expected one doc_id range exchange:\n$p")
+    assert(p.indexOf("winnowfps") >= 0 && p.indexOf("winnowfps") < p.indexOf("Exchange"),
+      s"WinnowFps must run above the exchange:\n$p")
+    assert(!"Sort \\[[^\n]*\\], true".r.findFirstIn(p).isDefined, s"global sort in:\n$p")
   }
 
   test("q_line_filter / q_html_extract: ONE native node, zero shuffles beyond the output sort") {

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session, lazy). */
@@ -14,6 +15,30 @@ object SparkTestSession {
     // metadata — Spark still verifies bucketsContainSingleFile per scan
     .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     .getOrCreate()
+
+  /** A session on the same context with [[graft.plans.GraftExtensions]]
+    * injected, as harness sessions (Tables.build) have: graft's optimizer
+    * rules in the operator-optimization batch and its SQL functions. The
+    * shared session above stays rule-free. */
+  lazy val withGraftExtensions: SparkSession = {
+    val base = spark // the context (master, UI off) comes from the shared session
+    val s = SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).create()
+    Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone",
+      "spark.sql.legacy.bucketedTableScan.outputOrdering")
+      .foreach(k => s.conf.set(k, base.conf.get(k)))
+    s
+  }
+
+  /** `df`'s analyzed plan as its session optimizes it with `excludedRules`
+    * (optimizer rule names, comma-separated) switched off; "" keeps all. */
+  def optimized(df: DataFrame, excludedRules: String = ""): LogicalPlan = {
+    val s = df.sparkSession
+    s.conf.set("spark.sql.optimizer.excludedRules", excludedRules)
+    // a fresh QueryExecution optimizes with `s` active, so the optimizer
+    // reads this session's conf, not the thread's active one
+    try s.sessionState.executePlan(df.queryExecution.analyzed).optimizedPlan
+    finally s.conf.unset("spark.sql.optimizer.excludedRules")
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
