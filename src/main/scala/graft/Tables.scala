@@ -110,8 +110,8 @@ object Tables {
   def session(master: String = defaultMaster): SparkSession =
     build(master, sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES"))
 
-  /** Session for the LOCAL harnesses ONLY (Bench, perfbench, StreamBench,
-    * Smoke), with the scan-split size matched to the HARNESS scale:
+  /** Session for the LOCAL harnesses ONLY (Bench, perfbench, Smoke), with
+    * the scan-split size matched to the HARNESS scale:
     * `clamp(max(total/1024, largestFile/256), 1 MB, 128 MB)`. Inputs here
     * are 15-600 MB per table, so the 128 MB default turns most scans into
     * 1-4 tasks and leaves 28+ of the 32 cores idle on every scan-heavy

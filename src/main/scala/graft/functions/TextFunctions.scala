@@ -16,13 +16,17 @@ object TextFunctions {
     *
     * Trims ALL `\s`-class whitespace before splitting (Spark's `trim` strips
     * spaces only — a trailing tab or newline would leave a trailing empty
-    * token). The native expressions tokenize through the shared regex-parity
-    * `Tok` helper (TextExpressions.scala), which edge-strips by the same `\s`
-    * class — NOT Java `String.trim`, whose control-character set differs —
-    * so this column form and the natives agree on every edge.
+    * token). The native expressions tokenize through `graft.plans.Tokens`,
+    * whose byte runs split on the same `\s` class — NOT Java `String.trim`'s
+    * control-character set — so this column form and the natives agree on
+    * every edge. The trailing anchor is `\z`, not `$`: Java's `$` also
+    * matches before a final line terminator (U+0085, U+2028, U+2029), so
+    * `\s+$` would strip the whitespace before one and glue it to the last
+    * token. `\z` keeps the plain maximal-run rule, which is also what the
+    * DuckDB oracles' RE2 `$` means.
     */
   def tokens(text: Column): Column =
-    split(regexp_replace(text, "^\\s+|\\s+$", ""), "\\s+")
+    split(regexp_replace(text, "^\\s+|\\s+\\z", ""), "\\s+")
 
   // Native one-pass counters (plans.TextExpressions.TokStats): the column
   // forms — size(tokens(text)) and length(regexp_replace(trim(text),

@@ -179,17 +179,17 @@ object Perplexity {
       contexts = bigramTypes.groupMapReduce(_._1)(_._3)(_ + _),
       vocab = lm.vocab, alpha = lm.alpha)
     val keep = (col(idCol) +: carry.map(col)).toIndexedSeq
-    // No-bigram drop as a CHEAP text predicate instead of filtering the
+    // No-bigram drop as a CHEAP token count instead of filtering the
     // projected `__p.n_bigrams > 0`: Catalyst inlines a filter on a
     // projected field below the projection, so BigramPpl — the whole
     // tokenize + model-lookup pass — evaluated TWICE per row (once in the
     // Filter, once in the Project; r21 plan audit, the guide's
-    // duplicated-UDF shape). Equivalence: n_bigrams > 0 ⟺ ntok ≥ 2 ⟺ the
-    // text contains non-ws, ws+, non-ws in sequence — `rlike("\\S\\s+\\S")`
-    // — exact because the tokenizer's whitespace class is Java regex `\s`
-    // (Tok splits on `\s+` after `\s` edge-strip). Pinned against
-    // scoreJoined on the edge shapes in PerplexitySpec.
-    docs.filter(col(textCol).isNotNull && col(textCol).rlike("\\S\\s+\\S"))
+    // duplicated-UDF shape). n_bigrams > 0 ⟺ at least two
+    // `graft.plans.Tokens` runs, which TokStats counts in one codegen'd
+    // byte pass with no allocation.
+    // Pinned against scoreJoined on the edge shapes in PerplexitySpec.
+    docs.filter(col(textCol).isNotNull &&
+        graft.plans.TextExpressions.tokStats(col(textCol)).getField("ntok") >= 2)
       .select(keep :+
         graft.plans.TextExpressions.bigramPpl(col(textCol), local).as("__p"): _*)
       .select(keep ++ Seq(col("__p.n_bigrams").as("n_bigrams"),

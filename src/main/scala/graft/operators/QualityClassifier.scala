@@ -66,7 +66,7 @@ object QualityClassifier {
     // evaluated TWICE per row — once in the Filter, once in the Project
     // (r21 plan audit; the optimization guide's duplicated-UDF shape).
     // Equivalence: n_grams > 0 ⟺ ntok ≥ 1 ⟺ text has a non-whitespace char,
-    // and the tokenizer's whitespace class (FastMd5.isWs) is exactly Java
+    // and the tokenizer's whitespace class (Tokens.isWs) is exactly Java
     // regex `\s` = [ \t\n\x0B\f\r], so `rlike("\\S")` decides ntok ≥ 1
     // bit-identically — including control chars ≤ U+0020 outside `\s`
     // (e.g. U+001C FILE SEPARATOR) that a trim()-based predicate would misclassify.
@@ -130,7 +130,9 @@ object QualityClassifier {
     require(d > 0 && epochs > 0 && lrMilli > 0,
       s"QualityClassifier.trainLocal: d=$d, epochs=$epochs, lrMilli=$lrMilli must be positive")
     val feats = samples.map { case (text, lab) =>
-      (HashedNgramLogit.buckets(text, d, includeBigrams), if (lab) 1L else -1L)
+      (HashedNgramLogit.buckets(
+        org.apache.spark.unsafe.types.UTF8String.fromString(text), d, includeBigrams),
+        if (lab) 1L else -1L)
     }
     val w = new Array[Long](d)
     var bias = 0L

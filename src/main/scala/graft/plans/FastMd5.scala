@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Allocation-free MD5 head hashing for the gram-hash hot paths
   * (classifier buckets, k-gram streams, winnow fingerprints).
   *
@@ -37,12 +35,6 @@ object FastMd5 {
     val block = new Array[Byte](64)     // padded tail block
     val m = new Array[Int](16)          // decoded message words
     val h = new Array[Int](4)           // chaining state
-    var scratch = new Array[Byte](256)  // gram-concat buffer
-    def ensureScratch(n: Int): Array[Byte] = {
-      if (scratch.length < n)
-        scratch = new Array[Byte](java.lang.Integer.highestOneBit(n) << 1)
-      scratch
-    }
   }
 
   private val states = ThreadLocal.withInitial[State](() => new State)
@@ -127,74 +119,11 @@ object FastMd5 {
     hash48(b, 0, b.length)
   }
 
-  /** Head hash of the space-joined m-gram over token spans
-    * `[starts(i), ends(i))` for `i ∈ [from, from+m)` of `bytes` — the
-    * `tokA + " " + tokB (+ …)` gram without materializing it: spans are
-    * copied into the per-thread scratch with single-space separators
-    * (exactly what `String` concatenation hashed before).
-    */
-  def hashGram(bytes: Array[Byte], starts: Array[Int], ends: Array[Int],
-               from: Int, m: Int, bits: Int): Long = {
-    val st = states.get()
-    var total = m - 1 // separators
-    var i = 0
-    while (i < m) { total += ends(from + i) - starts(from + i); i += 1 }
-    val buf = st.ensureScratch(total)
-    var pos = 0
-    i = 0
-    while (i < m) {
-      if (i > 0) { buf(pos) = ' '; pos += 1 }
-      val l = ends(from + i) - starts(from + i)
-      System.arraycopy(bytes, starts(from + i), buf, pos, l)
-      pos += l
-      i += 1
-    }
-    digest(st, buf, 0, total)
-    if (bits == 48) head48(st) else head64(st)
-  }
-
-  /** ASCII-whitespace token spans of a UTF-8 byte array (the byte-level
-    * twin of `Tok.tokens`' Java-regex `\s+` split, which is ASCII-only:
-    * space, tab, LF, VT, FF, CR — multi-byte UTF-8 units never contain
-    * these values, so byte scanning is exact). Returns the token count;
-    * fills `starts`/`ends` (callers size them to a worst case of
-    * `len/2 + 1`).
-    */
-  def tokenSpans(bytes: Array[Byte], len: Int,
-                 starts: Array[Int], ends: Array[Int]): Int = {
-    var n = 0
-    var i = 0
-    while (i < len) {
-      while (i < len && isWs(bytes(i))) i += 1
-      if (i < len) {
-        starts(n) = i
-        while (i < len && !isWs(bytes(i))) i += 1
-        ends(n) = i
-        n += 1
-      }
-    }
-    n
-  }
-
-  @inline private def isWs(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0a || b == 0x0b || b == 0x0c || b == 0x0d
-
-  /** Reusable span buffers, per thread (token counts vary per document). */
-  private final class Spans { var starts = new Array[Int](256); var ends = new Array[Int](256) }
-  private val spans = ThreadLocal.withInitial[Spans](() => new Spans)
-
-  /** Token spans of a UTF8String with per-thread buffers: returns
-    * (bytes, starts, ends, n). The returned arrays are VALID UNTIL THE
-    * NEXT CALL on the same thread — consume before re-entering.
-    */
-  def tokenize(input: UTF8String): (Array[Byte], Array[Int], Array[Int], Int) = {
-    val bytes = input.getBytes
-    val sp = spans.get()
-    val worst = (bytes.length >> 1) + 1
-    if (sp.starts.length < worst) {
-      sp.starts = new Array[Int](worst); sp.ends = new Array[Int](worst)
-    }
-    val n = tokenSpans(bytes, bytes.length, sp.starts, sp.ends)
-    (bytes, sp.starts, sp.ends, n)
+  /** Head hash of the space-joined m-gram of tokens `[from, from+m)`
+    * (the `tokA + " " + tokB (+ …)` gram, joined by [[Tokens.Spans.gram]]
+    * without materializing it). */
+  def hashGram(t: Tokens.Spans, from: Int, m: Int, bits: Int): Long = {
+    val len = t.gram(from, m)
+    if (bits == 48) hash48(t.gramBytes, 0, len) else hash64(t.gramBytes, 0, len)
   }
 }

@@ -71,8 +71,6 @@ object HtmlTextExtract {
 
   private def isWordByte(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9') || b == '_'
-  private def isWsByte(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0a || b == 0x0b || b == 0x0c || b == 0x0d
   private def lower(b: Byte): Byte =
     if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
 
@@ -215,7 +213,7 @@ object HtmlTextExtract {
         while (gt < e && b(gt) != '>') gt += 1
         if (gt < e) { pendingGap = true; i = gt + 1 }
         else content = true // no '>': the regex leaves the literal '<'
-      } else if (x >= 0 && isWsByte(x)) {
+      } else if (Tokens.isWs(x)) {
         pendingGap = true
         i += 1
       } else content = true
@@ -286,7 +284,7 @@ object HtmlTextExtract {
           sb.append(ch)
           i += 1
         }
-      } else if (ch == ' ' || ch == '\t' || ch == '\n' || ch == 0x0b || ch == '\f' || ch == '\r') {
+      } else if (Tokens.isWs(ch)) {
         pendingGap = true
         i += 1
       } else {

@@ -2,11 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the dedup hot path.
@@ -165,19 +166,11 @@ object TextExpressions {
   def winnowFps(text: Column, k: Int, w: Int): Column =
     ColumnShim.column(WinnowFps(ColumnShim.expression(text), k, w))
 
-  /** Shared tokenizer for every native text expression: edge-strip by the
-    * SAME `\s` class the column twins use (`regexp_replace(text,
-    * "^\\s+|\\s+$", "")` + `split("\\s+")`) — Java `String.trim` strips all
-    * chars <= U+0020 (NUL, the FS..US separators) that `\s` does not match,
-    * so trim-based tokenization would silently diverge from the twins on
-    * text with leading/trailing control characters. Patterns precompiled
-    * (String.replaceAll recompiles per call — this runs per row).
-    */
-  private[plans] object Tok {
-    private val edge = java.util.regex.Pattern.compile("^\\s+|\\s+$")
-    private val ws   = java.util.regex.Pattern.compile("\\s+")
-    def tokens(s: String): Array[String] = ws.split(edge.matcher(s).replaceAll(""))
-  }
+  /** `XxHash64Function.hash(s, StringType, 42L)` of the string whose UTF-8
+    * bytes are `bytes[off, off+len)` — the column twins' `xxhash64(token)`,
+    * hashed in place from a [[Tokens]] span or gram. */
+  private[plans] def xxhash64(bytes: Array[Byte], off: Int, len: Int): Long =
+    XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + off, len, 42L)
 
   /** Position-ordered k-gram hashes (`array<long>`, one entry per token
     * window): the occurrence stream for exact-substring dedup
@@ -266,19 +259,16 @@ case class MinHashState(child: Expression, k: Int, w: Int, bands: Int, seed: Lon
     StructField("band_hashes", ArrayType(LongType, containsNull = false))))
 
   override def nullSafeEval(input: Any): Any = {
-    val tokens = TextExpressions.Tok.tokens(input.asInstanceOf[UTF8String].toString)
-    val nSh    = math.max(1, tokens.length - w + 1)
+    val t      = Tokens.tokenize(input.asInstanceOf[UTF8String])
+    val nTok   = t.nSplit // an empty text hashes one "" shingle
+    val nSh    = math.max(1, nTok - w + 1)
     // distinct shingle hashes
     val seen   = new java.util.HashSet[Long](nSh * 2)
     val hashes = new scala.collection.mutable.ArrayBuffer[Long](nSh)
-    val sb     = new java.lang.StringBuilder
     var i = 0
     while (i < nSh) {
-      sb.setLength(0)
-      val end = math.min(i + w, tokens.length)
-      var j = i
-      while (j < end) { if (j > i) sb.append(' '); sb.append(tokens(j)); j += 1 }
-      val h = XxHash64Function.hash(UTF8String.fromString(sb.toString), StringType, 42L)
+      val len = t.gram(i, math.min(i + w, nTok) - i)
+      val h = TextExpressions.xxhash64(t.gramBytes, 0, len)
       if (seen.add(h)) hashes += h
       i += 1
     }
@@ -328,23 +318,20 @@ case class ShingleSet(child: Expression, w: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def nullSafeEval(input: Any): Any = {
-    val tokens = TextExpressions.Tok.tokens(input.asInstanceOf[UTF8String].toString)
-    val nSh    = math.max(1, tokens.length - w + 1)
-    val seen   = new java.util.LinkedHashSet[String](nSh * 2)
-    val sb     = new java.lang.StringBuilder
+    val t      = Tokens.tokenize(input.asInstanceOf[UTF8String])
+    val nTok   = t.nSplit // an empty text has one "" shingle
+    val nSh    = math.max(1, nTok - w + 1)
+    val seen   = new java.util.LinkedHashSet[UTF8String](nSh * 2)
     var i = 0
     while (i < nSh) {
-      sb.setLength(0)
-      val end = math.min(i + w, tokens.length)
-      var j = i
-      while (j < end) { if (j > i) sb.append(' '); sb.append(tokens(j)); j += 1 }
-      seen.add(sb.toString)
+      val len = t.gram(i, math.min(i + w, nTok) - i)
+      seen.add(UTF8String.fromBytes(java.util.Arrays.copyOf(t.gramBytes, len)))
       i += 1
     }
     val out = new Array[Any](seen.size)
     val it  = seen.iterator()
     var k = 0
-    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
+    while (it.hasNext) { out(k) = it.next(); k += 1 }
     new GenericArrayData(out)
   }
 
@@ -386,7 +373,7 @@ case class LangId(child: Expression, markers: Seq[(String, Seq[String])])
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val tokens = TextExpressions.Tok.tokens(input.asInstanceOf[UTF8String].toString)
+    val tokens = Tokens.tokenize(input.asInstanceOf[UTF8String]).strings
     val counts = new Array[Int](langNames.length)
     var t = 0
     while (t < tokens.length) {
@@ -434,16 +421,15 @@ case class Fingerprint(child: Expression)
   private val P = graft.functions.HashFunctions.P
 
   override def nullSafeEval(input: Any): Any = {
-    val tokens = TextExpressions.Tok.tokens(input.asInstanceOf[UTF8String].toString)
+    val t = Tokens.tokenize(input.asInstanceOf[UTF8String])
     var l1 = 17L
     var l2 = 29L
-    var t = 0
-    while (t < tokens.length) {
-      val h = java.lang.Math.floorMod(
-        XxHash64Function.hash(UTF8String.fromString(tokens(t)), StringType, 42L), P)
+    var i = 0
+    while (i < t.nSplit) { // an empty text hashes one ""
+      val h = java.lang.Math.floorMod(TextExpressions.xxhash64(t.bytes, t.starts(i), t.len(i)), P)
       l1 = java.lang.Math.floorMod(l1 * 31L + h, P)
       l2 = java.lang.Math.floorMod(l2 * 131L + h, P)
-      t += 1
+      i += 1
     }
     l1 * P + l2
   }
@@ -458,8 +444,8 @@ case class Fingerprint(child: Expression)
   * form allocated one java.lang.String PER TOKEN and sat under
   * CodegenFallback, which also knocked the whole projection out of
   * whole-stage codegen — measured as 80% of q_corpus_card's base cost at
-  * sf10). Tokens are [[TokStats]]'s non-`\s` byte runs (Java-regex `\s` is
-  * the 6 ASCII chars; UTF-8 continuation bytes are ≥ 0x80 and can't match),
+  * sf10). Tokens are the [[Tokens]] byte runs (Java-regex `\s` is the 6
+  * ASCII chars; UTF-8 continuation bytes are ≥ 0x80 and can't match),
   * and a hit is exact byte equality with a stopword's UTF-8 encoding —
   * byte equality ≡ String equality on the decoded token, so parity with
   * the HashSet twin is structural. The empty/all-whitespace input keeps
@@ -467,9 +453,6 @@ case class Fingerprint(child: Expression)
   * a stopword.
   */
 object StopScan {
-  private def isWs(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0a || b == 0x0b || b == 0x0c || b == 0x0d
-
   private def isStop(input: UTF8String, start: Int, len: Int, stops: Array[Array[Byte]]): Boolean = {
     var s = 0
     while (s < stops.length) {
@@ -493,7 +476,7 @@ object StopScan {
     var i = 0
     while (i < n) {
       val b = input.getByte(i)
-      if (b >= 0 && isWs(b)) {
+      if (Tokens.isWs(b)) {
         if (start >= 0) {
           if (isStop(input, start, i - start, stops)) hits += 1
           ntok += 1
@@ -606,7 +589,7 @@ case class RepetitionStats(child: Expression)
     StructField("top_word_frac", DoubleType, nullable = false)))
 
   override def nullSafeEval(input: Any): Any = {
-    val tokens = TextExpressions.Tok.tokens(input.asInstanceOf[UTF8String].toString)
+    val tokens = Tokens.tokenize(input.asInstanceOf[UTF8String]).strings
     val n = tokens.length
     val counts = new java.util.HashMap[String, Integer](n * 2)
     var maxC = 0
@@ -675,7 +658,7 @@ case class GopherStats(child: Expression, stopwords: Seq[String])
 
   override def nullSafeEval(input: Any): Any = {
     val str = input.asInstanceOf[UTF8String].toString
-    val tokens = TextExpressions.Tok.tokens(str)
+    val tokens = Tokens.tokenize(input.asInstanceOf[UTF8String]).strings
     val n = tokens.length
     var chars = 0
     var alpha = 0
@@ -739,17 +722,17 @@ case class SimHash64(child: Expression)
   override def dataType: DataType = LongType
 
   override def nullSafeEval(input: Any): Any = {
-    val tokens = TextExpressions.Tok.tokens(input.asInstanceOf[UTF8String].toString)
+    val t      = Tokens.tokenize(input.asInstanceOf[UTF8String])
     val votes  = new Array[Int](64)
-    var t = 0
-    while (t < tokens.length) {
-      val h = XxHash64Function.hash(UTF8String.fromString(tokens(t)), StringType, 42L)
+    var i = 0
+    while (i < t.nSplit) { // an empty text hashes one ""
+      val h = TextExpressions.xxhash64(t.bytes, t.starts(i), t.len(i))
       var bit = 0
       while (bit < 64) {
         if (((h >>> bit) & 1L) == 1L) votes(bit) += 1 else votes(bit) -= 1
         bit += 1
       }
-      t += 1
+      i += 1
     }
     var out = 0L
     var bit = 0
@@ -791,8 +774,8 @@ case class UnicodeNormalize(child: Expression, form: String)
 
 /** Whitespace canonicalization in one pass: collapse `\s+` runs to single
   * spaces and strip the edges — the native twin of
-  * `trim(regexp_replace(text, "\s+", " "))`, via the shared precompiled
-  * `\s` tokenizer ([[TextExpressions.Tok]]'s discipline).
+  * `trim(regexp_replace(text, "\s+", " "))`: the [[Tokens]] joined by
+  * single spaces.
   *
   * Deliberately does NOT fold lowercasing in: Spark 4's `lower` routes
   * through ICU case mapping when `spark.sql.icu.caseMappings.enabled` is on
@@ -809,10 +792,8 @@ case class CollapseWhitespace(child: Expression)
 
   override def dataType: DataType = StringType
 
-  override def nullSafeEval(input: Any): Any = {
-    val raw = input.asInstanceOf[UTF8String].toString
-    UTF8String.fromString(TextExpressions.Tok.tokens(raw).mkString(" "))
-  }
+  override def nullSafeEval(input: Any): Any =
+    UTF8String.fromString(Tokens.tokenize(input.asInstanceOf[UTF8String]).strings.mkString(" "))
 
   override protected def withNewChildInternal(newChild: Expression): CollapseWhitespace =
     copy(child = newChild)
@@ -869,7 +850,7 @@ case class CompressionRatio(child: Expression)
 object BpeishCount {
   /** One scorer for the interpreted and generated paths. Mirrors the regex
     * `[a-z]+|[A-Z][a-z]*|[0-9]|[^a-zA-Z0-9\s]` exactly: leftmost-first
-    * alternation order, Java's ASCII `\s` ([ \t\n\x0B\f\r]) as the skip
+    * alternation order, Java's ASCII `\s` ([[Tokens.isWs]]) as the skip
     * class, code-point stepping in the symbol branch (surrogate pair = ONE
     * match). ASCII-range checks are charAt-safe — surrogates never fall in
     * those ranges.
@@ -889,7 +870,7 @@ object BpeishCount {
         while (i < len && { val d = str.charAt(i); d >= 'a' && d <= 'z' }) i += 1
       } else if (c >= '0' && c <= '9') {
         n += 1; i += 1
-      } else if (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r') {
+      } else if (Tokens.isWs(c)) {
         i += 1
       } else {
         n += 1; i += Character.charCount(str.codePointAt(i))
@@ -926,7 +907,7 @@ case class BpeishCount(child: Expression)
 object TermCounts {
   /** One scorer for the interpreted and generated paths. */
   def compute(input: UTF8String): InternalRow = {
-    val toks = TextExpressions.Tok.tokens(input.toString)
+    val toks = Tokens.tokenize(input).strings
     val counts = new java.util.LinkedHashMap[String, Int](toks.length * 2)
     var i = 0
     while (i < toks.length) {
@@ -973,13 +954,13 @@ case class TermCounts(child: Expression)
 object BigramCounts {
   /** One scorer for the interpreted and generated paths. LinkedHashMap →
     * first-appearance entry order (deterministic; consumers aggregate, so
-    * order is cosmetic). The map key is "w1 w2": tokens come from a
-    * `\s+` split, so no token can contain a space — the single-space
+    * order is cosmetic). The map key is "w1 w2": tokens are [[Tokens]]
+    * runs, so no token can contain a space — the single-space
     * join is collision-free and the indexOf-split below recovers the
     * pair exactly.
     */
   def compute(input: UTF8String): InternalRow = {
-    val toks = TextExpressions.Tok.tokens(input.toString)
+    val toks = Tokens.tokenize(input).strings
     val nbg = math.max(toks.length - 1, 0)
     val counts = new java.util.LinkedHashMap[String, Int](nbg * 2)
     var i = 0
@@ -1063,28 +1044,23 @@ object WinnowFps {
   }
 
   /** One scorer for the interpreted and generated paths. Tokens come from
-    * the shared Tok contract; grams are md5 over the space-joined token
-    * bytes (byte-identical to `md5(concat_ws(" ", tokens))`); windows are
+    * [[Tokens]]; grams are md5 over the space-joined token bytes
+    * (byte-identical to `md5(concat_ws(" ", tokens))`); windows are
     * the ng-w+1 FULL frames only (short docs emit an empty array, which
     * `explode` then drops — the columnar `p <= ng-w+1` filter).
     */
   def compute(input: UTF8String, k: Int, w: Int): ArrayData = {
-    val toks = TextExpressions.Tok.tokens(input.toString)
-    val ng = toks.length - k + 1
+    val t = Tokens.tokenize(input)
+    val ng = t.nSplit - k + 1 // k = 1 digests an empty text's ""
     val nw = ng - w + 1
     if (nw <= 0) return new GenericArrayData(Array.empty[Any])
     val md = md5.get()
-    val space = ' '.toByte
     val digests = new Array[Array[Byte]](ng)
     var i = 0
     while (i < ng) {
+      val len = t.gram(i, k)
       md.reset()
-      var j = i
-      while (j < i + k) {
-        if (j > i) md.update(space)
-        md.update(toks(j).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        j += 1
-      }
+      md.update(t.gramBytes, 0, len)
       digests(i) = md.digest()
       i += 1
     }
@@ -1168,50 +1144,34 @@ object HashedNgramLogit {
   def bucket(gram: String, d: Int): Int =
     (FastMd5.hash48(gram) % d).toInt
 
-  /** Gram bucket stream for one text — the trainer's feature extractor,
-    * guaranteed identical to the scorer's because both share [[bucket]]
-    * and the Tok contract. */
-  def buckets(text: String, d: Int, includeBigrams: Boolean): Array[Int] = {
-    val toks0 = TextExpressions.Tok.tokens(text)
-    val toks = if (toks0.length == 1 && toks0(0).isEmpty) Array.empty[String] else toks0
-    val nbg = if (includeBigrams) math.max(toks.length - 1, 0) else 0
-    val out = new Array[Int](toks.length + nbg)
+  /** The gram bucket stream of one text — unigrams, then (optionally)
+    * bigrams — the ONE feature extractor of the scorer ([[compute]]) and
+    * the local trainer. Grams hash in place from the [[Tokens]] spans
+    * ([[FastMd5]]: no String or digest allocation per gram — the sf10
+    * classifier profile was dominated by MessageDigest machinery; hashes
+    * bit-identical to [[bucket]], Md5ParitySpec). An empty or
+    * all-whitespace text has no grams, matching the oracle's empty-token
+    * filter.
+    */
+  def buckets(input: UTF8String, d: Int, includeBigrams: Boolean): Array[Int] = {
+    val t = Tokens.tokenize(input)
+    val nbg = if (includeBigrams) math.max(t.n - 1, 0) else 0
+    val out = new Array[Int](t.n + nbg)
     var i = 0
-    while (i < toks.length) { out(i) = bucket(toks(i), d); i += 1 }
+    while (i < t.n) { out(i) = (FastMd5.hash48(t.bytes, t.starts(i), t.len(i)) % d).toInt; i += 1 }
     var j = 0
-    while (j < nbg) { out(toks.length + j) = bucket(toks(j) + " " + toks(j + 1), d); j += 1 }
+    while (j < nbg) { out(t.n + j) = (FastMd5.hashGram(t, j, 2, 48) % d).toInt; j += 1 }
     out
   }
 
-  /** One scorer for interpreted eval and the local trainer: unigram +
-    * (optional) bigram occurrences, each contributing its bucket's
-    * milli-weight. The degenerate whitespace-only tokenization ([""])
-    * counts zero grams, matching the oracle's empty-token filter.
-    */
+  /** One scorer for interpreted eval: each gram occurrence contributes its
+    * bucket's milli-weight. */
   def compute(input: UTF8String, weights: Array[Long], includeBigrams: Boolean): InternalRow = {
-    // byte-level pass: unigrams hash IN PLACE from the document's UTF-8
-    // bytes, bigrams through FastMd5's scratch concat — no String/digest
-    // allocation per gram (the sf10 classifier profile was dominated by
-    // MessageDigest machinery; hashes bit-identical, Md5ParitySpec).
-    val (bytes, starts, ends, ntok) = FastMd5.tokenize(input)
-    val d = weights.length
-    var n = 0
+    val b = buckets(input, weights.length, includeBigrams)
     var sum = 0L
     var i = 0
-    while (i < ntok) {
-      sum += weights((FastMd5.hash48(bytes, starts(i), ends(i) - starts(i)) % d).toInt)
-      n += 1
-      i += 1
-    }
-    if (includeBigrams) {
-      i = 0
-      while (i < ntok - 1) {
-        sum += weights((FastMd5.hashGram(bytes, starts, ends, i, 2, 48) % d).toInt)
-        n += 1
-        i += 1
-      }
-    }
-    InternalRow(n, sum)
+    while (i < b.length) { sum += weights(b(i)); i += 1 }
+    InternalRow(b.length, sum)
   }
 }
 
@@ -1246,14 +1206,13 @@ object KgramHashes {
   def compute(input: UTF8String, k: Int, bits: Int): ArrayData = {
     // byte-level token spans + in-place FastMd5 grams: no String, no
     // StringBuilder, no MessageDigest — bit-identical hashes (Md5ParitySpec)
-    val (bytes, starts, ends, ntok) = FastMd5.tokenize(input)
-    val n = ntok - k + 1
+    val t = Tokens.tokenize(input)
+    val n = t.n - k + 1
     if (n <= 0) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
-      out(i) = java.lang.Long.valueOf(
-        FastMd5.hashGram(bytes, starts, ends, i, k, bits))
+      out(i) = java.lang.Long.valueOf(FastMd5.hashGram(t, i, k, bits))
       i += 1
     }
     new GenericArrayData(out)
@@ -1370,7 +1329,7 @@ object BigramPpl {
     * (shortest-repr string → HALF_UP at scale 4).
     */
   def compute(input: UTF8String, m: BigramLmLocal): InternalRow = {
-    val toks = TextExpressions.Tok.tokens(input.toString)
+    val toks = Tokens.tokenize(input).strings
     val n = toks.length - 1
     if (n <= 0) return InternalRow(0L, null)
     def mapped(t: String): String = if (m.vocabSet.contains(t)) t else Unk
@@ -1415,15 +1374,12 @@ case class BigramPpl(child: Expression, model: BigramLmLocal)
 }
 
 object TokStats {
-  private def isWs(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0a || b == 0x0b || b == 0x0c || b == 0x0d
-
   /** One scorer for the interpreted and generated paths: token count and
     * non-whitespace character count in ONE byte-level pass — no edge-strip
     * string copy, no token array, no regex. Parity contract (pinned in
     * TextFunctionsSpec against the column twins):
-    *  - tokens are the `Tok` segments (edge-strip by `\s`, split `\s+`), so
-    *    ntok = number of non-whitespace runs, with the degenerate
+    *  - tokens are the [[Tokens]] runs (edge-strip by `\s`, split `\s+`),
+    *    so ntok = number of non-whitespace runs, with the degenerate
     *    empty/all-whitespace input counting 1 (the split-of-empty [""]
     *    artifact both the column form and the DuckDB twins share);
     *  - nonspace = CODE POINTS outside Java-regex `\s` (= the 6 ASCII
@@ -1439,7 +1395,7 @@ object TokStats {
     var i = 0
     while (i < n) {
       val b = input.getByte(i)
-      if (b >= 0 && isWs(b)) {
+      if (Tokens.isWs(b)) {
         inTok = false
       } else {
         if (!inTok) { ntok += 1; inTok = true }
@@ -1523,13 +1479,11 @@ object FilterLines {
     val requireEndPunct: Boolean = rules.requireEndPunct
   }
 
-  // Java-regex ASCII classes: \w = [A-Za-z0-9_], \s = [ \t\n\x0B\f\r].
+  // Java-regex ASCII classes: \w = [A-Za-z0-9_] here, \s = Tokens.isWs.
   // Bytes >= 0x80 (negative) are neither — consistent with the decoded
   // regex view, where any non-ASCII code point is non-word non-space.
   private def isWordByte(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9') || b == '_'
-  private def isWsByte(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0a || b == 0x0b || b == 0x0c || b == 0x0d
 
   private def matchesAt(b: Array[Byte], i: Int, pat: Array[Byte]): Boolean = {
     var k = 0
@@ -1566,7 +1520,7 @@ object FilterLines {
     while (i < e) {
       val x = b(i)
       if ((x & 0xc0) != 0x80) cp += 1
-      if (x >= 0 && isWsByte(x)) inTok = false
+      if (Tokens.isWs(x)) inTok = false
       else if (!inTok) { toks += 1; inTok = true }
       i += 1
     }

@@ -9,8 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanPropertiesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+  // Pinned plans come from the session shape Bench, Verify and perfbench
+  // run: graft's extensions, so its optimizer rules fire.
+  private lazy val gs = SparkTestSession.withGraftExtensions
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(gs, dir).queryExecution.executedPlan.toString
 
   test("the ACTUAL filter predicates reach the parquet scan, not just IsNotNull") {
     val expected = Map(
@@ -63,9 +66,6 @@ class PlanPropertiesSpec extends SparkSpec {
   }
 
   test("top-k over a kernel: the kernel runs in TakeOrderedAndProject's projectList or above, never below") {
-    // Pinned on a session with graft's extensions (LateKernelMaterialization
-    // is an injected rule; the shared spec session has none).
-    val gs = SparkTestSession.withGraftExtensions
     def kernel(e: org.apache.spark.sql.catalyst.expressions.Expression) =
       e.exists(_.isInstanceOf[graft.plans.GraftKernel])
     for (q <- Seq("q_dedup_minhash", "q_dedup_simhash", "q_text_fingerprint", "q_ann_buckets")) {
@@ -90,6 +90,9 @@ class PlanPropertiesSpec extends SparkSpec {
     val p = plan("q_text_repetition")
     val count = "(?i)repetitionstats".r.findAllIn(p).length
     assert(count == 1, s"expected exactly 1 RepetitionStats (4-field extraction must not inline the expression per field), found $count:\n$p")
+    // perplexity's no-bigram pre-filter is a TokStats count, not the kernel
+    val ppl = plan("q_text_perplexity")
+    assert("(?i)bigramppl\\(".r.findAllIn(ppl).length == 1, s"BigramPpl evaluated more than once:\n$ppl")
   }
 
   test("q_sample_split is a pure scan projection: no shuffle before the output sort") {

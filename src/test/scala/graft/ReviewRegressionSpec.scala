@@ -146,6 +146,21 @@ class ReviewRegressionSpec extends SparkSpec {
       H.bandHashes(H.minhashSignature(H.shingleHashes(T.tokens($"text"))), 8).as("bh"))
       .head().getAs[scala.collection.Seq[Long]](0).toSeq
     assert(native == hof, "index built with one path must be probe-able with the other")
+    // empty, all-whitespace and control-character-edged texts: MinHash
+    // state and ShingleSet against the column twins
+    val edge = Seq("", "   ", "\t\r\n", "\u0000the fox\u001c", "\u001fa\u00a0b\u3000 c \u0000").toDF("text")
+    val rows = edge.select(
+      graft.plans.TextExpressions.minhashState($"text").as("st"),
+      H.shingleHashes(T.tokens($"text")).as("sh"),
+      H.bandHashes(H.minhashSignature(H.shingleHashes(T.tokens($"text"))), 8).as("bh"),
+      graft.plans.TextExpressions.shingleSet($"text").as("set"),
+      array_distinct(H.shingles(T.tokens($"text"))).as("set2")).collect()
+    rows.foreach { r =>
+      val st = r.getStruct(0)
+      assert(st.getSeq[Long](0) == r.getSeq[Long](1), s"shingle hashes: $r")
+      assert(st.getSeq[Long](2) == r.getSeq[Long](2), s"band hashes: $r")
+      assert(r.getSeq[String](3) == r.getSeq[String](4), s"shingle set: $r")
+    }
   }
 
   test("array-key nested relation preserves duplicate base rows") {

@@ -38,7 +38,10 @@ class RepetitionSpec extends SparkSpec {
       "x",                                     // single token: no bigrams
       "",                                      // empty → [""] single token
       "   leading and trailing   ",            // edge whitespace
-      "a\u0000b c\td\ne a\u0000b c\td"         // control chars + repeated pair
+      "a\u0000b c\td\ne a\u0000b c\td",        // control chars + repeated pair
+      "  \t\r\n ",                              // all whitespace → [""]
+      "\u0000x\u001c x \u001f",                  // control-character edges
+      "a\u00a0b a\u3000b a\u00a0b"                // NBSP / U+3000 are token chars
     )
     val rnd = new scala.util.Random(3)
     val vocab = Vector("alpha", "beta", "gamma", "delta")

@@ -84,7 +84,8 @@ class TextFunctionsSpec extends SparkSpec {
     (201L, "\t der \n the \r"),
     (202L, ""),
     (203L, "   "),
-    (204L, "\u001fder\u0000 the")
+    (204L, "\u001fder\u0000 the"),
+    (205L, "\u00a0the\u3000 der \u2028")   // Unicode spaces outside \s are token chars
   ).toDF("doc_id", "text")
 
   test("native quality/stopword-ratio match the column-algebra twins (incl. control chars)") {

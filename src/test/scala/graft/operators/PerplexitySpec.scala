@@ -62,8 +62,8 @@ class PerplexitySpec extends SparkSpec {
 
   test("no-bigram drop via the rlike pre-filter matches tokenizer semantics on control chars (r21)") {
     // r21 replaced the pushed-down `__p.n_bigrams > 0` filter (which
-    // re-evaluated BigramPpl in the Filter) with `rlike("\\S\\s+\\S")` —
-    // equivalent only because Tok splits on Java-regex \s+. Control chars
+    // re-evaluated BigramPpl in the Filter) with a cheap text pre-filter,
+    // now TokStats' `ntok >= 2` over the same Tokens runs. Control chars
     // outside \s (FS = \u001C here) are token CHARACTERS: "\u001C \u001C" is
     // two tokens -> one bigram -> kept; "x\u000By" splits on VT (a \s char)
     // into two tokens -> kept; "solo", "\u001C" alone, and all-\s texts drop.
@@ -101,7 +101,8 @@ class PerplexitySpec extends SparkSpec {
     val docs = (0L until 300L).map { i =>
       val n = rnd.nextInt(12) // includes 0- and 1-token docs (no-row cases)
       (i, Seq.fill(n)(vocabWords(rnd.nextInt(vocabWords.size))).mkString(" "))
-    } :+ ((300L, null.asInstanceOf[String])) :+ ((301L, ""))
+    } :+ ((300L, null.asInstanceOf[String])) :+ ((301L, "")) :+ ((302L, " \t\r\n")) :+
+      ((303L, "\u0000alpha beta\u001c")) :+ ((304L, "\u001f the \u00a0 of \u0000"))
     val df = docs.toDF("doc_id", "text")
     val lm = Perplexity.train(df.filter(col("doc_id") % 3 =!= 0), vocabSize = 5)
     val fast = Perplexity.score(df, lm)

@@ -44,6 +44,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val hofSim = df.select(graft.functions.HashFunctions.simhash(
       graft.functions.TextFunctions.tokens($"text"))).head().getLong(0)
     assert(sqlSim == hofSim, "native expression must match the column-algebra twin")
+    // empty, all-whitespace and control-character-edged texts
+    val edge = Seq("", "   ", "\t\r\n", "\u0000the fox\u001c", "\u001fa\u00a0b\u3000 c \u0000").toDF("text")
+    val both = edge.select(TextExpressions.simhash64($"text"), graft.functions.HashFunctions.simhash(
+      graft.functions.TextFunctions.tokens($"text"))).collect()
+    both.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
   }
 
   test("graft_quality / graft_stopword_ratio / graft_langid / graft_fingerprint from SQL") {

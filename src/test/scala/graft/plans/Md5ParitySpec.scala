@@ -4,8 +4,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** FastMd5 is bit-identical to java.security.MessageDigest — across block
-  * boundaries, empty input, non-ASCII bytes — and its byte-level tokenizer
-  * matches the Java-regex Tok contract the old String path used.
+  * boundaries, empty input, non-ASCII bytes — on [[Tokens]] spans and grams
+  * as on the strings the old String path hashed.
   */
 class Md5ParitySpec extends AnyFunSuite {
 
@@ -44,33 +44,16 @@ class Md5ParitySpec extends AnyFunSuite {
 
   test("hashGram equals hashing the space-joined token strings") {
     val text = "alpha  beta\tgamma\n delta"
-    val bytes = text.getBytes("UTF-8")
-    val starts = new Array[Int](16); val ends = new Array[Int](16)
-    val n = FastMd5.tokenSpans(bytes, bytes.length, starts, ends)
+    val t = Tokens.tokenize(UTF8String.fromString(text))
+    val n = t.n
     assert(n == 4)
     val toks = Seq("alpha", "beta", "gamma", "delta")
     for (m <- 1 to 4; i <- 0 to (n - m)) {
       val joined = toks.slice(i, i + m).mkString(" ")
-      assert(FastMd5.hashGram(bytes, starts, ends, i, m, 48) ==
+      assert(FastMd5.hashGram(t, i, m, 48) ==
         refHead(joined.getBytes("UTF-8"), 48), s"m=$m i=$i")
-      assert(FastMd5.hashGram(bytes, starts, ends, i, m, 64) ==
+      assert(FastMd5.hashGram(t, i, m, 64) ==
         refHead(joined.getBytes("UTF-8"), 64), s"m=$m i=$i (64)")
-    }
-  }
-
-  test("tokenize matches the Java-regex Tok split on every whitespace class") {
-    val cases = Seq(
-      "", "   ", "\t\n", "one", " one ", "a b", "ab\fc\rd",
-      "多字节 tokens mixed\twith  ascii", "trailing space ", "\n\nleading")
-    for (s <- cases) {
-      val expected0 = TextExpressions.Tok.tokens(s)
-      val expected =
-        if (expected0.length == 1 && expected0(0).isEmpty) Array.empty[String]
-        else expected0
-      val (bytes, starts, ends, n) = FastMd5.tokenize(UTF8String.fromString(s))
-      val got = (0 until n).map(i =>
-        new String(bytes, starts(i), ends(i) - starts(i), "UTF-8"))
-      assert(got == expected.toSeq, s"'$s'")
     }
   }
 
@@ -79,12 +62,12 @@ class Md5ParitySpec extends AnyFunSuite {
     val alphabet = "ab éθ\t\n x "
     for (_ <- 1 to 500) {
       val s = Seq.fill(rnd.nextInt(60))(alphabet(rnd.nextInt(alphabet.length))).mkString
-      val (bytes, starts, ends, n) = FastMd5.tokenize(UTF8String.fromString(s))
-      val toks0 = TextExpressions.Tok.tokens(s)
+      val t = Tokens.tokenize(UTF8String.fromString(s))
+      val toks0 = TokensSpec.regexTokens(s)
       val toks = if (toks0.length == 1 && toks0(0).isEmpty) Array.empty[String] else toks0
-      assert(n == toks.length, s"'$s'")
-      for (i <- 0 until n) {
-        assert(FastMd5.hash48(bytes, starts(i), ends(i) - starts(i)) ==
+      assert(t.n == toks.length, s"'$s'")
+      for (i <- 0 until t.n) {
+        assert(FastMd5.hash48(t.bytes, t.starts(i), t.len(i)) ==
           refHead(toks(i).getBytes("UTF-8"), 48), s"'$s' tok $i")
       }
     }

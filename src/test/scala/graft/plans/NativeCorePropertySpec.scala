@@ -89,7 +89,17 @@ class NativeCorePropertySpec extends AnyFunSuite {
     sb.toString
   }
 
+  // empty, all-whitespace and control-character-edged texts
+  private val edgeDocs = Seq("", "   ", "\t\r\n", "\u0000the fox\u001c",
+    "\u001fa\u00a0b\u3000 c \u0000", "x\r\ny\u000bx\u000cy")
+
   test("WinnowFps.compute equals the independent model on 500 random docs") {
+    for (text <- edgeDocs; k <- 1 to 3; w <- 1 to 3) {
+      val arr = WinnowFps.compute(
+        org.apache.spark.unsafe.types.UTF8String.fromString(text), k, w)
+      val got = (0 until arr.numElements()).map(arr.getUTF8String(_).toString).toSet
+      assert(got == modelFps(text, k, w), s"edge text='$text' k=$k w=$w")
+    }
     val rnd = new scala.util.Random(7L)
     for (iter <- 0 until 500) {
       val text = randomDoc(rnd)
@@ -106,8 +116,8 @@ class NativeCorePropertySpec extends AnyFunSuite {
 
   test("TermCounts.compute equals naive token counting on 500 random docs") {
     val rnd = new scala.util.Random(11L)
-    for (iter <- 0 until 500) {
-      val text = randomDoc(rnd)
+    for (iter <- -edgeDocs.length until 500) {
+      val text = if (iter < 0) edgeDocs(iter + edgeDocs.length) else randomDoc(rnd)
       val row = TermCounts.compute(org.apache.spark.unsafe.types.UTF8String.fromString(text))
       val arr = row.getArray(1)
       val got = (0 until arr.numElements()).map { i =>
@@ -125,8 +135,8 @@ class NativeCorePropertySpec extends AnyFunSuite {
 
   test("BigramCounts.compute equals naive bigram counting on 500 random docs") {
     val rnd = new scala.util.Random(12L)
-    for (iter <- 0 until 500) {
-      val text = randomDoc(rnd)
+    for (iter <- -edgeDocs.length until 500) {
+      val text = if (iter < 0) edgeDocs(iter + edgeDocs.length) else randomDoc(rnd)
       val row = BigramCounts.compute(org.apache.spark.unsafe.types.UTF8String.fromString(text))
       val arr = row.getArray(1)
       val got = (0 until arr.numElements()).map { i =>

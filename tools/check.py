@@ -2,12 +2,19 @@
 """Local stand-in for the driver's correctness gate: reads Verify output
 (parquet per query + oracle_sql.json), runs each oracle in DuckDB over the
 same sf tables, and compares rows / schema / values (column-name-sorted,
-like the driver)."""
+like the driver).
+
+Usage: check.py SF_DIR OUT_DIR [PARENT_OUT_DIR]
+
+With PARENT_OUT_DIR (a Verify output of the parent commit over the same
+SF_DIR), every query directory must also match the parent's row for row,
+in order, with the same column names -- the no-oracle rows included."""
 import sys, json, glob, os
 import duckdb
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
+parent_dir = sys.argv[3] if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
@@ -62,4 +69,30 @@ for name, r in results.items():
     flag = "OK " if r.get("hash") else ("--- " if r.get("oracle", "x") is None else "FAIL")
     print(f"{flag} {name}: {r}")
 print(f"\n{ok}/{total_oracle} oracle-checked queries pass")
-sys.exit(0 if ok == total_oracle else 1)
+passed = ok == total_oracle
+
+if parent_dir:
+    def query_dirs(d):
+        return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+
+    def dump(d, name):
+        rel = con.execute(f"SELECT * FROM '{d}/{name}/*.parquet'")
+        # repr: NaN compares equal to NaN, nested values compare structurally
+        return [c[0] for c in rel.description], repr(rel.fetchall())
+
+    names = sorted(query_dirs(out_dir) | query_dirs(parent_dir))
+    same = 0
+    for name in names:
+        try:
+            a, b = dump(out_dir, name), dump(parent_dir, name)
+            detail = "" if a == b else (
+                f"cols {a[0]} vs {b[0]}" if a[0] != b[0] else "rows differ")
+        except Exception as e:
+            detail = f"read: {e}"
+        if detail:
+            print(f"DIFF {name}: {detail}")
+        else:
+            same += 1
+    print(f"{same}/{len(names)} query outputs row-identical to the parent")
+    passed = passed and same == len(names)
+sys.exit(0 if passed else 1)
