@@ -68,8 +68,10 @@ final case class PageResult(data: Seq[Row], pageInfo: PageInfo)
   * (src/utils/pagenation.ts:60-78) — O(offset) and single-node. At 100 TB the
   * only scale-safe equivalent is keyset pagination: a pushdown-friendly range
   * predicate on the total order `(orderKey <dir>, slug <dir>)` plus
-  * `LIMIT pageSize+1`, so page cost is O(page) regardless of depth and the
-  * predicate reaches the parquet scan.
+  * `LIMIT pageSize+1`. Memory and transfer per page are O(page) and do not
+  * grow with depth. Each page is still one top-K scan of the filtered
+  * source: the predicate reaches the parquet scan, but row groups are
+  * skipped only where the order key is clustered.
   */
 object Pagination {
 

@@ -154,9 +154,10 @@ final class QueryBuilder private[api] (catalog: Catalog, src: SourceDef) {
     else f.op match {
       case Eq         => c === lit(f.values.head).try_cast(dt)
       case StartsWith => c.cast(StringType).startsWith(f.values.head)
-      // OR-of-typed-equalities: pushdown-friendly and keeps the column typed.
-      case In         =>
-        f.values.map(v => c === lit(v).try_cast(dt)).reduce(_ || _)
+      // One typed IN over the try_cast values: pushed down as `In(...)`, and
+      // an unparsable value (NULL) matches nothing. A left-deep OR of
+      // equalities overflowed the analyzer's stack at ~1,000 values.
+      case In         => c.isin(f.values.map(v => lit(v).try_cast(dt)): _*)
     }
 
   private def ownPredicate(df: DataFrame, f: QFilter): Column = {

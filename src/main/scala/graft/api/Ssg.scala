@@ -17,9 +17,10 @@ import scala.collection.immutable.ListMap
   * query execution); [[writeAllPages]] is the natural Spark-side extension a
   * static site build actually runs — walk the cursor chain and materialize
   * every page as `<name>-NNNN.json`, each page self-describing (its pageInfo
-  * carries the cursors linking it to its neighbors). Page cost is O(page)
-  * via keyset pagination, so a build over a 100 TB source streams pages
-  * without ever materializing the full result.
+  * carries the cursors linking it to its neighbors). Keyset pagination keeps
+  * memory per page O(page), so a build over a 100 TB source streams pages
+  * without ever materializing the full result; each page is still one
+  * top-K scan of the filtered source.
   */
 object Ssg {
 
@@ -48,8 +49,9 @@ object Ssg {
     *
     * The caller's builder is copied, never mutated — rerunning the same
     * builder regenerates the full site, not a resume from a stale cursor.
-    * Each page is an independent O(page) keyset query, so the build's memory
-    * is one page regardless of source size. Exceeding `maxPages` (a runaway
+    * Each page is an independent keyset query whose result is one page, so
+    * the build's memory is one page regardless of source size (each query
+    * still scans the filtered source once). Exceeding `maxPages` (a runaway
     * guard, not a sampling knob) throws rather than silently shipping a
     * truncated site.
     */

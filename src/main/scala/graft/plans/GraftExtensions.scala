@@ -44,6 +44,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - [[LateKernelMaterialization]] (LateKernels.scala): a top-K evaluates
   *    graft kernels only on the rows it keeps
   *  - [[PreAggregateGroupingSets]] (GroupingSetRules.scala)
+  *
+  * Physical rules, injected as a pre-columnar-transition rule (it runs just
+  * before `CollapseCodegenStages`, with or without adaptive execution):
+  *  - [[ParameterizeFilterLiterals]] (ParamLiterals.scala): primitive
+  *    literals under a `FilterExec` comparison or `In` read their value from
+  *    the generated class's `references`, so a request shape compiles once
+  *    and not once per slug or cursor value
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -60,6 +67,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => LateKernelMaterialization)
     ext.injectOptimizerRule(_ => RiJoinElimination)
     ext.injectOptimizerRule(_ => PreAggregateGroupingSets)
+    ext.injectColumnar(_ => ParameterizeFilterLiterals.AsColumnarRule)
   }
 }
 

@@ -18,7 +18,7 @@ class PlanPropertiesSpec extends SparkSpec {
   test("the ACTUAL filter predicates reach the parquet scan, not just IsNotNull") {
     val expected = Map(
       "q_filter_eq"         -> "EqualTo(o_orderstatus",
-      "q_filter_in"         -> "EqualTo(o_orderpriority", // OR-of-equalities
+      "q_filter_in"         -> "In(o_orderpriority, [1-URGENT,2-HIGH])", // one typed IN
       "q_filter_startswith" -> "StringStartsWith(p_name",
       "q_page_after"        -> "GreaterThan(c_name")
     for ((q, frag) <- expected) {
