@@ -142,6 +142,14 @@ object SparkEntry {
       .orderBy("query_id", "rank")
   }
 
+  /** DuckDB twin of graft's tokenizer ([[plans.Tokens]]): `text`'s tokens,
+    * edge whitespace stripped, split on whitespace runs. Every twin writes
+    * whitespace as `[\s\v]` (`[^\s\v]` for non-whitespace), the set of
+    * [[plans.Tokens.isWs]] and Java's `\s`: RE2's `\s` lacks the vertical
+    * tab (U+000B). */
+  private val TokensTwinSql =
+    """regexp_split_to_array(regexp_replace(text, '^[\s\v]+|[\s\v]+$', '', 'g'), '[\s\v]+')"""
+
   // DuckDB twins shared by several rows: one string per certified group,
   // zero drift surface. A *_sorted or *_bucketed row's twin IS its raw
   // row's twin: the layout rewrite is row-preserving, so identical hashes
@@ -188,8 +196,8 @@ object SparkEntry {
   // identical BM25 algebra: Lucene-smoothed idf, k1=1.2 b=0.75, per-term
   // weights cast to DECIMAL(18,6) before the sum (exact, order-free)
   private val Bm25TwinSql =
-    """WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
+    raw"""WITH toks AS (
+           SELECT doc_id, ${TokensTwinSql} AS w
            FROM documents WHERE text IS NOT NULL),
          terms AS (SELECT doc_id, len(w) AS ntok, unnest(w) AS term FROM toks),
          tf AS (
@@ -328,8 +336,7 @@ object SparkEntry {
       // RiRulesSpec), so page cost is O(page) however large the dimension —
       // the 100 TB shape for paged joined listings.
       val c = Tables.catalog(s, dir)
-      val joined = Relations.flatJoin(c("orders").df, c("customer").df,
-        "o_custkey", "c_custkey", broadcastForeign = true)
+      val joined = Relations.flatJoin(c("orders").df, c("customer").df, "o_custkey", "c_custkey")
       Pagination.pageDf(joined, orderField = "o_totalprice", slugField = "o_orderkey",
           descending = false, pageSize = 20,
           cursor = Some(Cursor("o_totalprice", "50000.0", "1000")), direction = After)
@@ -338,14 +345,14 @@ object SparkEntry {
 
     // ---- relation joins (SURVEY §2 #12-#17) ------------------------------
     // Flat (SQL-shaped) variants of the six relation kinds; the nested
-    // (API-faithful) shapes are covered by RelationsSpec. Small dims broadcast.
+    // (API-faithful) shapes are covered by RelationsSpec. Spark's size
+    // estimate and AQE choose each join's strategy: no side is forced.
     Q("q_join_belongsto", Some(
       """SELECT o_orderkey, o_totalprice, c_name, c_mktsegment
          FROM orders JOIN customer ON o_custkey = c_custkey
          ORDER BY o_orderkey LIMIT 200"""))((s, dir) => {
       val c = Tables.catalog(s, dir)
-      Relations.flatJoin(c("orders").df, c("customer").df, "o_custkey", "c_custkey",
-          broadcastForeign = true)
+      Relations.flatJoin(c("orders").df, c("customer").df, "o_custkey", "c_custkey")
         .select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
         .orderBy("o_orderkey").limit(200)
     }),
@@ -354,8 +361,7 @@ object SparkEntry {
          FROM supplier JOIN nation ON s_nationkey = n_nationkey
          ORDER BY s_suppkey"""))((s, dir) => {
       val c = Tables.catalog(s, dir)
-      Relations.flatJoin(c("supplier").df, c("nation").df, "s_nationkey", "n_nationkey",
-          broadcastForeign = true)
+      Relations.flatJoin(c("supplier").df, c("nation").df, "s_nationkey", "n_nationkey")
         .select("s_suppkey", "s_name", "n_name")
         .orderBy("s_suppkey")
     }),
@@ -377,7 +383,7 @@ object SparkEntry {
       // columns): exercises the explode+join belongsToMany path.
       val base = c("orders").df.withColumn("custkeys", array(col("o_custkey")))
       base.select(col("o_orderkey"), explode(col("custkeys")).as("__lk"))
-        .join(broadcast(c("customer").df), col("__lk") === col("c_custkey"))
+        .join(c("customer").df, col("__lk") === col("c_custkey"))
         .select("o_orderkey", "c_custkey", "c_name")
         .orderBy("o_orderkey").limit(200)
     }),
@@ -388,8 +394,7 @@ object SparkEntry {
          ORDER BY s_suppkey"""))((s, dir) => {
       val c = Tables.catalog(s, dir)
       val rel = c("supplier").relations("region").asInstanceOf[HasOneThrough]
-      Relations.flatThroughJoin(c("supplier").df, c("nation").df, c("region").df, rel,
-          broadcastThrough = true, broadcastTarget = true)
+      Relations.flatThroughJoin(c("supplier").df, c("nation").df, c("region").df, rel)
         .select("s_suppkey", "s_name", "r_name")
         .orderBy("s_suppkey")
     }),
@@ -432,8 +437,7 @@ object SparkEntry {
          ORDER BY r_name, c_custkey"""))((s, dir) => {
       val c = Tables.catalog(s, dir)
       val rel = c("region").relations("customers").asInstanceOf[HasManyThrough]
-      Relations.flatThroughJoin(c("region").df, c("nation").df, c("customer").df, rel,
-          broadcastThrough = true)
+      Relations.flatThroughJoin(c("region").df, c("nation").df, c("customer").df, rel)
         .select("r_name", "c_custkey", "c_name")
         .orderBy("r_name", "c_custkey")
     }),
@@ -524,8 +528,8 @@ object SparkEntry {
         .orderBy("o_custkey", "rn")
     }),
     Q("q_text_topwords", Some(
-      """SELECT word, COUNT(*) AS cnt FROM (
-           SELECT unnest(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS word FROM documents)
+      raw"""SELECT word, COUNT(*) AS cnt FROM (
+           SELECT unnest(${TokensTwinSql}) AS word FROM documents)
          GROUP BY word ORDER BY cnt DESC, word LIMIT 50"""))((s, dir) => {
       // corpus vocabulary profile. r21: per-doc DISTINCT terms with
       // multiplicities from the native scan-side TermCounts (the repo-wide
@@ -924,9 +928,9 @@ object SparkEntry {
     Q("q_pipeline_corpus", Some(
       // the same langid cascade + quality expression as their standalone
       // oracles, composed: 'en' = not the de-branch, c_en >= later languages
-      """WITH toks AS (
+      raw"""WITH toks AS (
            SELECT doc_id, lang, n_chars, text,
-                  regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+                  ${TokensTwinSql} AS t
            FROM documents
          ), feat AS (
            SELECT doc_id, lang, n_chars, text,
@@ -995,10 +999,10 @@ object SparkEntry {
       operators.Dedup.simhashed(Tables.load(s, dir, "documents"))
         .orderBy("doc_id").limit(200)),
     Q("q_text_stats", Some(
-      """SELECT doc_id, length(text) AS n_chars_calc,
-                len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS n_tokens,
-                round(CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-                      / len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')), 4) AS avg_token_len
+      raw"""SELECT doc_id, length(text) AS n_chars_calc,
+                len(${TokensTwinSql}) AS n_tokens,
+                round(CAST(length(regexp_replace(text, '[\s\v]+', '', 'g')) AS DOUBLE)
+                      / len(${TokensTwinSql}), 4) AS avg_token_len
          FROM documents ORDER BY doc_id"""))((s, dir) => {
       val t = functions.TextFunctions
       Tables.load(s, dir, "documents")
@@ -1010,7 +1014,7 @@ object SparkEntry {
     }),
     Q("q_text_bpe", Some(
       """SELECT doc_id,
-                len(regexp_extract_all(text, '[a-z]+|[A-Z][a-z]*|[0-9]|[^a-zA-Z0-9\s]')) AS n_bpe_tokens
+                len(regexp_extract_all(text, '[a-z]+|[A-Z][a-z]*|[0-9]|[^a-zA-Z0-9\s\v]')) AS n_bpe_tokens
          FROM documents ORDER BY doc_id"""))((s, dir) =>
       Tables.load(s, dir, "documents")
         .select(col("doc_id"),
@@ -1019,9 +1023,9 @@ object SparkEntry {
     Q("q_text_winnow", Some(
       // identical winnowing algebra: md5 5-gram hashes, min per window of 4
       // full windows only, distinct per doc
-      """WITH toks AS (
+      raw"""WITH toks AS (
            SELECT doc_id,
-                  regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+                  ${TokensTwinSql} AS t
            FROM documents),
          grams AS (
            SELECT doc_id, p, md5(array_to_string(list_slice(t, p, p + 4), ' ')) AS h,
@@ -1051,7 +1055,7 @@ object SparkEntry {
           Tables.load(s, dir, "documents").repartitionByRange(col("doc_id")), k = 5, w = 4)
         .sortWithinPartitions("doc_id", "fp")),
     Q("q_dedup_passage", Some(
-      """WITH aug AS (
+      raw"""WITH aug AS (
            SELECT doc_id,
                   text || CASE WHEN doc_id % 10 = 0
                                THEN ' copied canonical passage tokens appear verbatim in many documents across this corpus'
@@ -1059,7 +1063,7 @@ object SparkEntry {
            FROM documents WHERE doc_id < 1000),
          toks AS (
            SELECT doc_id,
-                  regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+                  ${TokensTwinSql} AS t
            FROM aug),
          grams AS (
            SELECT doc_id, p, md5(array_to_string(list_slice(t, p, p + 4), ' ')) AS h,
@@ -1099,11 +1103,11 @@ object SparkEntry {
         .orderBy("id_a", "id_b")
     }),
     Q("q_text_quality", Some(
-      """SELECT doc_id,
-                round(LEAST(CAST(len(list_filter(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
+      raw"""SELECT doc_id,
+                round(LEAST(CAST(len(list_filter(${TokensTwinSql},
                                   x -> x IN ('the','a','of','and','to','in','is','it'))) AS DOUBLE)
-                            / len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) * 5.0, 1.0) * 0.5
-                    + LEAST(CAST(len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS DOUBLE) / 100.0, 1.0) * 0.5,
+                            / len(${TokensTwinSql}) * 5.0, 1.0) * 0.5
+                    + LEAST(CAST(len(${TokensTwinSql}) AS DOUBLE) / 100.0, 1.0) * 0.5,
                     4) AS quality
          FROM documents ORDER BY doc_id"""))((s, dir) =>
       Tables.load(s, dir, "documents")
@@ -1111,9 +1115,9 @@ object SparkEntry {
           functions.TextFunctions.qualityScore(col("text")).as("quality"))
         .orderBy("doc_id")),
     Q("q_text_repetition", Some(
-      """WITH t AS (
+      raw"""WITH t AS (
            SELECT doc_id,
-                  regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
+                  ${TokensTwinSql} AS w
            FROM documents),
          b AS (
            SELECT doc_id, w,
@@ -1143,24 +1147,24 @@ object SparkEntry {
       // identical planting, tokenization, symbol counting (non-overlapping
       // "..." = regexp_extract_all semantics), line split (string_split
       // keeps trailing empties), and raw-value gate
-      """WITH aug AS (
+      raw"""WITH aug AS (
            SELECT doc_id,
              CASE WHEN doc_id % 7 = 0 THEN '- ' || replace(t, chr(10), chr(10) || '- ')
                   WHEN doc_id % 11 = 0 THEN replace(t, chr(10), '...' || chr(10)) || '...'
                   WHEN doc_id % 13 = 0 THEN t || chr(10) || '## ## ## ## ## ## ## ##'
                   ELSE t END AS text
            FROM (SELECT doc_id,
-                        regexp_replace(text, '(\S+\s+\S+)\s+', '\1' || chr(10), 'g') AS t
+                        regexp_replace(text, '([^\s\v]+[\s\v]+[^\s\v]+)[\s\v]+', '\1' || chr(10), 'g') AS t
                  FROM documents)),
          tok AS (
            SELECT doc_id, text,
-                  regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w,
+                  ${TokensTwinSql} AS w,
                   string_split(text, chr(10)) AS ln
            FROM aug),
          st AS (
            SELECT doc_id,
              len(w) AS n_tokens,
-             CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE) / len(w) AS mean_word_len,
+             CAST(length(regexp_replace(text, '[\s\v]+', '', 'g')) AS DOUBLE) / len(w) AS mean_word_len,
              CAST(length(text) - length(replace(text, '#', ''))
                   + len(regexp_extract_all(text, '\.\.\.'))
                   + length(text) - length(replace(text, '…', '')) AS DOUBLE) / len(w) AS symbol_ratio,
@@ -1221,12 +1225,12 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     Q("q_quality_gate", Some(
-"""WITH q AS (
+raw"""WITH q AS (
            SELECT doc_id, lang,
-                  round(LEAST(CAST(len(list_filter(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
+                  round(LEAST(CAST(len(list_filter(${TokensTwinSql},
                                     x -> x IN ('the','a','of','and','to','in','is','it'))) AS DOUBLE)
-                              / len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) * 5.0, 1.0) * 0.5
-                      + LEAST(CAST(len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS DOUBLE) / 100.0, 1.0) * 0.5,
+                              / len(${TokensTwinSql}) * 5.0, 1.0) * 0.5
+                      + LEAST(CAST(len(${TokensTwinSql}) AS DOUBLE) / 100.0, 1.0) * 0.5,
                       4) AS quality
            FROM documents),
          r AS (
@@ -1243,14 +1247,14 @@ object SparkEntry {
           score = col("quality"), cohort = Seq(col("lang")), minPercentile = 0.5)
         .orderBy("doc_id")),
     Q("q_token_budget", Some(
-      """WITH q AS (
+      raw"""WITH q AS (
            SELECT doc_id, source,
-                  round(LEAST(CAST(len(list_filter(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
+                  round(LEAST(CAST(len(list_filter(${TokensTwinSql},
                                     x -> x IN ('the','a','of','and','to','in','is','it'))) AS DOUBLE)
-                              / len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) * 5.0, 1.0) * 0.5
-                      + LEAST(CAST(len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS DOUBLE) / 100.0, 1.0) * 0.5,
+                              / len(${TokensTwinSql}) * 5.0, 1.0) * 0.5
+                      + LEAST(CAST(len(${TokensTwinSql}) AS DOUBLE) / 100.0, 1.0) * 0.5,
                       4) AS quality,
-                  len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS n_tokens
+                  len(${TokensTwinSql}) AS n_tokens
            FROM documents),
          c AS (
            SELECT doc_id, source, n_tokens,
@@ -1271,9 +1275,9 @@ object SparkEntry {
         .select("doc_id", "source", "n_tokens")
         .orderBy("doc_id")),
     Q("q_pack_sequences", Some(
-      """WITH t AS (
+      raw"""WITH t AS (
            SELECT doc_id,
-                  len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS tok
+                  len(${TokensTwinSql}) AS tok
            FROM documents)
          SELECT doc_id,
                 CAST(doc_id % 8 AS INTEGER) AS shard,
@@ -1332,8 +1336,8 @@ object SparkEntry {
       // (count desc, token asc), OOV → '<unk>', V = |vocab| + 1,
       // P(w2|w1) = (c(w1,w2) + 0.1) / (c(w1,·) + 0.1·V), per-bigram ln P
       // cast to DECIMAL(18,6) before the sum
-      """WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
+      raw"""WITH toks AS (
+           SELECT doc_id, ${TokensTwinSql} AS w
            FROM documents WHERE text IS NOT NULL),
          train_toks AS (SELECT doc_id, w FROM toks WHERE doc_id % 2 = 0),
          uni AS (
@@ -1381,8 +1385,8 @@ object SparkEntry {
     Q("q_pipeline_curate", Some(
       // the full perplexity CTE (q_text_perplexity's) extended by the
       // per-language percent_rank bucketing — identical LM algebra
-      """WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
+      raw"""WITH toks AS (
+           SELECT doc_id, ${TokensTwinSql} AS w
            FROM documents WHERE text IS NOT NULL),
          train_toks AS (SELECT doc_id, w FROM toks WHERE doc_id % 2 = 0),
          uni AS (
@@ -1458,8 +1462,8 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     Q("q_text_tfidf", Some(
-      """WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
+      raw"""WITH toks AS (
+           SELECT doc_id, ${TokensTwinSql} AS w
            FROM documents WHERE text IS NOT NULL),
          terms AS (SELECT doc_id, len(w) AS ntok, unnest(w) AS term FROM toks),
          tf AS (
@@ -1491,8 +1495,8 @@ object SparkEntry {
     Q("q_vocab_coverage", Some(
       // same tokenizer; rank/cum over (n desc, term) — the total order both
       // engines agree on; cum_n cast back to BIGINT (DuckDB sums to HUGEINT)
-      """WITH toks AS (
-           SELECT regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
+      raw"""WITH toks AS (
+           SELECT ${TokensTwinSql} AS w
            FROM documents WHERE text IS NOT NULL),
          terms AS (SELECT unnest(w) AS term FROM toks),
          freq AS (SELECT term, count(*) AS n FROM terms WHERE term <> '' GROUP BY term),
@@ -1615,13 +1619,13 @@ object SparkEntry {
     Q("q_corpus_card", Some(
       // same tokenizer, same quality formula (q_text_quality's), decimal
       // quality sum, quantile_cont median, md5 distinct — one GROUP BY
-      """WITH t AS (
+      raw"""WITH t AS (
            SELECT lang, text, n_chars,
-                  len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS ntok,
-                  round(LEAST(CAST(len(list_filter(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
+                  len(${TokensTwinSql}) AS ntok,
+                  round(LEAST(CAST(len(list_filter(${TokensTwinSql},
                                     x -> x IN ('the','a','of','and','to','in','is','it'))) AS DOUBLE)
-                              / len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) * 5.0, 1.0) * 0.5
-                      + LEAST(CAST(len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS DOUBLE) / 100.0, 1.0) * 0.5,
+                              / len(${TokensTwinSql}) * 5.0, 1.0) * 0.5
+                      + LEAST(CAST(len(${TokensTwinSql}) AS DOUBLE) / 100.0, 1.0) * 0.5,
                       4) AS quality
            FROM documents)
          SELECT lang, count(*) AS n_docs,
@@ -1702,13 +1706,13 @@ object SparkEntry {
       // the first 50-char bucket whose running count reaches ceil(n/2),
       // reported as the bucket midpoint. floor() before the INT cast —
       // DuckDB's double→INT cast ROUNDS where Spark's truncates.
-      """WITH t AS (
+      raw"""WITH t AS (
            SELECT lang, text, n_chars,
-                  len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS ntok,
-                  round(LEAST(CAST(len(list_filter(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
+                  len(${TokensTwinSql}) AS ntok,
+                  round(LEAST(CAST(len(list_filter(${TokensTwinSql},
                                     x -> x IN ('the','a','of','and','to','in','is','it'))) AS DOUBLE)
-                              / len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) * 5.0, 1.0) * 0.5
-                      + LEAST(CAST(len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS DOUBLE) / 100.0, 1.0) * 0.5,
+                              / len(${TokensTwinSql}) * 5.0, 1.0) * 0.5
+                      + LEAST(CAST(len(${TokensTwinSql}) AS DOUBLE) / 100.0, 1.0) * 0.5,
                       4) AS quality
            FROM documents),
          agg AS (
@@ -1817,7 +1821,7 @@ object SparkEntry {
            FROM documents),
          doms AS (
            SELECT list_transform(
-                    regexp_extract_all(t, '(?i:https?)://(?:[^/\s]*@)?([A-Za-z0-9-]+(?:\.[A-Za-z0-9-]+)*)', 1),
+                    regexp_extract_all(t, '(?i:https?)://(?:[^/\s\v]*@)?([A-Za-z0-9-]+(?:\.[A-Za-z0-9-]+)*)', 1),
                     d -> lower(d)) AS ds
            FROM aug),
          kept AS (
@@ -1860,9 +1864,9 @@ object SparkEntry {
       // Same contract as TextFunctions.langId: marker-token counts per
       // language, argmax with ties → first language in sorted-code order
       // (the CASE cascade checks de,en,es,fr,zh with >=), zero hits → 'und'.
-      """WITH toks AS (
+      raw"""WITH toks AS (
            SELECT doc_id,
-                  regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+                  ${TokensTwinSql} AS t
            FROM documents
          ), c AS (
            SELECT doc_id,
@@ -1892,13 +1896,13 @@ object SparkEntry {
           functions.TextFunctions.fingerprint(col("text")).as("fingerprint"))
         .orderBy("doc_id").limit(200)),
     Q("q_decontaminate", Some(
-      """WITH sh AS (
+      raw"""WITH sh AS (
            SELECT doc_id,
                   list_distinct(CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')]
                        ELSE list_transform(range(1, len(toks) - 2),
                                            i -> array_to_string(list_slice(toks, i, i + 3), ' '))
                   END) AS sh
-           FROM (SELECT doc_id, regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS toks FROM documents)
+           FROM (SELECT doc_id, ${TokensTwinSql} AS toks FROM documents)
          ),
          bench AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 50 = 0),
          grams AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 50 <> 0),
@@ -1962,13 +1966,13 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     Q("q_dedup_clusters", Some(
-      """WITH RECURSIVE sh AS (
+      raw"""WITH RECURSIVE sh AS (
            SELECT doc_id,
                   list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
                        ELSE list_transform(range(1, len(toks) - 1),
                                            i -> array_to_string(list_slice(toks, i, i + 2), ' '))
                   END) AS sh
-           FROM (SELECT doc_id, regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS toks FROM documents)
+           FROM (SELECT doc_id, ${TokensTwinSql} AS toks FROM documents)
            WHERE doc_id < 100
          ),
          e AS (
@@ -2020,10 +2024,10 @@ object SparkEntry {
           defaultFraction = 0.1)
         .orderBy("doc_id")),
     Q("q_text_chunks", Some(
-      """WITH t AS (
+      raw"""WITH t AS (
            SELECT doc_id,
-                  regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w,
-                  len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS n
+                  ${TokensTwinSql} AS w,
+                  len(${TokensTwinSql}) AS n
            FROM documents WHERE text IS NOT NULL),
          s AS (SELECT doc_id, w, n, unnest(range(0, greatest(n, 1), 4)) AS start FROM t)
          SELECT doc_id,
@@ -2040,7 +2044,7 @@ object SparkEntry {
         .orderBy("doc_id", "chunk_id")),
     Q("q_line_dedup", Some(
       """WITH aug AS (
-           SELECT doc_id, regexp_replace(text, '(\S+\s+\S+)\s+', '\1' || chr(10), 'g') AS t
+           SELECT doc_id, regexp_replace(text, '([^\s\v]+[\s\v]+[^\s\v]+)[\s\v]+', '\1' || chr(10), 'g') AS t
            FROM documents),
          l AS (
            SELECT doc_id,
@@ -2070,7 +2074,7 @@ object SparkEntry {
     }),
     Q("q_line_filter", Some(
       """WITH aug AS (
-           SELECT doc_id, regexp_replace(text, '(\S+\s+\S+)\s+', '\1' || chr(10), 'g') AS t
+           SELECT doc_id, regexp_replace(text, '([^\s\v]+[\s\v]+[^\s\v]+)[\s\v]+', '\1' || chr(10), 'g') AS t
            FROM documents),
          l AS (
            SELECT doc_id,
@@ -2125,7 +2129,7 @@ object SparkEntry {
            FROM san),
          scored AS (
            SELECT doc_id, ord,
-             trim(regexp_replace(regexp_replace(b, '<[^>]*>', ' ', 'g'), '\s+', ' ', 'g')) AS t,
+             trim(regexp_replace(regexp_replace(b, '<[^>]*>', ' ', 'g'), '[\s\v]+', ' ', 'g')) AS t,
              coalesce(list_sum(list_transform(regexp_extract_all(b, '(?is)<a\b[^>]*>(.*?)</a>', 1), x -> length(x))), 0) AS lc
            FROM blk),
          gated AS (
@@ -2184,7 +2188,7 @@ object SparkEntry {
            FROM san),
          scored AS (
            SELECT doc_id, ord,
-             trim(regexp_replace(regexp_replace(b, '<[^>]*>', ' ', 'g'), '\s+', ' ', 'g')) AS t,
+             trim(regexp_replace(regexp_replace(b, '<[^>]*>', ' ', 'g'), '[\s\v]+', ' ', 'g')) AS t,
              coalesce(list_sum(list_transform(regexp_extract_all(b, '(?is)<a\b[^>]*>(.*?)</a>', 1), x -> length(x))), 0) AS lc
            FROM blk),
          gated AS (
@@ -2245,8 +2249,8 @@ object SparkEntry {
                   regexp_replace(
                     trim(regexp_replace(lower(nfc_normalize(
                       (CASE WHEN doc_id % 3 = 0 THEN upper(text) ELSE text END)
-                        || chr(9) || ' tail marker ')), '\s+', ' ', 'g')),
-                    '(\S+\s+\S+)\s+', '\1' || chr(10), 'g') AS t
+                        || chr(9) || ' tail marker ')), '[\s\v]+', ' ', 'g')),
+                    '([^\s\v]+[\s\v]+[^\s\v]+)[\s\v]+', '\1' || chr(10), 'g') AS t
            FROM documents),
          l AS (
            SELECT doc_id,
@@ -2332,8 +2336,8 @@ object SparkEntry {
                     || '  caf' || chr(101) || chr(769) || chr(9) || ' x ' AS t
            FROM documents)
          SELECT doc_id,
-                trim(regexp_replace(lower(nfc_normalize(t)), '\s+', ' ', 'g')) AS norm,
-                CAST(length(trim(regexp_replace(lower(nfc_normalize(t)), '\s+', ' ', 'g'))) AS INTEGER) AS n_norm_chars
+                trim(regexp_replace(lower(nfc_normalize(t)), '[\s\v]+', ' ', 'g')) AS norm,
+                CAST(length(trim(regexp_replace(lower(nfc_normalize(t)), '[\s\v]+', ' ', 'g'))) AS INTEGER) AS n_norm_chars
          FROM planted ORDER BY doc_id"""))((s, dir) => {
       // Canonical normalization before any hash-based operator: NFC
       // (native UnicodeNormalize — JDK and DuckDB both implement UAX#15)
@@ -2351,13 +2355,13 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     Q("q_dedup_ngram", Some(
-      """WITH sh AS (
+      raw"""WITH sh AS (
            SELECT doc_id,
                   list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
                        ELSE list_transform(range(1, len(toks) - 1),
                                            i -> array_to_string(list_slice(toks, i, i + 2), ' '))
                   END) AS sh
-           FROM (SELECT doc_id, regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS toks FROM documents)
+           FROM (SELECT doc_id, ${TokensTwinSql} AS toks FROM documents)
          )
          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                 round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -2660,13 +2664,13 @@ object SparkEntry {
     Q("q_split_leakage", Some(
       // the q_dedup_clusters recursive-CTE component joined to the
       // q_sample_split md5 CASE, keyed by the component instead of the doc
-      """WITH RECURSIVE sh AS (
+      raw"""WITH RECURSIVE sh AS (
            SELECT doc_id,
                   list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
                        ELSE list_transform(range(1, len(toks) - 1),
                                            i -> array_to_string(list_slice(toks, i, i + 2), ' '))
                   END) AS sh
-           FROM (SELECT doc_id, regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS toks FROM documents)
+           FROM (SELECT doc_id, ${TokensTwinSql} AS toks FROM documents)
            WHERE doc_id < 100
          ),
          e AS (
@@ -2716,7 +2720,7 @@ object SparkEntry {
       // tokenizer, same md5-48bit gram hash, same >1 global count, same
       // gap-window span merge (new span iff pos > prev + k), same
       // min-length gate — integer outputs, exact cross-engine
-      """WITH docs AS (
+      raw"""WITH docs AS (
            SELECT doc_id,
                   text || CASE WHEN doc_id % 10 = 0
                     THEN ' exact substring dedup planted passage tokens repeat verbatim across documents sharing this sixteen token marker tail'
@@ -2724,7 +2728,7 @@ object SparkEntry {
            FROM documents WHERE doc_id < 1000 AND text IS NOT NULL),
          toks AS (
            SELECT doc_id,
-                  list_filter(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
+                  list_filter(${TokensTwinSql},
                               t -> t <> '') AS tw
            FROM docs),
          occ AS (
@@ -2874,9 +2878,9 @@ object SparkEntry {
       // exact model twin: bucket = first 12 md5 hex chars as int mod 512,
       // weight = (j*1103515245 + 12345) % 2001 - 1000 milli-units, logit =
       // integer sum over gram occurrences (unigrams + bigrams)
-      """WITH toks AS (
+      raw"""WITH toks AS (
            SELECT doc_id,
-                  list_filter(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
+                  list_filter(${TokensTwinSql},
                               t -> t <> '') AS tw
            FROM documents WHERE text IS NOT NULL),
          grams AS (

@@ -9,9 +9,9 @@ import graft.api._
   *
   * Relations mirror staticql's config-declared relation kinds
   * (reference: README "relations", src/SourceConfigResolver.ts:22-31) mapped
-  * onto the star schema. Small dimensions (region, nation, supplier, part,
-  * customer) carry a broadcast hint: at 100 TB the facts (lineitem, orders,
-  * events, documents) are huge but these dims stay broadcastable.
+  * onto the star schema. No source carries a broadcast hint: customer, part
+  * and supplier grow with the data, so Spark's size estimate and AQE choose
+  * each join's strategy.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -102,10 +102,10 @@ object Tables {
     * are left at Spark's defaults (128 MB splits, 4 MB open cost — right
     * for real data) unless SPARK_GRAFT_MAX_PARTITION_BYTES overrides; the
     * local harnesses use [[harnessSessionFor]], which adds the
-    * small-split tuning their 15-600 MB local inputs need (Verify builds
-    * its own minimal session — correctness is split-size-independent).
-    * AQE re-plans partition counts on a real cluster, so the rest scales
-    * out unchanged.
+    * small-split tuning their 15-600 MB local inputs need. Verify and the
+    * shared spec session run on this one (correctness is
+    * split-size-independent). AQE re-plans partition counts on a real
+    * cluster, so the rest scales out unchanged.
     */
   def session(master: String = defaultMaster): SparkSession =
     build(master, sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES"))
@@ -239,29 +239,29 @@ object Tables {
             "supplier" -> BelongsTo("supplier", "supplier", "l_suppkey", "s_suppkey"),
             "order" -> BelongsTo("order", "orders", "l_orderkey", "o_orderkey")))
       }) ++ Seq(
-      safe("region")(SourceDef("region", t("region"), slugField = "r_regionkey", broadcastHint = true,
+      safe("region")(SourceDef("region", t("region"), slugField = "r_regionkey",
         relations = Map(
           "nations" -> HasMany("nations", "nation", "r_regionkey", "n_regionkey"),
           "customers" -> HasManyThrough("customers", "customer", "nation",
             sourceLocalKey = "r_regionkey", throughForeignKey = "n_regionkey",
             throughLocalKey = "n_nationkey", targetForeignKey = "c_nationkey")))),
-      safe("nation")(SourceDef("nation", t("nation"), slugField = "n_nationkey", broadcastHint = true,
+      safe("nation")(SourceDef("nation", t("nation"), slugField = "n_nationkey",
         relations = Map(
           "region" -> BelongsTo("region", "region", "n_regionkey", "r_regionkey")))),
-      safe("customer")(SourceDef("customer", t("customer"), slugField = "c_custkey", broadcastHint = true,
+      safe("customer")(SourceDef("customer", t("customer"), slugField = "c_custkey",
         relations = Map(
           "nation" -> HasOne("nation", "nation", "c_nationkey", "n_nationkey"),
           "orders" -> HasMany("orders", "orders", "c_custkey", "o_custkey"),
           "region" -> HasOneThrough("region", "region", "nation",
             sourceLocalKey = "c_nationkey", throughForeignKey = "n_nationkey",
             throughLocalKey = "n_regionkey", targetForeignKey = "r_regionkey")))),
-      safe("supplier")(SourceDef("supplier", t("supplier"), slugField = "s_suppkey", broadcastHint = true,
+      safe("supplier")(SourceDef("supplier", t("supplier"), slugField = "s_suppkey",
         relations = Map(
           "nation" -> HasOne("nation", "nation", "s_nationkey", "n_nationkey"),
           "region" -> HasOneThrough("region", "region", "nation",
             sourceLocalKey = "s_nationkey", throughForeignKey = "n_nationkey",
             throughLocalKey = "n_regionkey", targetForeignKey = "r_regionkey")))),
-      safe("part")(SourceDef("part", t("part"), slugField = "p_partkey", broadcastHint = true,
+      safe("part")(SourceDef("part", t("part"), slugField = "p_partkey",
         relations = Map(
           "lineitems" -> HasMany("lineitems", "lineitem", "p_partkey", "l_partkey")))),
       safe("orders")(SourceDef("orders", t("orders"), slugField = "o_orderkey",

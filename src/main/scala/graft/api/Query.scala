@@ -20,7 +20,6 @@ final case class QFilter(field: String, op: FilterOp, values: Seq[String])
   * `indexedFields = None` means every field is filterable (columnar parquet *is*
   * the index); `Some(set)` reproduces the reference's "needs index" guard
   * (reference: src/QueryBuilder.ts:316-327).
-  * `broadcastHint = true` marks a small dimension that should broadcast in joins.
   * `indexDepths` carries per-field prefix depth from config `indexDepth`
   * (reference: src/IndexConfigFactory.ts:46-59); `customIndexFields` names the
   * config `customIndex` entries, whose value columns come from name→Column
@@ -36,7 +35,6 @@ final case class SourceDef(
     slugField: String = "slug",
     relations: Map[String, Relation] = Map.empty,
     indexedFields: Option[Set[String]] = None,
-    broadcastHint: Boolean = false,
     indexDepths: Map[String, Int] = Map.empty,
     customIndexFields: Set[String] = Set.empty
 ) {
@@ -280,7 +278,7 @@ final class QueryBuilder private[api] (catalog: Catalog, src: SourceDef) {
     joins.foldLeft(df) { (d, relName) =>
       val rel = src.relations(relName)
       val (foreign, through) = joinSides(rel)
-      Relations.nested(d, rel, foreign, through, broadcastForeign = catalog(rel.to).broadcastHint)
+      Relations.nested(d, rel, foreign, through)
     }
 
   // ---- execution ---------------------------------------------------------

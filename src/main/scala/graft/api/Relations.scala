@@ -45,9 +45,9 @@ final case class HasManyThrough(name: String, to: String, through: String,
   * and probing hash maps per row (src/utils/relationResolver.ts:63-147).
   *
   *  - [[nested]] (and the flat joins) are lazy DataFrame transforms for a base
-  *    of any size: a join, broadcast when the foreign side is a small
-  *    dimension, shuffled otherwise — Catalyst/AQE pick the physical strategy,
-  *    and at 100 TB the fact side never moves through the driver.
+  *    of any size: a join whose strategy (broadcast or shuffle) Spark's size
+  *    estimate and AQE choose, and at 100 TB the fact side never moves
+  *    through the driver.
   *  - [[nestedPage]] is the reference's own shape for a page that is already
   *    on the driver (`QueryBuilder.exec`): it loads only the foreign rows whose
   *    keys the page references, one filtered scan per relation hop, and nests
@@ -55,9 +55,6 @@ final case class HasManyThrough(name: String, to: String, through: String,
   *    output, never by the tables.
   */
 object Relations {
-
-  private def maybeBroadcast(df: DataFrame, hint: Boolean): DataFrame =
-    if (hint) broadcast(df) else df
 
   /** Key columns normalized to string so heterogeneous key types (the reference
     * compares stringified values) join consistently.
@@ -84,28 +81,20 @@ object Relations {
       foreign: DataFrame,
       localKey: String,
       foreignKey: String,
-      broadcastForeign: Boolean = false,
       joinType: String = "inner"
-  ): DataFrame = {
-    val f = maybeBroadcast(foreign, broadcastForeign)
-    base.join(f, k(base(localKey)) === k(f(foreignKey)), joinType)
-  }
+  ): DataFrame =
+    base.join(foreign, k(base(localKey)) === k(foreign(foreignKey)), joinType)
 
   /** Flat two-hop join for through-relations. */
   def flatThroughJoin(
       base: DataFrame,
       through: DataFrame,
       target: DataFrame,
-      rel: ThroughRelation,
-      broadcastThrough: Boolean = false,
-      broadcastTarget: Boolean = false
-  ): DataFrame = {
-    val t  = maybeBroadcast(through, broadcastThrough)
-    val tg = maybeBroadcast(target, broadcastTarget)
+      rel: ThroughRelation
+  ): DataFrame =
     base
-      .join(t, k(base(rel.sourceLocalKey)) === k(t(rel.throughForeignKey)))
-      .join(tg, k(t(rel.throughLocalKey)) === k(tg(rel.targetForeignKey)))
-  }
+      .join(through, k(base(rel.sourceLocalKey)) === k(through(rel.throughForeignKey)))
+      .join(target, k(through(rel.throughLocalKey)) === k(target(rel.targetForeignKey)))
 
   // ---- nested (API-faithful) resolution ----------------------------------
 
@@ -124,11 +113,10 @@ object Relations {
     * flat-and-dedup of per-key matches).
     */
   private def attach(base: DataFrame, keyed: DataFrame, localKey: String,
-                     name: String, single: Boolean, broadcastForeign: Boolean): DataFrame = {
-    val keyedB = maybeBroadcast(keyed, broadcastForeign)
+                     name: String, single: Boolean): DataFrame = {
     val joined =
       if (isScalarKey(base, localKey)) {
-        base.join(keyedB, k(base(localKey)) === keyedB("__graft_fk"), "left")
+        base.join(keyed, k(base(localKey)) === keyed("__graft_fk"), "left")
           .drop("__graft_fk")
       } else {
         // Regroup by a synthetic row id, not by the base columns: grouping by
@@ -139,7 +127,7 @@ object Relations {
         val aggs = baseCols.map(c => first(col(c)).as(c)) :+
           merged(collect_list(col(name))).as(name)
         withKey(withId, localKey, "__graft_lk", outer = true)
-          .join(keyedB, col("__graft_lk") === keyedB("__graft_fk"), "left")
+          .join(keyed, col("__graft_lk") === keyed("__graft_fk"), "left")
           .drop("__graft_fk")
           .groupBy(col("__graft_rid"))
           .agg(aggs.head, aggs.tail: _*)
@@ -174,13 +162,11 @@ object Relations {
       base: DataFrame,
       rel: Relation,
       foreign: DataFrame,
-      through: Option[DataFrame] = None,
-      broadcastForeign: Boolean = false
+      through: Option[DataFrame] = None
   ): DataFrame = rel match {
     case r: DirectRelation =>
       val single = r.isInstanceOf[HasOne]
-      attach(base, keyedForeign(foreign, r.foreignKey, r.name), r.localKey, r.name,
-        single, broadcastForeign)
+      attach(base, keyedForeign(foreign, r.foreignKey, r.name), r.localKey, r.name, single)
     case r: ThroughRelation =>
       val thr = throughOf(r, through)
       val single = r.isInstanceOf[HasOneThrough]
@@ -211,7 +197,7 @@ object Relations {
         .groupBy(col("__graft_src").as("__graft_fk2"))
         .agg(flatten(collect_list(col(r.name))).as(r.name))
         .withColumnRenamed("__graft_fk2", "__graft_fk")
-      attach(base, keyed, r.sourceLocalKey, r.name, single, broadcastForeign)
+      attach(base, keyed, r.sourceLocalKey, r.name, single)
   }
 
   // ---- page-local resolution (QueryBuilder.exec) -------------------------

@@ -241,12 +241,4 @@ object GraftExtensions {
         s"$fn: '$arg' must be a literal integer, got $other")
     }
   }
-
-  /** Register into an already-running session (withExtensions only applies to
-    * sessions built afterwards). Idempotent.
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (id, info, builder) =>
-      org.apache.spark.sql.graftshim.ColumnShim.registerFunction(spark, id, info, builder)
-    }
 }

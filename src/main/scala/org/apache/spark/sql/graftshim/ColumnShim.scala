@@ -19,13 +19,6 @@ object ColumnShim {
   val stringInput: Seq[org.apache.spark.sql.types.AbstractDataType] =
     Seq(org.apache.spark.sql.types.StringType)
 
-  /** Input-type specs for array<double> expressions (unary / binary). */
-  val doubleArrayInput: Seq[org.apache.spark.sql.types.AbstractDataType] =
-    Seq(org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
-  val doubleArrayInput2: Seq[org.apache.spark.sql.types.AbstractDataType] =
-    Seq(org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
-
   /** Input type accepting array<double> OR array<float> with NO cast (the
     * float-native vector hot path); other numeric arrays implicit-cast to the
     * collection's first entry. `TypeCollection` is private[sql] — hence here.
@@ -82,15 +75,4 @@ object ColumnShim {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
-
-  /** Register a function into an ALREADY-RUNNING session's registry (the
-    * `withExtensions` path only applies to sessions built after the fact).
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(name, info, builder)
 }

@@ -9,11 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanPropertiesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  // Pinned plans come from the session shape Bench, Verify and perfbench
-  // run: graft's extensions, so its optimizer rules fire.
-  private lazy val gs = SparkTestSession.withGraftExtensions
   private def plan(name: String): String =
-    SparkEntry.queries(name)(gs, dir).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
   test("the ACTUAL filter predicates reach the parquet scan, not just IsNotNull") {
     val expected = Map(
@@ -69,7 +66,7 @@ class PlanPropertiesSpec extends SparkSpec {
     def kernel(e: org.apache.spark.sql.catalyst.expressions.Expression) =
       e.exists(_.isInstanceOf[graft.plans.GraftKernel])
     for (q <- Seq("q_dedup_minhash", "q_dedup_simhash", "q_text_fingerprint", "q_ann_buckets")) {
-      val p = SparkEntry.queries(q)(gs, dir).queryExecution.sparkPlan
+      val p = SparkEntry.queries(q)(spark, dir).queryExecution.sparkPlan
       val tops = p.collect { case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t }
       assert(tops.size == 1, s"$q: expected one TakeOrderedAndProject:\n$p")
       assert(!tops.head.child.exists(_.expressions.exists(kernel)),
@@ -78,7 +75,7 @@ class PlanPropertiesSpec extends SparkSpec {
     }
     // a serve page and peek carry no kernel: their optimized plans are the
     // ones the rule-excluded optimizer produces
-    val c = Tables.catalog(gs, dir)
+    val c = Tables.catalog(spark, dir)
     for (df <- Seq(
         c.from("customer").where("c_nationkey", graft.api.Eq, "3").orderBy("c_acctbal").pageSize(25).execDf(),
         c.from("customer").orderBy("c_name").pageSize(50).peek()))
@@ -253,27 +250,28 @@ class PlanPropertiesSpec extends SparkSpec {
 
   test("q_agg_rollup_sorted: rows match raw AND PreAggregateGroupingSets stays licensed on the copy") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand}
-    val raw = SparkEntry.queries("q_agg_rollup")(spark, dir).collect().toSeq
+    import graft.plans.PreAggregateGroupingSets
+    val raw = SparkTestSession.excluding(PreAggregateGroupingSets.ruleName)(
+      SparkEntry.queries("q_agg_rollup")(spark, dir).collect().toSeq)
     // the explicit redeclare must keep the rule LICENSED on the rewritten
     // scan — without it the sorted probe measured +37% at sf100 (rule off),
-    // with it −17% (BASELINE.md r20). Two gates stand between this spec and
-    // the license: the rule lives in GraftExtensions (harness sessions), not
-    // the plain test session, and it has a deliberate 128 MB input-size
-    // gate (sf0.001 is far below it) — so observe the license in a child
-    // session with the rule installed and the gate lifted, exactly like
-    // GroupingSetRulesSpec's `opt` session.
-    val opt = spark.newSession()
-    opt.experimental.extraOptimizations = Seq(graft.plans.PreAggregateGroupingSets)
-    opt.conf.set(graft.plans.PreAggregateGroupingSets.MinInputBytesKey, "0")
-    val df = SparkEntry.queries("q_agg_rollup_sorted")(opt, dir)
+    // with it −17% (BASELINE.md r20). The rule has a deliberate 128 MB
+    // input-size gate (sf0.001 is far below it), so observe the license
+    // with the gate lifted while the plan is optimized, as
+    // GroupingSetRulesSpec does.
+    val df = SparkTestSession.withConf(PreAggregateGroupingSets.MinInputBytesKey, "0") {
+      val df = SparkEntry.queries("q_agg_rollup_sorted")(spark, dir)
+      df.queryExecution.optimizedPlan
+      df
+    }
     val preAgg = df.queryExecution.optimizedPlan.collect {
       case e: Expand if e.child.isInstanceOf[Aggregate] => e
     }
     assert(preAgg.nonEmpty,
       s"pre-aggregate grouping-sets form missing over the sorted layout:\n${df.queryExecution.optimizedPlan}")
     assert(df.collect().toSeq == raw, "sorted-layout rollup diverged from the raw-layout rollup")
-    // and in the default session (gate at its production setting) the row
-    // still answers identically
+    // and with the gate at its production setting the row still answers
+    // identically
     assert(SparkEntry.queries("q_agg_rollup_sorted")(spark, dir).collect().toSeq == raw)
   }
 

@@ -4,40 +4,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM-wide session, lazy). */
+/** Shared local session for all specs (one JVM-wide session, lazy): the
+  * library session ([[graft.Tables.session]]: graft's extensions, so its
+  * optimizer rules, physical rule and SQL functions, and the library confs)
+  * on `local[4]` with 4 shuffle partitions. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // mirror the harness session (Tables.build): consume bucket-sort
-    // metadata — Spark still verifies bucketsContainSingleFile per scan
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .getOrCreate()
-
-  /** A session on the same context with [[graft.plans.GraftExtensions]]
-    * injected, as harness sessions (Tables.build) have: graft's optimizer
-    * rules in the operator-optimization batch and its SQL functions. The
-    * shared session above stays rule-free. */
-  lazy val withGraftExtensions: SparkSession = {
-    val base = spark // the context (master, UI off) comes from the shared session
-    val s = SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).create()
-    Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone",
-      "spark.sql.legacy.bucketedTableScan.outputOrdering")
-      .foreach(k => s.conf.set(k, base.conf.get(k)))
+  lazy val spark: SparkSession = {
+    val s = Tables.session("local[4]")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     s
   }
 
-  /** `df`'s analyzed plan as its session optimizes it with `excludedRules`
-    * (optimizer rule names, comma-separated) switched off; "" keeps all. */
-  def optimized(df: DataFrame, excludedRules: String = ""): LogicalPlan = {
-    val s = df.sparkSession
-    s.conf.set("spark.sql.optimizer.excludedRules", excludedRules)
-    // a fresh QueryExecution optimizes with `s` active, so the optimizer
-    // reads this session's conf, not the thread's active one
-    try s.sessionState.executePlan(df.queryExecution.analyzed).optimizedPlan
-    finally s.conf.unset("spark.sql.optimizer.excludedRules")
+  /** `body` evaluated with the shared session's conf `key` set to `value`,
+    * then unset. A Dataset plans once, so build the DataFrame inside `body`. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body finally spark.conf.unset(key)
+  }
+
+  /** `body` evaluated with the optimizer rules `excludedRules` (rule names,
+    * comma-separated) switched off: the rule-off side of a parity test. */
+  def excluding[T](excludedRules: String)(body: => T): T =
+    withConf("spark.sql.optimizer.excludedRules", excludedRules)(body)
+
+  /** `df`'s analyzed plan as the shared session optimizes it with
+    * `excludedRules` switched off; "" keeps all. A fresh QueryExecution
+    * optimizes with the session active, so the optimizer reads its conf. */
+  def optimized(df: DataFrame, excludedRules: String = ""): LogicalPlan = excluding(excludedRules) {
+    df.sparkSession.sessionState.executePlan(df.queryExecution.analyzed).optimizedPlan
   }
 }
 

@@ -1,24 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
-/** The SQL surface registered via SparkSessionExtensions. Needs its own
-  * session (extensions bind at build time). */
-class GraftExtensionsSpec extends AnyFunSuite {
+/** The SQL surface registered via SparkSessionExtensions, on the shared spec
+  * session (built with the extensions). */
+class GraftExtensionsSpec extends SparkSpec {
 
-  private lazy val spark: SparkSession = {
-    // getOrCreate may return the suite-shared session (built without
-    // extensions) — use the running-session install path, which is the same
-    // function set the withExtensions entry point injects.
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    GraftExtensions.install(s)
-    s.sparkContext.setLogLevel("ERROR")
-    s
+  test("the shared spec session carries graft's SQL functions, optimizer rules and columnar rule") {
+    val s = graft.SparkTestSession.spark
+    for ((id, _, _) <- GraftExtensions.functions)
+      assert(s.catalog.functionExists(id.funcName), s"${id.funcName} is not registered")
+    val rules = s.sessionState.optimizer.batches.flatMap(_.rules).map(_.ruleName).toSet
+    for (r <- Seq(CollectSizeToCount, TopNThroughRiJoin, RiJoinElimination,
+                  LateKernelMaterialization, PreAggregateGroupingSets))
+      assert(rules(r.ruleName), s"${r.ruleName} is not in the optimizer")
+    assert(s.sessionState.columnarRules.contains(ParameterizeFilterLiterals.AsColumnarRule))
   }
 
   test("graft_simhash and graft_minhash_state callable from plain SQL") {

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.functions._
@@ -16,7 +16,6 @@ import graft.operators.Dedup
 class LateKernelMaterializationSpec extends SparkSpec {
 
   private val rule = LateKernelMaterialization.ruleName
-  private lazy val gs: SparkSession = SparkTestSession.withGraftExtensions
   /** 300 documents of five tokens, doc_id a permutation of 0..299 (7919 is
     * prime). Read back from parquet, so the optimizer knows neither their
     * order nor their count (a known count below the limit drops the limit). */
@@ -30,20 +29,18 @@ class LateKernelMaterializationSpec extends SparkSpec {
       .write.parquet(path)
     path
   }
-  private def docs(s: SparkSession): DataFrame = s.read.parquet(docsPath)
-  private def simhash(s: SparkSession): DataFrame =
-    docs(s).select(col("doc_id"), TextExpressions.simhash64(col("text")).as("sh"))
+  private def docs: DataFrame = spark.read.parquet(docsPath)
+  private def simhash: DataFrame =
+    docs.select(col("doc_id"), TextExpressions.simhash64(col("text")).as("sh"))
 
   private def isKernel(e: Expression): Boolean = e.exists(_.isInstanceOf[GraftKernel])
 
   /** Rows and physical plan of `build`, planned with `excluded` rules off. */
-  private def run(build: SparkSession => DataFrame, excluded: String): (Seq[Row], SparkPlan) = {
-    gs.conf.set("spark.sql.optimizer.excludedRules", excluded)
-    try {
-      val df = build(gs)
+  private def run(build: => DataFrame, excluded: String): (Seq[Row], SparkPlan) =
+    SparkTestSession.excluding(excluded) {
+      val df = build
       (df.collect().toSeq, df.queryExecution.sparkPlan)
-    } finally gs.conf.unset("spark.sql.optimizer.excludedRules")
-  }
+    }
 
   /** Does a kernel run in the input of the plan's one TakeOrderedAndProject? */
   private def kernelBelowTopK(p: SparkPlan): Boolean = {
@@ -52,7 +49,7 @@ class LateKernelMaterializationSpec extends SparkSpec {
     tops.head.child.exists(_.expressions.exists(isKernel))
   }
 
-  private def assertMoves(build: SparkSession => DataFrame): Unit = {
+  private def assertMoves(build: => DataFrame): Unit = {
     val (on, onPlan)   = run(build, "")
     val (off, offPlan) = run(build, rule)
     assert(on.nonEmpty)
@@ -68,7 +65,7 @@ class LateKernelMaterializationSpec extends SparkSpec {
   }
 
   test("aliased pass-through sort key: kernel runs above the top-K, same rows") {
-    assertMoves(s => docs(s)
+    assertMoves(docs
       .select(col("doc_id").as("id"), col("lang"), TextExpressions.simhash64(col("text")).as("sh"))
       .orderBy("id").limit(7))
   }
@@ -76,57 +73,55 @@ class LateKernelMaterializationSpec extends SparkSpec {
   test("desc keys with nulls, both null placements") {
     // k = 1, null, 3, 3, null, 3 for id 1..6 (a range, not a local
     // relation, so the optimizer cannot fold the projection away)
-    def planted(s: SparkSession): DataFrame = s.range(1, 7)
+    def planted: DataFrame = spark.range(1, 7)
       .select(col("id"),
         when(col("id") % 3 =!= 2, least(col("id"), lit(3L))).as("k"),
         concat_ws(" ", lit("tok"), col("id").cast("string"), lit("end")).as("text"))
       .select(col("id"), col("k"), TextExpressions.fingerprint(col("text")).as("fp"))
-    assertMoves(s => planted(s).orderBy(col("k").desc, col("id").desc).limit(5))
-    assertMoves(s => planted(s).orderBy(col("k").desc_nulls_first, col("id")).limit(3))
+    assertMoves(planted.orderBy(col("k").desc, col("id").desc).limit(5))
+    assertMoves(planted.orderBy(col("k").desc_nulls_first, col("id")).limit(3))
   }
 
   test("limit above the row count returns every row") {
-    assertMoves(s => docs(s)
+    assertMoves(docs
       .select(col("doc_id"), TextExpressions.fingerprint(col("text")).as("fp"))
       .orderBy("doc_id").limit(100000))
-    assert(run(s => simhash(s).orderBy("doc_id").limit(100000), "")._1.size ==
-      docs(gs).count())
+    assert(run(simhash.orderBy("doc_id").limit(100000), "")._1.size == docs.count())
   }
 
   test("posexplode above the limit (q_dedup_minhash's shape)") {
-    assertMoves(s => Dedup.minhashed(docs(s))
+    assertMoves(Dedup.minhashed(docs)
       .orderBy("doc_id").limit(20)
       .select(col("doc_id"), posexplode(col("band_hashes")).as(Seq("band", "bhash")))
       .orderBy("doc_id", "band"))
   }
 
   test("SQL: selected and unselected sort keys") {
-    docs(gs).createOrReplaceTempView("late_docs")
-    assertMoves(_.sql("SELECT doc_id, graft_simhash(text) AS sh FROM late_docs ORDER BY doc_id LIMIT 20"))
-    assertMoves(_.sql("SELECT graft_simhash(text) AS sh, lang FROM late_docs ORDER BY doc_id DESC LIMIT 5"))
+    docs.createOrReplaceTempView("late_docs")
+    assertMoves(spark.sql("SELECT doc_id, graft_simhash(text) AS sh FROM late_docs ORDER BY doc_id LIMIT 20"))
+    assertMoves(spark.sql("SELECT graft_simhash(text) AS sh, lang FROM late_docs ORDER BY doc_id DESC LIMIT 5"))
   }
 
   test("negative: a sort key that reads a kernel output") {
-    assertUnchanged(simhash(gs).orderBy("sh", "doc_id").limit(5))
+    assertUnchanged(simhash.orderBy("sh", "doc_id").limit(5))
   }
 
   test("negative: a nondeterministic projection") {
-    assertUnchanged(docs(gs)
+    assertUnchanged(docs
       .select(col("doc_id"), TextExpressions.simhash64(col("text")).as("sh"), rand(7).as("r"))
       .orderBy("doc_id").limit(5))
   }
 
   test("negative: a limit at or above topKSortFallbackThreshold") {
-    gs.conf.set("spark.sql.execution.topKSortFallbackThreshold", "50")
-    try {
-      assertUnchanged(simhash(gs).orderBy("doc_id").limit(50))
-      assertUnchanged(simhash(gs).orderBy("doc_id").limit(51))
-      val below = simhash(gs).orderBy("doc_id").limit(49)
+    SparkTestSession.withConf("spark.sql.execution.topKSortFallbackThreshold", "50") {
+      assertUnchanged(simhash.orderBy("doc_id").limit(50))
+      assertUnchanged(simhash.orderBy("doc_id").limit(51))
+      val below = simhash.orderBy("doc_id").limit(49)
       assert(SparkTestSession.optimized(below) != SparkTestSession.optimized(below, rule))
-    } finally gs.conf.unset("spark.sql.execution.topKSortFallbackThreshold")
+    }
   }
 
   test("negative: no limit") {
-    assertUnchanged(simhash(gs).orderBy("doc_id"))
+    assertUnchanged(simhash.orderBy("doc_id"))
   }
 }

@@ -8,18 +8,30 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
 
-import graft.{SparkSpec, SparkTestSession, Tables}
+import graft.{SparkSpec, Tables}
 import graft.api._
 
-/** ParameterizeFilterLiterals (ParamLiterals.scala): on the extension
-  * session a serve request shape compiles once, whatever its slug or cursor
-  * values; plans print exactly as on the rule-free session; and keyset walks
-  * over edge values return the rows and cursors the rule-free session does.
+/** ParameterizeFilterLiterals (ParamLiterals.scala): on the shared session
+  * a serve request shape compiles once, whatever its slug or cursor values;
+  * plans print exactly as on the rule-free twin; and keyset walks over edge
+  * values return the rows and cursors the twin does.
   */
 class ParamLiteralsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val gs: SparkSession = SparkTestSession.withGraftExtensions
+  /** The rule-free twin: a session on the shared context without graft's
+    * extensions (`excludedRules` cannot reach a columnar rule). It reads no
+    * stored artifact. */
+  private lazy val ruleFree: SparkSession = {
+    val shared = spark
+    val twin = SparkSession.builder()
+      .config("spark.sql.shuffle.partitions", shared.conf.get("spark.sql.shuffle.partitions"))
+      .create()
+    // create() made the twin the default and active session
+    SparkSession.setDefaultSession(shared)
+    SparkSession.setActiveSession(shared)
+    twin
+  }
 
   private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -111,19 +123,19 @@ class ParamLiteralsSpec extends SparkSpec {
     } finally s.conf.unset("spark.sql.maxMetadataStringLength")
   }
 
-  private lazy val withRule = serve(gs)
-  private lazy val ruleFree = serve(spark)
+  private lazy val withRuleRuns = serve(spark)
+  private lazy val ruleFreeRuns = serve(ruleFree)
 
   test("serve shapes: new parameters compile nothing with the rule, and recompile without it") {
-    val again = withRule.collect { case (n, k, _) if k > 0 => s"$n: $k" }
+    val again = withRuleRuns.collect { case (n, k, _) if k > 0 => s"$n: $k" }
     assert(again.isEmpty, s"compiles on the second run of a shape: $again")
-    val recompiled = ruleFree.map { case (n, k, _) => n -> k }.toMap
+    val recompiled = ruleFreeRuns.map { case (n, k, _) => n -> k }.toMap
     for (n <- Seq("find", "walk_forward", "walk_back", "has_many_page"))
       assert(recompiled(n) > 0, s"$n did not recompile on the rule-free session: $recompiled")
   }
 
   test("serve shapes: executed plans, pushed filters included, print as without the rule") {
-    for (((name, _, a), (_, _, b)) <- withRule.zip(ruleFree)) {
+    for (((name, _, a), (_, _, b)) <- withRuleRuns.zip(ruleFreeRuns)) {
       assert(a.nonEmpty && a == b, s"$name:\n${a.mkString("\n")}\nvs rule-free\n${b.mkString("\n")}")
       assert(a.exists(_.contains("PushedFilters: [")), s"$name:\n${a.mkString("\n")}")
     }
@@ -169,18 +181,18 @@ class ParamLiteralsSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-param-walk").resolve("t").toString
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1).write.parquet(path)
     for (order <- Seq("d", "slug", "day", "ts"); desc <- Seq(false, true); size <- Seq(2, 5)) {
-      val (fwd, back, cursors) = walk(gs.read.parquet(path), order, "slug", desc, size)
-      val expect = walk(spark.read.parquet(path), order, "slug", desc, size)
+      val (fwd, back, cursors) = walk(spark.read.parquet(path), order, "slug", desc, size)
+      val expect = walk(ruleFree.read.parquet(path), order, "slug", desc, size)
       assert(fwd.size == n && fwd.map(_(4)).distinct.size == n, s"$order desc=$desc size=$size: $fwd")
       assert(back == fwd, s"$order desc=$desc size=$size: the backward walk differs")
       assert((fwd, back, cursors) == expect, s"$order desc=$desc size=$size")
     }
-    // the cursored probe of the extension session carries ParamLiterals
+    // the cursored probe of the shared session carries ParamLiterals
     val c = Cursor("d", "0.0", "5")
-    val probe = Pagination.pageDf(gs.read.parquet(path), "d", "slug", descending = false, 3,
+    val probe = Pagination.pageDf(spark.read.parquet(path), "d", "slug", descending = false, 3,
       Some(c), After)
     assert(params(probe.queryExecution.executedPlan) > 0, probe.queryExecution.executedPlan)
-    assert(params(Pagination.pageDf(spark.read.parquet(path), "d", "slug", descending = false, 3,
+    assert(params(Pagination.pageDf(ruleFree.read.parquet(path), "d", "slug", descending = false, 3,
       Some(c), After).queryExecution.executedPlan) == 0)
   }
 }

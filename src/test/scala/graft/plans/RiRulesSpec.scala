@@ -1,16 +1,17 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Join, LogicalPlan}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join}
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, SparkTestSession, Tables}
+import graft.SparkTestSession.optimized
 import graft.api.Relations
 
 /** The RI-aware optimizer rules (RiRules.scala): rewrite fires on the right
   * shapes (plan assertions), never on the wrong ones (negative cases), and
-  * always preserves results (parity against the same query in a session
-  * without the rules — including the null-FK edge an INNER join's implicit
+  * always preserves results (parity against the same query with the three
+  * rules excluded — including the null-FK edge an INNER join's implicit
   * null-drop creates, exercised on planted tables since the star schema's
   * FKs are never null).
   */
@@ -18,98 +19,88 @@ class RiRulesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** Session with the graft optimizer rules active (isolated SessionState —
-    * the shared spec session stays rule-free, so parity comparisons are
-    * meaningful). */
-  private lazy val opt: SparkSession = {
-    val s = spark.newSession()
-    s.experimental.extraOptimizations =
-      Seq(CollectSizeToCount, TopNThroughRiJoin, RiJoinElimination)
-    Tables.catalog(s, dir) // registers the star schema's RELY constraints
-    s
-  }
+  private val riRules =
+    Seq(CollectSizeToCount, TopNThroughRiJoin, RiJoinElimination).map(_.ruleName).mkString(",")
 
-  private def optimized(df: DataFrame): LogicalPlan =
-    df.queryExecution.optimizedPlan
-
-  private def hasTopNBelowJoin(df: DataFrame): Boolean =
-    optimized(df).collect { case j: Join =>
+  private def hasTopNBelowJoin(df: DataFrame, excluded: String = ""): Boolean =
+    optimized(df, excluded).collect { case j: Join =>
       j.children.exists(_.collectFirst { case g: GlobalLimit => g }.isDefined)
     }.exists(identity)
 
-  private def hasCollect(df: DataFrame): Boolean =
-    optimized(df).toString.contains("collect_list") ||
-      optimized(df).toString.contains("collect_set")
+  private def hasCollect(df: DataFrame, excluded: String = ""): Boolean = {
+    val p = optimized(df, excluded).toString
+    p.contains("collect_list") || p.contains("collect_set")
+  }
 
-  /** Same query built in both sessions must agree (sorted row sets). */
-  private def assertParity(build: SparkSession => DataFrame): Unit = {
-    val expect = build(spark).collect().toSeq.sortBy(_.toString)
-    val got    = build(opt).collect().toSeq.sortBy(_.toString)
+  /** The query with and without the RI rules must agree (sorted row sets). */
+  private def assertParity(build: => DataFrame): Unit = {
+    val expect = SparkTestSession.excluding(riRules)(build.collect()).toSeq.sortBy(_.toString)
+    val got    = build.collect().toSeq.sortBy(_.toString)
     assert(got == expect, s"rule changed results:\nexpect=$expect\ngot=$got")
   }
 
-  private def joinQ(s: SparkSession): DataFrame = {
-    val c = Tables.catalog(s, dir)
+  private def joinQ: DataFrame = {
+    val c = Tables.catalog(spark, dir)
     Relations.flatJoin(c("orders").df, c("customer").df, "o_custkey", "c_custkey")
       .select("o_orderkey", "o_totalprice", "c_name")
       .orderBy("o_orderkey").limit(7)
   }
 
   test("TopNThroughRiJoin: inner FK join pushes the top-N to the FK side") {
-    assert(hasTopNBelowJoin(joinQ(opt)), optimized(joinQ(opt)).toString)
-    assert(!hasTopNBelowJoin(joinQ(spark)))
+    assert(hasTopNBelowJoin(joinQ), optimized(joinQ).toString)
+    assert(!hasTopNBelowJoin(joinQ, riRules))
     assertParity(joinQ)
   }
 
   test("TopNThroughRiJoin: sort key on the PK side substitutes through the equi pair") {
-    def q(s: SparkSession): DataFrame = {
-      val c = Tables.catalog(s, dir)
+    def q: DataFrame = {
+      val c = Tables.catalog(spark, dir)
       Relations.flatJoin(c("customer").df, c("orders").df, "c_custkey", "o_custkey")
         .select("c_custkey", "c_name", "o_orderkey")
         .orderBy("c_custkey", "o_orderkey").limit(9)
     }
-    assert(hasTopNBelowJoin(q(opt)), optimized(q(opt)).toString)
+    assert(hasTopNBelowJoin(q), optimized(q).toString)
     assertParity(q)
   }
 
   test("TopNThroughRiJoin: a real predicate on the PK side blocks the rewrite") {
-    def q(s: SparkSession): DataFrame = {
-      val c = Tables.catalog(s, dir)
+    def q: DataFrame = {
+      val c = Tables.catalog(spark, dir)
       Relations.flatJoin(c("orders").df,
           c("customer").df.filter(col("c_acctbal") > 0), "o_custkey", "c_custkey")
         .select("o_orderkey", "c_name").orderBy("o_orderkey").limit(7)
     }
-    assert(!hasTopNBelowJoin(q(opt)), optimized(q(opt)).toString)
+    assert(!hasTopNBelowJoin(q), optimized(q).toString)
     assertParity(q)
   }
 
   test("TopNThroughRiJoin: non-FK equi join does not push") {
-    def q(s: SparkSession): DataFrame = {
-      val c = Tables.catalog(s, dir)
+    def q: DataFrame = {
+      val c = Tables.catalog(spark, dir)
       // nationkey = nationkey is a real join but not a declared FK→unique pair
       c("customer").df.join(c("supplier").df,
           col("c_nationkey") === col("s_nationkey"))
         .select("c_custkey", "s_suppkey").orderBy("c_custkey").limit(7)
     }
-    assert(!hasTopNBelowJoin(q(opt)), optimized(q(opt)).toString)
+    assert(!hasTopNBelowJoin(q), optimized(q).toString)
     assertParity(q)
   }
 
   test("TopNThroughRiJoin: left outer with unique right key pushes on uniqueness alone") {
-    def q(s: SparkSession): DataFrame = {
-      val c = Tables.catalog(s, dir)
+    def q: DataFrame = {
+      val c = Tables.catalog(spark, dir)
       // right side filtered — fine under LEFT OUTER (null-extension, not loss)
       c("orders").df.join(c("customer").df.filter(col("c_acctbal") > 0),
           col("o_custkey") === col("c_custkey"), "left")
         .select("o_orderkey", "c_name").orderBy("o_orderkey").limit(7)
     }
-    assert(hasTopNBelowJoin(q(opt)), optimized(q(opt)).toString)
+    assert(hasTopNBelowJoin(q), optimized(q).toString)
     assertParity(q)
   }
 
   test("TopNThroughRiJoin: INNER pushdown drops null-FK rows before limiting") {
     val tmp = java.nio.file.Files.createTempDirectory("ri_nullfk").toString
-    val s = opt
+    val s = spark
     import s.implicits._
     // parent 1..3; child rows 1..6 where even ids have NULL fk — the top-2
     // by id (1,2) includes a null-FK row the inner join must exclude, so a
@@ -134,33 +125,33 @@ class RiRulesSpec extends SparkSpec {
   }
 
   test("CollectSizeToCount: size(collect_list) over groupBy becomes count") {
-    def q(s: SparkSession): DataFrame =
-      Tables.load(s, dir, "orders").groupBy("o_custkey")
+    def q: DataFrame =
+      Tables.load(spark, dir, "orders").groupBy("o_custkey")
         .agg(size(collect_list(col("o_orderkey"))).as("n"))
         .orderBy("o_custkey")
-    assert(!hasCollect(q(opt)), optimized(q(opt)).toString)
-    assert(hasCollect(q(spark)))
+    assert(!hasCollect(q), optimized(q).toString)
+    assert(hasCollect(q, riRules))
     assertParity(q)
   }
 
   test("CollectSizeToCount: collect_set becomes count(DISTINCT)") {
-    def q(s: SparkSession): DataFrame =
-      Tables.load(s, dir, "orders").groupBy("o_custkey")
+    def q: DataFrame =
+      Tables.load(spark, dir, "orders").groupBy("o_custkey")
         .agg(size(collect_set(col("o_orderstatus"))).as("n"))
         .orderBy("o_custkey")
-    assert(!hasCollect(q(opt)), optimized(q(opt)).toString)
+    assert(!hasCollect(q), optimized(q).toString)
     assertParity(q)
   }
 
   test("CollectSizeToCount: the nested-relation attach shape (left join + coalesce)") {
-    def q(s: SparkSession): DataFrame = {
-      val c = Tables.catalog(s, dir)
+    def q: DataFrame = {
+      val c = Tables.catalog(spark, dir)
       Relations.nested(c("customer").df, c("customer").relations("orders"),
           c("orders").df.select("o_custkey", "o_orderkey"))
         .select(col("c_custkey"), size(col("orders")).as("order_cnt"))
         .orderBy("c_custkey")
     }
-    assert(!hasCollect(q(opt)), optimized(q(opt)).toString)
+    assert(!hasCollect(q), optimized(q).toString)
     assertParity(q)
   }
 
@@ -172,7 +163,7 @@ class RiRulesSpec extends SparkSpec {
     // — every customer there has orders, which is how the bug shipped in
     // r16 and was only caught by the r18 sf0.1 oracle run).
     val tmp = java.nio.file.Files.createTempDirectory("ri_childless").toString
-    val s = opt
+    val s = spark
     import s.implicits._
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("pk", "pname")
       .write.mode("overwrite").parquet(s"$tmp/parent")
@@ -190,48 +181,48 @@ class RiRulesSpec extends SparkSpec {
   }
 
   test("CollectSizeToCount: flatten(collect_list(arr)) cascades to sum(count)") {
-    def q(s: SparkSession): DataFrame = {
-      val c = Tables.catalog(s, dir)
+    def q: DataFrame = {
+      val c = Tables.catalog(spark, dir)
       Relations.nested(c("region").df, c("region").relations("customers"),
           c("customer").df.select("c_custkey", "c_nationkey"),
           through = Some(c("nation").df))
         .select(col("r_name"), size(col("customers")).as("cust_cnt"))
         .orderBy("r_name")
     }
-    assert(!hasCollect(q(opt)), optimized(q(opt)).toString)
+    assert(!hasCollect(q), optimized(q).toString)
     assertParity(q)
   }
 
   test("CollectSizeToCount: an array consumed beyond size() is untouched") {
-    def q(s: SparkSession): DataFrame =
-      Tables.load(s, dir, "orders").groupBy("o_custkey")
+    def q: DataFrame =
+      Tables.load(spark, dir, "orders").groupBy("o_custkey")
         .agg(collect_list(col("o_orderkey")).as("ids"))
         .select(col("o_custkey"), size(col("ids")).as("n"), col("ids"))
         .orderBy("o_custkey")
-    assert(hasCollect(q(opt)), optimized(q(opt)).toString)
+    assert(hasCollect(q), optimized(q).toString)
     assertParity(q)
   }
 
   test("RiJoinElimination: inner FK join consumed one-sided drops the join") {
-    def q(s: SparkSession): DataFrame = {
-      val c = Tables.catalog(s, dir)
+    def q: DataFrame = {
+      val c = Tables.catalog(spark, dir)
       // c_custkey is the dropped side's KEY — substituted, join still gone
       Relations.flatJoin(c("orders").df, c("customer").df, "o_custkey", "c_custkey")
         .select("o_orderkey", "o_totalprice", "c_custkey")
     }
-    assert(optimized(q(opt)).collectFirst { case j: Join => j }.isEmpty,
-      optimized(q(opt)).toString)
-    assert(optimized(q(spark)).collectFirst { case j: Join => j }.isDefined)
+    assert(optimized(q).collectFirst { case j: Join => j }.isEmpty,
+      optimized(q).toString)
+    assert(optimized(q, riRules).collectFirst { case j: Join => j }.isDefined)
     assertParity(q)
   }
 
   test("RiJoinElimination: referencing a non-key column keeps the join") {
-    def q(s: SparkSession): DataFrame = {
-      val c = Tables.catalog(s, dir)
+    def q: DataFrame = {
+      val c = Tables.catalog(spark, dir)
       Relations.flatJoin(c("orders").df, c("customer").df, "o_custkey", "c_custkey")
         .select("o_orderkey", "c_name")
     }
-    assert(optimized(q(opt)).collectFirst { case j: Join => j }.isDefined)
+    assert(optimized(q).collectFirst { case j: Join => j }.isDefined)
     assertParity(q)
   }
 
@@ -242,7 +233,7 @@ class RiRulesSpec extends SparkSpec {
   // filtered out), so any rewrite that fires there returns wrong rows.
   private def plantLeftOuter(): (DataFrame, DataFrame) = {
     val tmp = java.nio.file.Files.createTempDirectory("ri_louter").toString
-    val s = opt
+    val s = spark
     import s.implicits._
     Seq((1L, "p1"), (2L, "p2"), (3L, "p3")).toDF("pk", "pname")
       .write.mode("overwrite").parquet(s"$tmp/parent")
@@ -317,8 +308,8 @@ class RiRulesSpec extends SparkSpec {
   }
 
   test("CollectSizeToCount: flatten rewrite returns 0, not NULL, for an all-null-arrays group") {
-    def q(s: SparkSession): DataFrame = {
-      import s.implicits._
+    def q: DataFrame = {
+      import spark.implicits._
       Seq((1, Option(Seq(10, 20))), (1, Option.empty[Seq[Int]]),
           (2, Option.empty[Seq[Int]]), (2, Option.empty[Seq[Int]]))
         .toDF("g", "arr")
@@ -326,10 +317,10 @@ class RiRulesSpec extends SparkSpec {
         .agg(size(flatten(collect_list(col("arr")))).as("n"))
         .orderBy("g")
     }
-    assert(!hasCollect(q(opt)), optimized(q(opt)).toString)
+    assert(!hasCollect(q), optimized(q).toString)
     // group 2 collects nothing (collect_list skips nulls) → size 0; a bare
     // sum(size(arr)) rewrite would return NULL here.
-    assert(q(opt).collect().map(r => (r.getInt(0), r.getInt(1))).toSeq ==
+    assert(q.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq ==
       Seq((1, 2), (2, 0)))
     assertParity(q)
   }
@@ -337,29 +328,29 @@ class RiRulesSpec extends SparkSpec {
   test("q_page_join: the registered paged-join query keeps the rule exercised (plan pin)") {
     // The oracle row that covers TopNThroughRiJoin forever: cursor pagination
     // over orders ⋈ customer must compute the page on the orders side FIRST.
-    val q = graft.SparkEntry.queries("q_page_join")(opt, dir)
+    val q = graft.SparkEntry.queries("q_page_join")(spark, dir)
     assert(hasTopNBelowJoin(q), optimized(q).toString)
     assert(q.count() == 20)
   }
 
   test("catalog RELY derivation: hasOne derives nothing (no totality, no uniqueness)") {
-    Tables.catalog(opt, dir)
+    Tables.catalog(spark, dir)
     // supplier —hasOne→ nation: supplier must carry NO fk on s_nationkey
     // (hasOne is 0-or-1 — optional), nation must carry ONLY its slug
     // (n_nationkey) unique — nothing hasOne-derived on top.
-    val supplierTag = Constraints.tagOf(Tables.load(opt, dir, "supplier")).get
-    val nationTag   = Constraints.tagOf(Tables.load(opt, dir, "nation")).get
+    val supplierTag = Constraints.tagOf(Tables.load(spark, dir, "supplier")).get
+    val nationTag   = Constraints.tagOf(Tables.load(spark, dir, "nation")).get
     assert(!Constraints.get(supplierTag).get.fks.exists(_.childCol == "s_nationkey"))
     assert(Constraints.get(nationTag).get.uniqueCols == Set("n_nationkey"))
     // belongsTo still derives totality: orders → customer.
-    val ordersTag = Constraints.tagOf(Tables.load(opt, dir, "orders")).get
+    val ordersTag = Constraints.tagOf(Tables.load(spark, dir, "orders")).get
     assert(Constraints.get(ordersTag).get.fks
       .exists(f => f.childCol == "o_custkey" && f.parentCol == "c_custkey"))
     // The load-bearing case — a hasOne whose target FK is NOT the target's
     // slug must register NO uniqueness fact: hasOne only promises ≤1 match
     // per PARENT key; orphan target rows may duplicate the FK, and nulls
     // are allowed — neither satisfies uniqueCols' unique+non-null meaning.
-    val s = opt
+    val s = spark
     import s.implicits._
     Seq((1L, "a")).toDF("pk", "pname")
       .write.mode("overwrite").parquet("/tmp/ri_hasone_parent")
@@ -378,7 +369,7 @@ class RiRulesSpec extends SparkSpec {
 
   test("RiJoinElimination: eliminated INNER join still drops null-FK rows") {
     val tmp = java.nio.file.Files.createTempDirectory("ri_elim").toString
-    val s = opt
+    val s = spark
     import s.implicits._
     Seq((1L, "p1"), (2L, "p2")).toDF("pk", "pname")
       .write.mode("overwrite").parquet(s"$tmp/parent")
