@@ -194,7 +194,7 @@ class GroupingSetRulesSpec extends SparkSpec {
     assert(!preAggFired(q))
   }
 
-  test("q_agg_rollup shape on real testdata: fires and matches the rule-excluded plan") {
+  test("q_agg_rollup shape on real testdata: fires and matches the rule-free session") {
     Tables.declareDomainNdvs(spark, dir)
     def q = graft.SparkEntry.queries("q_agg_rollup")(spark, dir)
     val expect = ruleOff(q)
