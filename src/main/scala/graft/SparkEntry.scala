@@ -52,14 +52,16 @@ object SparkEntry {
 
   /** Flagship on sf0.001 (dir overridable — ADVICE r20: Smoke's dir
     * override must reach the query, not only the session tuning): filter +
-    * three-hop broadcast join + aggregation + order — revenue per
-    * region/market-segment over the full star schema.
+    * three-hop join + aggregation + order — revenue per
+    * region/market-segment over the full star schema. Only the fixed-size
+    * nation and region sides are forced to broadcast; customer grows with
+    * the data, so Spark's size estimate and AQE choose its join.
     */
   def entry(spark: SparkSession, dir: String = "/root/testdata/sf0.001"): DataFrame = {
     def t(n: String) = Tables.load(spark, dir, n)
     t("lineitem")
       .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t("customer")), col("o_custkey") === col("c_custkey"))
+      .join(t("customer"), col("o_custkey") === col("c_custkey"))
       .join(broadcast(t("nation")), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(t("region")), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("c_mktsegment"))

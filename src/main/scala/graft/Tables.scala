@@ -167,7 +167,6 @@ object Tables {
     var builder = SparkSession.builder()
       .master(master)
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -201,6 +200,10 @@ object Tables {
         .config("spark.sql.files.openCostInBytes", "131072")
     }
     val spark = builder.getOrCreate()
+    // one shuffle partition per local thread; a cluster master keeps
+    // Spark's setting (AQE coalesces it there)
+    if (master.startsWith("local["))
+      spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toLong)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -57,9 +57,6 @@ object TextFunctions {
     */
   val bpeishPattern = "[a-z]+|[A-Z][a-z]*|[0-9]|[^a-zA-Z0-9\\s]"
 
-  def bpeishTokens(text: Column): Column =
-    regexp_extract_all(text, lit(bpeishPattern), lit(0))
-
   // Native state machine, NOT the regex: the pattern is fixed and Java's
   // backtracking alternation made size(regexp_extract_all(...)) — and even
   // regexp_count — the slowest pure scan in the suite (1.7 s at sf1 for a

@@ -109,14 +109,13 @@ object Pq {
                    fused: Boolean = true): DataFrame = {
     require(k > 0, s"Pq.adcTopKBatch: k must be positive, got $k")
     // per-query distance tables computed by Spark either way (identical
-    // values); the fused path collects the tiny table frame and runs the
-    // scoring loop inside one mapPartitions pass (FusedTopK)
+    // values); the fused path broadcasts the tiny table frame to one fused
+    // scan (FusedTopK)
     val q = queries.select(col(queryIdCol),
       V.pqDistTable(col(vecCol), cb.asSeq).as("__qtab"))
-    if (fused && FusedTopK.exactIntegerIdType(queries.schema(queryIdCol).dataType)
-        && FusedTopK.exactIntegerIdType(encoded.schema(idCol).dataType))
-      // non-integral query ids take the join path below (FusedTopK's heaps
-      // are long-keyed — see exactIntegerIdType)
+    if (fused && FusedTopK.exactIntegerIdType(encoded.schema(idCol).dataType))
+      // decimal(p>18,0) corpus ids take the join path below (FusedTopK's
+      // heaps are long-keyed — see exactIntegerIdType)
       FusedTopK.adcTopK(encoded, q, k, cb.ksub, idCol, codesCol, queryIdCol,
           "__qtab", excludeSelf)
         .select(col(queryIdCol), col(idCol), (-col("score")).as("distance"))

@@ -48,13 +48,12 @@ object Similarity {
                      queryIdCol: String = "query_id",
                      excludeSelf: Boolean = false,
                      fused: Boolean = true): DataFrame =
-    if (fused && FusedTopK.exactIntegerIdType(queries.schema(queryIdCol).dataType)
-        && FusedTopK.exactIntegerIdType(corpus.schema(idCol).dataType))
-      // fused mapPartitions pass (FusedTopK): same scores bit-for-bit, same
-      // tie discipline, same slim exchange — without materializing a row
-      // per scored pair (~5× at sf10, see BASELINE.md). `fused = false`
-      // keeps the join formulation for parity pinning; non-integral query
-      // ids (the fused heaps are long-keyed) take it automatically.
+    if (fused && FusedTopK.exactIntegerIdType(corpus.schema(idCol).dataType))
+      // fused scan (FusedTopK): same scores bit-for-bit, same tie
+      // discipline, same slim exchange — without materializing a row per
+      // scored pair (~5× at sf10, see BASELINE.md). `fused = false` keeps
+      // the join formulation for parity pinning; decimal(p>18,0) corpus ids
+      // (the fused heaps are long-keyed) take it automatically.
       FusedTopK.cosineTopK(corpus, queries, k, idCol, vecCol, queryIdCol,
         excludeSelf, labelCol = None)
     else {
@@ -327,13 +326,11 @@ object Similarity {
         if (storedCellLayout && centers.length < spark0.sparkContext.defaultParallelism)
           assigned.repartition(spark0.sparkContext.defaultParallelism)
         else assigned
-      if (fused && FusedTopK.exactIntegerIdType(queries.schema(queryIdCol).dataType)
-          && FusedTopK.exactIntegerIdType(spread.schema(idCol).dataType))
+      if (fused && FusedTopK.exactIntegerIdType(spread.schema(idCol).dataType))
         // same probe-cell choice (withCells above, identical HOF
         // arithmetic), scored in FusedTopK's single pass: the cell
         // equi-join becomes an O(1) membership test per pair — see
-        // bruteForceTopK's fused/join contract (incl. the non-integral
-        // query-id fallback)
+        // bruteForceTopK's fused/join contract
         FusedTopK.cosineTopK(spread,
           withCells.select(col(queryIdCol), col("__qvec").as(vecCol), col("__cells")),
           k, idCol, vecCol, queryIdCol, excludeSelf, labelCol = None,
@@ -470,8 +467,9 @@ object Similarity {
     *
     * Default path is the exact fused pair scan ([[FusedTopK.cosinePairs]]):
     * the `(cell, bucket)` self-join materialized an UnsafeRow per CANDIDATE
-    * pair; the fused form exchanges the replicated rows once, streams each
-    * group, and emits only the qualifying pairs. Same pair set by
+    * pair; the fused scan takes the replicated rows clustered and sorted on
+    * `(cell, bucket)`, streams each group, and emits only the qualifying
+    * pairs. Same pair set by
     * construction (exact cosine, identical orientation and threshold
     * semantics — parity pinned in FusedTopKSpec); `fused = false` keeps the
     * join formulation.
@@ -550,12 +548,10 @@ object Similarity {
       s"hardNegatives: anchors have no '$c' column"))
     require(anchors.columns.contains(anchorIdCol),
       s"hardNegatives: anchors have no '$anchorIdCol' column")
-    if (fused && FusedTopK.exactIntegerIdType(anchors.schema(anchorIdCol).dataType)
-        && FusedTopK.exactIntegerIdType(corpus.schema(idCol).dataType))
+    if (fused && FusedTopK.exactIntegerIdType(corpus.schema(idCol).dataType))
       // the label-mismatch predicate rides the fused pass (both-non-null-
       // and-different — the `=!=` three-valued semantics); see
-      // bruteForceTopK's note for the fused/join contract (incl. the
-      // non-integral query-id fallback)
+      // bruteForceTopK's note for the fused/join contract
       FusedTopK.cosineTopK(corpus, anchors, k, idCol, vecCol, anchorIdCol,
         excludeSelf = false, labelCol = Some(labelCol))
     else {

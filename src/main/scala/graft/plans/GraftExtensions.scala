@@ -51,6 +51,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    literals under a `FilterExec` comparison or `In` read their value from
   *    the generated class's `references`, so a request shape compiles once
   *    and not once per slug or cursor value
+  *
+  * Planner strategy:
+  *  - [[graft.operators.FusedTopK.Strategy]]: plans the fused top-k and
+  *    near-dup pair scans as `FusedTopKExec` / `FusedPairsExec`
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -68,6 +72,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RiJoinElimination)
     ext.injectOptimizerRule(_ => PreAggregateGroupingSets)
     ext.injectColumnar(_ => ParameterizeFilterLiterals.AsColumnarRule)
+    // the fused top-k and near-dup pair scans (graft.operators.FusedTopK)
+    ext.injectPlannerStrategy(_ => graft.operators.FusedTopK.Strategy)
   }
 }
 

@@ -60,19 +60,13 @@ object ColumnShim {
     column(org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
       expression(bloom), expression(value)))
 
-  /** Physical-row access for fused operators (graft.operators.FusedTopK):
-    * the executed plan's InternalRow RDD, and the inverse — both
-    * private[sql], hence the shim. The InternalRows from [[toInternalRdd]]
-    * are reused buffers: copy anything held across `next()`.
+  /** A DataFrame over a logical plan that graft builds itself (the fused
+    * scans of graft.operators.FusedTopK, planned by the strategy that
+    * graft.plans.GraftExtensions injects): `Dataset.ofRows` is
+    * private[sql], hence the shim.
     */
-  def toInternalRdd(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.toRdd
-
-  def internalCreateDataFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -92,6 +92,42 @@ class PlanPropertiesSpec extends SparkSpec {
     assert("(?i)bigramppl\\(".r.findAllIn(ppl).length == 1, s"BigramPpl evaluated more than once:\n$ppl")
   }
 
+  test("ANN and semantic-dedup queries plan the fused scans, with no RDD escape hatch") {
+    for (q <- Seq("q_ann_batch", "q_ann_negatives", "q_ann_ivf", "q_ann_ivf_probe",
+                  "q_ann_ivf_stored", "q_ann_adc", "q_dedup_semantic")) {
+      val p = plan(q)
+      assert(p.contains("FusedTopK") || p.contains("FusedPairs"), s"$q has no fused scan:\n$p")
+      assert(!p.contains("ExistingRDD"), s"$q scans an RDD:\n$p")
+    }
+  }
+
+  test("the Smoke flagship forces no broadcast of customer") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val df = SparkEntry.entry(spark, dir)
+      val rows = df.collect().toSeq
+      val broadcasts = Aqe.collect(df.queryExecution.executedPlan) { case b: BroadcastExchangeExec => b }
+      assert(broadcasts.size == 2, df.queryExecution.executedPlan) // nation and region
+      assert(!broadcasts.exists(_.treeString.contains("customer.parquet")),
+        df.queryExecution.executedPlan)
+      // the rows of the former formulation, with customer broadcast
+      def t(n: String) = Tables.load(spark, dir, n)
+      val hinted = t("lineitem")
+        .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(broadcast(t("customer")), col("o_custkey") === col("c_custkey"))
+        .join(broadcast(t("nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(t("region")), col("n_regionkey") === col("r_regionkey"))
+        .groupBy(col("r_name"), col("c_mktsegment"))
+        .agg(
+          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"),
+          countDistinct(col("o_orderkey")).as("order_cnt"))
+        .orderBy(col("r_name"), col("c_mktsegment"))
+      assert(rows.nonEmpty && rows == hinted.collect().toSeq)
+    }
+  }
+
   test("q_sample_split is a pure scan projection: no shuffle before the output sort") {
     val p = plan("q_sample_split")
     assert("(?i)exchange".r.findAllIn(p).length == 1,

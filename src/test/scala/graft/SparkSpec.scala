@@ -7,13 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs (one JVM-wide session, lazy): the
   * library session ([[graft.Tables.session]]: graft's extensions, so its
   * optimizer rules, physical rule and SQL functions, and the library confs)
-  * on `local[4]` with 4 shuffle partitions. */
+  * on `local[4]`, so with 4 shuffle partitions. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = Tables.session("local[4]")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
+  lazy val spark: SparkSession = Tables.session("local[4]")
 
   /** `body` evaluated with the shared session's conf `key` set to `value`,
     * then unset. A Dataset plans once, so build the DataFrame inside `body`. */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.{SparkSpec, Tables}
 
-/** FusedTopK: the fused mapPartitions retrieval pass must be ROW-IDENTICAL
+/** FusedTopK: the fused retrieval scan must be ROW-IDENTICAL
   * (scores bit-for-bit, tie order included) to the join + bounded-aggregate
   * formulation it replaces, across the edge corpus (null vectors, null
   * elements, zero vectors, mismatched lengths, exact-duplicate vectors → id
@@ -41,6 +41,9 @@ class FusedTopKSpec extends SparkSpec {
 
   private def sortedRows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
+
+  private def usesFusedScan(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("FusedTopK")
 
   test("bruteForceTopK: fused == join path on the edge corpus (both excludeSelf modes)") {
     val queries = planted.select(col("vec_id").as("query_id"), col("embedding"))
@@ -180,23 +183,25 @@ class FusedTopKSpec extends SparkSpec {
     assert(sortedRows(fused) == sortedRows(join))
   }
 
-  test("oversized query frame SHARDS: union of per-shard merges == single pass") {
-    // 9 queries through a cap of 4 → 3 shards (4 + 4 + 1); the union of
-    // the per-shard TopKAggregate merges must be ROW-IDENTICAL (bitwise
-    // scores, tie order) to one unsharded pass AND to the join path.
+  test("oversized query frame is scored in chunks: chunked == single pass") {
+    // 9 queries through a cap of 4 → 3 chunks (4 + 4 + 1), each one more
+    // pass over every corpus partition, all under ONE TopKAggregate merge:
+    // ROW-IDENTICAL (bitwise scores, tie order) to one unchunked pass AND to
+    // the join path.
     val queries = planted.select(col("vec_id").as("query_id"), col("embedding"))
-    val sharded = FusedTopK.cosineTopK(planted, queries, k = 2, "vec_id", "embedding",
+    val chunked = FusedTopK.cosineTopK(planted, queries, k = 2, "vec_id", "embedding",
       "query_id", excludeSelf = false, labelCol = None, maxQueries = 4)
     val single = FusedTopK.cosineTopK(planted, queries, k = 2, "vec_id", "embedding",
       "query_id", excludeSelf = false, labelCol = None)
     val join = Similarity.bruteForceTopK(planted, queries, k = 2,
       excludeSelf = false, fused = false)
-    assert(sortedRows(sharded) == sortedRows(single))
-    assert(sortedRows(sharded) == sortedRows(join))
-    // every query id present — shard boundaries drop nothing
-    assert(sharded.select("query_id").distinct().count() == 9)
+    assert(usesFusedScan(chunked))
+    assert(sortedRows(chunked) == sortedRows(single))
+    assert(sortedRows(chunked) == sortedRows(join))
+    // every query id present — chunk boundaries drop nothing
+    assert(chunked.select("query_id").distinct().count() == 9)
 
-    // ADC path, same contract: 6 queries / cap 4 → 2 shards
+    // ADC path, same contract: 6 queries / cap 4 → 2 chunks
     val cb = Pq.formulaCodebook(m = 1, ksub = 4, dsub = 3)
     // clean length-3 vectors only (PqDistTable rejects null elements)
     val clean = planted.filter(col("vec_id").isin(1L, 2L, 3L, 4L, 5L, 9L))
@@ -204,32 +209,34 @@ class FusedTopKSpec extends SparkSpec {
       graft.plans.VectorExpressions.pqDistTable(col("embedding"), cb.asSeq).as("__qtab"))
     val enc = clean.select(col("vec_id"),
       graft.plans.VectorExpressions.pqEncode(col("embedding"), cb.asSeq).as("codes"))
-    val adcSharded = FusedTopK.adcTopK(enc, q, k = 2, ksub = 4, "vec_id", "codes",
+    val adcChunked = FusedTopK.adcTopK(enc, q, k = 2, ksub = 4, "vec_id", "codes",
       "query_id", "__qtab", excludeSelf = false, maxQueries = 4)
     val adcSingle = FusedTopK.adcTopK(enc, q, k = 2, ksub = 4, "vec_id", "codes",
       "query_id", "__qtab", excludeSelf = false)
-    assert(sortedRows(adcSharded) == sortedRows(adcSingle))
-    assert(adcSharded.select("query_id").distinct().count() == 6)
+    assert(usesFusedScan(adcChunked))
+    assert(sortedRows(adcChunked) == sortedRows(adcSingle))
+    assert(adcChunked.select("query_id").distinct().count() == 6)
   }
 
-  test("DUPLICATE query ids never straddle shards: sharded == single pass with dup ids") {
-    // A duplicated id split across two shards would emit TWO k-row groups
-    // where the single pass emits ONE (both occurrences aggregate into one
-    // heap). The id-sorted, run-extending chunker keeps each id in exactly
-    // one shard, so the union stays row-identical even on degenerate
-    // duplicate-id frames: 9 base queries + 3 duplicates of ids {1, 5, 9},
-    // cap 4 → boundaries land inside the duplicate runs without the rule.
+  test("duplicate query ids across chunks merge: chunked == single pass") {
+    // Both paths aggregate a duplicated query id into ONE group. With
+    // 9 base queries + 3 duplicates of ids {1, 5, 9} and a cap of 4, the
+    // duplicates land in other chunks than their originals; the one merge
+    // over every chunk's candidates still yields one k-row group per id.
     val base = planted.select(col("vec_id").as("query_id"), col("embedding"))
     val dups = base.filter(col("query_id").isin(1L, 5L, 9L))
     val queries = base.unionByName(dups)
-    val sharded = FusedTopK.cosineTopK(planted, queries, k = 2, "vec_id", "embedding",
+    val chunked = FusedTopK.cosineTopK(planted, queries, k = 2, "vec_id", "embedding",
       "query_id", excludeSelf = false, labelCol = None, maxQueries = 4)
     val single = FusedTopK.cosineTopK(planted, queries, k = 2, "vec_id", "embedding",
       "query_id", excludeSelf = false, labelCol = None)
-    assert(sortedRows(sharded) == sortedRows(single))
+    val join = Similarity.bruteForceTopK(planted, queries, k = 2,
+      excludeSelf = false, fused = false)
+    assert(sortedRows(chunked) == sortedRows(single))
+    assert(sortedRows(chunked) == sortedRows(join))
     // one group per id — never k extra rows for a duplicated id
-    assert(sharded.select("query_id").distinct().count() == 9)
-    assert(sharded.count() == single.count())
+    assert(chunked.select("query_id").distinct().count() == 9)
+    assert(chunked.count() == single.count())
   }
 
   test("decimal CORPUS ids beyond long precision take the join path (no lossy cast)") {
@@ -249,34 +256,46 @@ class FusedTopKSpec extends SparkSpec {
     assert(e.getMessage.contains("corpus id"))
   }
 
-  test("decimal query ids beyond long precision take the join path (no lossy cast)") {
-    // decimal(19,0) CAN hold values a long cannot — the fused gate must
-    // reject the TYPE (precision > 18), not trust runtime values
+  test("decimal(19,0) query ids ride the fused scan, == the join path") {
+    // decimal(19,0) CAN hold values a long cannot: the query id rides the
+    // fused scan in its own type (only the CORPUS id is cast to long, and
+    // gated by TYPE — precision > 18 — not by runtime values)
     assert(!FusedTopK.exactIntegerIdType(DecimalType(19, 0)))
     assert(!FusedTopK.exactIntegerIdType(DecimalType(38, 0)))
     assert(FusedTopK.exactIntegerIdType(DecimalType(18, 0)))
     val qDec = planted.filter(col("vec_id") <= 3)
       .select(col("vec_id").cast(DecimalType(19, 0)).as("query_id"), col("embedding"))
-    val viaDefault = Similarity.bruteForceTopK(planted, qDec, k = 2, fused = true)
-    val viaJoin    = Similarity.bruteForceTopK(planted, qDec, k = 2, fused = false)
-    assert(sortedRows(viaDefault) == sortedRows(viaJoin))
-    assert(viaDefault.schema("query_id").dataType == DecimalType(19, 0))
+    for (ex <- Seq(true, false)) {
+      val viaDefault = Similarity.bruteForceTopK(planted, qDec, k = 2, excludeSelf = ex)
+      val viaJoin = Similarity.bruteForceTopK(planted, qDec, k = 2, excludeSelf = ex, fused = false)
+      assert(usesFusedScan(viaDefault))
+      assert(sortedRows(viaDefault) == sortedRows(viaJoin), s"excludeSelf=$ex")
+      assert(viaDefault.schema("query_id").dataType == DecimalType(19, 0))
+    }
   }
 
-  test("non-integral query ids fall back to the join path (no NPE, no id merging)") {
+  test("string query ids ride the fused scan, == the join path") {
     // "123" vs "0123": distinct STRING ids that a long cast would silently
-    // merge into one heap (and a failed cast would NPE at the driver).
+    // merge into one heap; in their own type they stay two groups.
     val q2 = planted.filter(col("vec_id").isin(1L, 2L, 3L))
       .select(when(col("vec_id") === 1L, lit("0123"))
         .when(col("vec_id") === 2L, lit("123"))
         .otherwise(lit("q3")).as("query_id"), col("embedding"))
     val viaDefault = Similarity.bruteForceTopK(planted, q2, k = 3, fused = true)
     val viaJoin    = Similarity.bruteForceTopK(planted, q2, k = 3, fused = false)
+    assert(usesFusedScan(viaDefault))
     assert(sortedRows(viaDefault) == sortedRows(viaJoin))
     // three distinct query ids, each with its own full top-3
     assert(viaDefault.select("query_id").distinct().count() == 3)
     assert(viaDefault.count() == 9)
     assert(viaDefault.schema("query_id").dataType == StringType)
+    // excludeSelf compares corpus and query ids as the join's `=!=` does
+    // (Spark's own coercion), so both paths drop the same rows
+    val numeric = planted.filter(col("vec_id").isin(1L, 2L))
+      .select(when(col("vec_id") === 1L, lit("01")).otherwise(lit("2")).as("query_id"),
+        col("embedding"))
+    assert(sortedRows(Similarity.bruteForceTopK(planted, numeric, k = 3, excludeSelf = true)) ==
+      sortedRows(Similarity.bruteForceTopK(planted, numeric, k = 3, excludeSelf = true, fused = false)))
   }
 
   test("fused output keeps the original exact-integer query-id type") {

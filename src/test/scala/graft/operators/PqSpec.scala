@@ -139,13 +139,15 @@ class PqSpec extends SparkSpec {
 
   test("plan: candidates rank through ONE exchange (the top-k aggregate)") {
     val q = emb.limit(3).select($"vec_id".as("query_id"), $"embedding")
-    // fused default: the scoring loop runs inside mapPartitions (an
-    // ExistingRDD scan of per-partition winners), so the ONLY exchange left
-    // is the final top-k merge — no broadcast join node at all
+    // fused default: the FusedTopK scan scores the corpus against the
+    // broadcast queries, so the ONLY shuffle is the final top-k merge — no
+    // join node and no RDD escape hatch
     val plan = Pq.adcTopKBatch(Pq.encode(emb, cb), cb, q, k = 5)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"), plan)
-    assert("(?i)exchange".r.findAllIn(plan).size <= 1, plan) // the agg merge
+    assert(plan.contains("FusedTopK") && !plan.contains("ExistingRDD"), plan)
+    assert(!plan.contains("Join"), plan)
+    assert("BroadcastExchange".r.findAllIn(plan).size == 1, plan) // the queries
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan) // the agg merge
     // the join formulation keeps its own contract: queries broadcast,
     // candidates through the bounded aggregate's exchange
     val joined = Pq.adcTopKBatch(Pq.encode(emb, cb), cb, q, k = 5, fused = false)

@@ -6,6 +6,11 @@ import graft.SparkSpec
   * session (built with the extensions). */
 class GraftExtensionsSpec extends SparkSpec {
 
+  test("the shared spec session plans the fused scans with graft's strategy") {
+    assert(graft.SparkTestSession.spark.sessionState.planner.strategies
+      .contains(graft.operators.FusedTopK.Strategy))
+  }
+
   test("the shared spec session carries graft's SQL functions, optimizer rules and columnar rule") {
     val s = graft.SparkTestSession.spark
     for ((id, _, _) <- GraftExtensions.functions)
