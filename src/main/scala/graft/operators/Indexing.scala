@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.FieldPath
@@ -45,13 +45,18 @@ object Indexing {
         lit(f.name).as("field"),
         col(slugField).cast("string").as("slug"),
         explode(f.values).as("value"))
-        // lower-then-take, matching lookup/updateIndex's
-        // toLowerCase(Locale.ROOT).take — the other order diverges for
-        // characters whose lowercase form expands (e.g. İ → "i̇")
-        .withColumn("prefix", substring(lower(col("value")), 1, f.depth))
+        .withColumn("prefix", prefixCol(lit(f.depth)))
         .select("field", "prefix", "slug", "value")
     }.reduce(_ unionAll _)
   }
+
+  /** The prefix rule, `substring(lower(value), 1, depth)`, shared by the
+    * build and the incremental rebuild. Lower-then-take, matching
+    * [[prefixOf]]'s `toLowerCase(Locale.ROOT)` first — the other order
+    * diverges for characters whose lowercase form expands (e.g. İ → "i̇").
+    */
+  private def prefixCol(depth: Column): Column =
+    lower(col("value")).substr(lit(1), depth)
 
   /** Build (full rebuild): write the index partitioned by (field, prefix),
     * sorted within partitions for ordered scans + min/max pruning.
@@ -72,11 +77,11 @@ object Indexing {
       .mode("overwrite")
       .parquet(path)
 
-  /** The driver-side twin of the build-time prefix expression
-    * `substring(lower(value), 1, depth)`. Spark's `substring` counts CODE
-    * POINTS, so the JVM side must too — a UTF-16 `String.take(depth)` would
-    * split a leading surrogate pair (e.g. an emoji at depth 1) and compute a
-    * prefix the index never wrote, silently losing the lookup.
+  /** The driver-side twin of [[prefixCol]], for [[lookup]]'s probe value.
+    * Spark's `substring` counts CODE POINTS, so the JVM side must too — a
+    * UTF-16 `String.take(depth)` would split a leading surrogate pair (e.g.
+    * an emoji at depth 1) and compute a prefix the index never wrote,
+    * silently losing the lookup.
     */
   private[operators] def prefixOf(value: String, depth: Int): String = {
     val lower = value.toLowerCase(java.util.Locale.ROOT)
@@ -300,6 +305,9 @@ object Indexing {
                                   slugField: String, fields: Seq[String],
                                   changes: ChangedPaths, depth: Int = 1,
                                   slugOfPath: String => String = identity): Seq[DiffEntry] = {
+    // no-op suppression reads the live index: a crashed predecessor's
+    // pending partitions must be back in it first, or their slugs look absent
+    recoverPendingSwap(spark, path)
     val diff = diffFromChangedPaths(newDf, slugField, fields, changes,
       existingIndex = Some(readIndex(spark, path)), slugOfPath = slugOfPath)
     if (diff.nonEmpty) updateIndex(spark, path, diff, depth)
@@ -320,7 +328,8 @@ object Indexing {
 
   /** Incremental index update: merges a diff into an existing index rewriting
     * ONLY the `(field, prefix)` partitions that the changed slugs touch (their
-    * old rows found by slug — a pushdown-friendly scan — plus their new rows).
+    * old rows plus their new rows). The entries become a local frame and take
+    * the [[updateIndexFromDiff]] rebuild.
     */
   def updateIndex(spark: SparkSession, path: String, diff: Seq[DiffEntry], depth: Int = 1): Unit =
     updateIndexDepths(spark, path, diff, _ => depth)
@@ -329,7 +338,7 @@ object Indexing {
   private val ManifestName = "_graft_update_manifest.json" // leading _: invisible to Spark readers
 
   /** Replay or clean up a partition swap a previous update started but did
-    * not finish. [[updateIndexDepths]] stages rebuilt partitions in a temp
+    * not finish. Every update stages rebuilt partitions in a temp
     * dir, records the touched-partition list (with a rebuilt/pure-delete
     * marker per partition) in a manifest, then delete+renames partition by
     * partition — so a crash mid-loop leaves manifest + temp dir behind and
@@ -413,55 +422,21 @@ object Indexing {
     * must match the depths the index was written with.
     */
   def updateIndexDepths(spark: SparkSession, path: String, diff: Seq[DiffEntry],
-                        depthOf: String => Int): Unit = {
+                        depthOf: String => Int): Unit =
+    rebuild(spark, path, entryFrame(spark, diff), diff.flatMap(_.values.keys).distinct, depthOf)
+
+  /** Entries as the `(status, slug, values)` frame [[extractDiff]] returns. */
+  private[graft] def entryFrame(spark: SparkSession, diff: Seq[DiffEntry]): DataFrame = {
     import spark.implicits._
-    // complete any crashed predecessor FIRST — `existing` below must read a
-    // consistent index, not a half-swapped one
-    recoverPendingSwap(spark, path)
-    val slugs = diff.map(_.slug)
-    val existing = readIndex(spark, path)
-
-    // New rows for A/M entries. prefixOf: the same code-point prefix rule the
-    // index was built with.
-    val newRows = diff
-      .filter(d => d.status == "A" || d.status == "M")
-      .flatMap(d => d.values.toSeq.flatMap { case (f, vs) =>
-        vs.map(v => (f, prefixOf(v, depthOf(f)), d.slug, v))
-      })
-      .toDF("field", "prefix", "slug", "value")
-
-    // Partitions touched by old rows of the changed slugs or by the new rows.
-    // This set is bounded by |diff| × values-per-record — safe to collect.
-    val oldTouched = existing.filter(col("slug").isin(slugs: _*))
-      .select("field", "prefix").distinct()
-    val touched = oldTouched.union(newRows.select("field", "prefix").distinct()).distinct()
-    val touchedParts = touched.collect().map(r => (r.getString(0), r.getString(1)))
-
-    // Rebuild touched partitions: surviving old rows (other slugs) + new rows.
-    val rebuilt = existing
-      .join(broadcast(touched), Seq("field", "prefix"), "left_semi")
-      .filter(!col("slug").isin(slugs: _*))
-      .unionByName(newRows.join(broadcast(touched), Seq("field", "prefix"), "left_semi"))
-
-    stageAndSwap(spark, path, rebuilt, touchedParts)
+    diff.map(d => (d.status, d.slug, d.values)).toDF("status", "slug", "values")
   }
 
   /** BULK incremental update — the diff stays a DataFrame end to end (the
     * [[extractDiff]] `(status, slug, values)` shape) and is NEVER collected:
     * the 100 TB-safe form for a change volume approaching the corpus (bulk
     * re-ingest, a mass re-tag), where [[updateIndex]]'s driver-side
-    * `Seq[DiffEntry]` funnel would pin the driver. New index rows derive by
-    * distributed explode; old rows of changed slugs leave via an anti-join
-    * on the slug frame (no `isin` literal list — nothing scales with the
-    * change volume on the driver). The only collect is the touched
-    * `(field, prefix)` PARTITION LIST — bounded by the index geometry
-    * (≤ |fields| × |alphabet|^depth), not by the change volume. Same staged
-    * manifest swap, so crash recovery and pure-deletion clearing behave
-    * exactly like the entry path ([[recoverPendingSwap]]).
-    *
-    * The Seq API remains the right call for SMALL feeds: its `isin`
-    * restriction reaches the parquet scan as a pushed predicate, which the
-    * join formulation forfeits.
+    * `Seq[DiffEntry]` funnel would pin the driver. Both take the same
+    * rebuild ([[bulkRebuilt]]).
     *
     * `fields` must cover every field the diff's `values` maps mention
     * (unknown fields raise, never index under a wrong depth).
@@ -474,9 +449,17 @@ object Indexing {
   def updateIndexFromDiffDepths(spark: SparkSession, path: String, diff: DataFrame,
                                 fields: Seq[String], depthOf: String => Int): Unit = {
     require(fields.nonEmpty, "updateIndexFromDiff needs at least one indexed field")
+    rebuild(spark, path, diff, fields, depthOf)
+  }
+
+  /** Every update's body. `fields` may be empty only for a deletion-only
+    * entry list, whose frame carries no values to index.
+    */
+  private def rebuild(spark: SparkSession, path: String, diff: DataFrame,
+                      fields: Seq[String], depthOf: String => Int): Unit = {
     recoverPendingSwap(spark, path)
-    // The diff plan (often a two-snapshot full-outer join) feeds four
-    // consumers below — persist so it computes once.
+    // The diff plan (often a two-snapshot full-outer join) feeds both the
+    // touched-list collect and the write — persist so it computes once.
     val d = diff.select(col("status"), col("slug").cast("string").as("slug"), col("values"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -485,21 +468,23 @@ object Indexing {
     } finally d.unpersist(blocking = false)
   }
 
-  /** The bulk path's rebuild plan, exposed for the plan audit
-    * (PlanPropertiesSpec pins its 100 TB properties: new rows derive by
-    * distributed explode, departing rows by a left-anti join — no `isin`
-    * literal list, no row-data collect; the only driver materialization is
-    * the geometry-bounded touched-partition list this returns alongside).
+  /** The rebuild plan, exposed for the plan audit (PlanPropertiesSpec pins
+    * its 100 TB properties: new rows derive by distributed explode,
+    * departing rows by a left-anti join — no `isin` literal list, no
+    * row-data collect — and the index is scanned once). The one driver
+    * materialization is the touched `(field, prefix)` partition list this
+    * returns alongside — bounded by the index geometry
+    * (≤ |fields| × |alphabet|^depth), not by the change volume. It gates
+    * both branches as a local relation, whose exact size Spark knows.
     */
   private[graft] def bulkRebuilt(spark: SparkSession, path: String, d: DataFrame,
                                  fields: Seq[String], depthOf: String => Int)
       : (DataFrame, Seq[(String, String)]) = {
+    import spark.implicits._
     val slugs = d.select("slug").distinct()
     val existing = readIndex(spark, path)
 
-    // Build-rule parity: prefix = substring(lower(value), 1, depth) — the
-    // SAME native expression writeIndex uses (code-point semantics), with
-    // per-field depth resolved by a when-chain over the configured fields.
+    // per-field depth by a when-chain over the configured fields
     val depthExpr = fields.foldLeft(when(lit(false), lit(1))) { (acc, f) =>
       acc.when(col("field") === f, lit(depthOf(f)))
     }.otherwise(raise_error(concat(
@@ -509,22 +494,22 @@ object Indexing {
     val newRows = d.filter(col("status").isin("A", "M"))
       .select(col("slug"), explode(col("values")).as(Seq("field", "__vals")))
       .select(col("field"), col("slug"), explode(col("__vals")).as("value"))
-      .withColumn("prefix", lower(col("value")).substr(lit(1), depthExpr))
+      .withColumn("prefix", prefixCol(depthExpr))
       .select("field", "prefix", "slug", "value")
 
-    val oldTouched = existing.join(slugs, Seq("slug"), "left_semi")
-      .select("field", "prefix").distinct()
-    val touched = oldTouched.union(newRows.select("field", "prefix").distinct()).distinct()
-    val touchedParts = touched.collect().map(r => (r.getString(0), r.getString(1)))
+    val touchedParts = existing.join(slugs, Seq("slug"), "left_semi").select("field", "prefix")
+      .union(newRows.select("field", "prefix")).distinct()
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val touched = touchedParts.toDF("field", "prefix")
 
     val rebuilt = existing
-      .join(broadcast(touched), Seq("field", "prefix"), "left_semi")
+      .join(touched, Seq("field", "prefix"), "left_semi")
       .join(slugs, Seq("slug"), "left_anti")
-      .unionByName(newRows.join(broadcast(touched), Seq("field", "prefix"), "left_semi"))
+      .unionByName(newRows.join(touched, Seq("field", "prefix"), "left_semi"))
     (rebuilt, touchedParts)
   }
 
-  /** The shared write tail of both update paths: durable swap — write the
+  /** The write tail of every update: durable swap — write the
     * rebuilt partitions to a temp dir FIRST (the old files are still the
     * source of truth while this job runs — no reliance on cached blocks),
     * record the touched-partition list in a manifest, then delete+rename

@@ -276,6 +276,34 @@ class PlanPropertiesSpec extends SparkSpec {
       s"new rows must derive by distributed explode (values map + value list):\n$p")
     assert(!p.contains(" INSET ") && !p.toLowerCase.contains("isin"),
       s"no isin/INSET literal list — nothing on the driver may scale with change volume:\n$p")
+
+    // An entry list takes the same rebuild. In both, the collected touched
+    // list gates the branches as a local relation, so the index is scanned
+    // once, not once more for the gate.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val entries = graft.operators.Indexing.extractDiffEntries(docs, v2, "slug", Seq("lang", "source"))
+    val fromEntries = graft.operators.Indexing.bulkRebuilt(spark, idxPath,
+      graft.operators.Indexing.entryFrame(spark, entries), Seq("lang", "source"), _ => 1)._1
+    for (df <- Seq(rebuilt, fromEntries)) {
+      val plan = df.queryExecution.executedPlan
+      val p = plan.toString
+      assert(!p.contains(" INSET ") && !p.toLowerCase.contains("isin"), p)
+      val indexScans = Aqe.collect(plan) {
+        case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(idxPath)) => s
+      }
+      assert(indexScans.size == 1, s"the rebuild must scan the index once:\n$p")
+      val gates = Aqe.collect(plan) {
+        case j: BaseJoinExec if j.leftKeys.map(_.references.head.name) == Seq("field", "prefix") => j
+      }
+      assert(gates.size == 2 && gates.forall(g =>
+          g.right.exists(_.isInstanceOf[LocalTableScanExec]) &&
+          !g.right.exists(_.isInstanceOf[FileSourceScanExec])),
+        s"both branches must be gated by the touched list as a LocalTableScan:\n$p")
+    }
+    assert(fromEntries.collect().toSet == rebuilt.collect().toSet)
   }
 
   test("q_agg_pricing_sorted: bit-identical to the raw-layout row (the rewrite is row-preserving)") {

@@ -367,6 +367,74 @@ class IndexingSpec extends SparkSpec {
     }
   }
 
+  private def indexRows(p: String) = Indexing.readIndex(spark, p)
+    .select("field", "prefix", "slug", "value").collect().map(_.toSeq).toSet
+
+  test("per-field depths: entry-list and frame updates both land on the v2 rebuild") {
+    val v2 = Seq(
+      ("arctium-lappa", "Greater Burdock", Seq("root")),
+      ("cymbopogon-citratus", "Lemongrass", Seq("leaf", "edible")),
+      ("zingiber-officinale", "Ginger", Seq("rhizome"))
+    ).toDF("slug", "name", "tagSlugs")
+    val fields = Seq("name", "tagSlugs")
+    val depthOf = Map("name" -> 2, "tagSlugs" -> 1)
+    def written(df: org.apache.spark.sql.DataFrame): String = {
+      val p = freshIndexPath
+      Indexing.writeIndexResolved(df, "slug", fields.map(f =>
+        Indexing.IndexField(f, depthOf(f), graft.api.FieldPath.resolve(df, f))), p)
+      p
+    }
+    val rebuilt = indexRows(written(v2))
+
+    val entryPath = written(herbs)
+    Indexing.updateIndexDepths(spark, entryPath,
+      Indexing.extractDiffEntries(herbs, v2, "slug", fields), depthOf)
+    assert(indexRows(entryPath) == rebuilt)
+    assert(new java.io.File(s"$entryPath/field=name/prefix=gr").exists())
+
+    val framePath = written(herbs)
+    Indexing.updateIndexFromDiffDepths(spark, framePath,
+      Indexing.extractDiff(herbs, v2, "slug", fields), fields, depthOf)
+    assert(indexRows(framePath) == rebuilt)
+
+    // a deletion-only entry list names no field; a frame caller must name one
+    Indexing.updateIndexDepths(spark, entryPath,
+      Seq(DiffEntry("D", "zingiber-officinale", Map.empty)), depthOf)
+    assert(indexRows(entryPath) == rebuilt.filterNot(_(2) == "zingiber-officinale"))
+    intercept[IllegalArgumentException] {
+      Indexing.updateIndexFromDiffDepths(spark, framePath,
+        Indexing.extractDiff(herbs, v2, "slug", fields), Seq.empty, depthOf)
+    }
+  }
+
+  test("a change feed replays a crashed swap before it suppresses no-op deletions") {
+    // Plant the crash as "crashed partition swap recovers" does: prefix=g,
+    // which holds arctium-lappa's only row, is still pending in the temp dir.
+    val path = freshIndexPath
+    Indexing.writeIndex(herbs, "slug", Seq("name"), path)
+    Indexing.updateIndex(spark, path, Seq(
+      DiffEntry("M", "arctium-lappa", Map("name" -> Seq("Greater Burdock"))),
+      DiffEntry("D", "centella-asiatica", Map.empty)))
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmpDir = new org.apache.hadoop.fs.Path(path + "__graft_update_tmp/field=name/prefix=g")
+    fs.mkdirs(tmpDir.getParent)
+    fs.rename(new org.apache.hadoop.fs.Path(path + "/field=name/prefix=g"), tmpDir)
+    val out = fs.create(new org.apache.hadoop.fs.Path(path + "/_graft_update_manifest.json"), true)
+    out.write("""[["name","g",true]]""".getBytes("UTF-8"))
+    out.close()
+
+    val v2 = Seq(("cymbopogon-citratus", "Lemongrass")).toDF("slug", "name")
+    val diff = Indexing.updateIndexFromChangedPaths(spark, path, v2, "slug", Seq("name"),
+      Indexing.ChangedPaths(deleted = Seq("arctium-lappa")))
+    assert(diff == Seq(DiffEntry("D", "arctium-lappa", Map.empty)))
+    // a swap still pending would bring the deleted row back here
+    Indexing.recoverPendingSwap(spark, path)
+    val rebuiltPath = freshIndexPath
+    Indexing.writeIndex(v2, "slug", Seq("name"), rebuiltPath)
+    assert(indexRows(path) == indexRows(rebuiltPath))
+  }
+
   private def freshIndexPath0(): String = {
     val p = freshIndexPath
     Indexing.writeIndex(herbs, "slug", Seq("tagSlugs"), p)
