@@ -1,10 +1,10 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet,
-  GenericInternalRow, SortOrder, UnsafeProjection}
+  Cast, EvalMode, GenericInternalRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, ClusteredDistribution,
   Distribution, IdentityBroadcastMode, UnspecifiedDistribution}
@@ -14,22 +14,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
-import graft.plans.TopKBuffer
+import graft.plans.{TopKAggregate, TopKBuffer}
 
 /** Fused broadcast-scored top-k: the brute-force retrieval inner loop
   * (score every (corpus row, query) pair, keep k per query) run inside one
   * planned operator instead of a BroadcastNestedLoopJoin feeding an
   * ObjectHashAggregate.
   *
-  * WHY: the join formulation is plan-shape-optimal (one scan, one slim
-  * exchange — see [[graft.plans.TopKAggregate]]) but its inner loop
-  * materializes an UnsafeRow PER SCORED PAIR between the join and the
-  * aggregate, and the object-hash aggregate sits outside whole-stage
-  * codegen — ~150 ns/pair of pure row plumbing around a ~30 ns dot product.
-  * The fused scan keeps per-query [[TopKBuffer]]s (exactly the aggregate's
-  * discipline) and emits only ≤ partitions × queries × k candidate rows; a
-  * final [[graft.plans.TopKAggregate]] merge reproduces the aggregate plan's
-  * exchange exactly.
+  * WHY: a join feeding the aggregate materializes an UnsafeRow PER SCORED
+  * PAIR, and the object-hash aggregate sits outside whole-stage codegen —
+  * ~150 ns/pair of pure row plumbing around a ~30 ns dot product (sf10
+  * q_ann_batch: 20.9 s that way, 1.99 s fused; BASELINE.md). The fused scan
+  * keeps per-query [[TopKBuffer]]s (exactly the aggregate's discipline)
+  * and emits only ≤ partitions × queries × k candidate rows to one final
+  * [[graft.plans.TopKAggregate]] merge.
   *
   * PLAN: [[FusedTopKScan]] / [[FusedPairsScan]] are logical nodes that
   * [[FusedTopK.Strategy]] (injected by [[graft.plans.GraftExtensions]])
@@ -38,15 +36,16 @@ import graft.plans.TopKBuffer
   * broadcast exchange of the queries, the fused scan with its metrics
   * (output rows, scored pairs) and the merge exchange.
   *
-  * BIT PARITY with the join path is load-bearing (the q_ann_* oracle rows
+  * BIT PARITY with the SQL scorers is load-bearing (the q_ann_* oracle rows
   * hash-check full rankings): the scorers replicate
   * [[graft.plans.CosineSim]].compute / [[graft.plans.AdcDistance]].compute
   * accumulator-for-accumulator in index order (float→double widening is
   * exact; per-row invariants like the self-norm are hoisted, which
   * IEEE-preserves the per-pair value since each accumulator's own fold
   * sequence is unchanged), and the insert discipline IS [[TopKBuffer]].
-  * Parity is pinned in FusedTopKSpec on planted edge corpora (null
-  * vectors, null elements, zero vectors, ties, mismatched lengths).
+  * Parity is pinned in FusedTopKSpec against a window ranking of the
+  * scored cross product, on planted edge corpora (null vectors, null
+  * elements, zero vectors, ties, mismatched lengths) and real embeddings.
   */
 object FusedTopK {
 
@@ -57,19 +56,19 @@ object FusedTopK {
     */
   val MaxFusedQueries: Int = 1 << 16
 
-  /** The corpus-id types the fused scans round-trip through their long-keyed
-    * heaps without loss: the exact-integer family [[graft.plans
-    * .TopKAggregate.TopKByScore]] accepts (integral + scale-0 decimal), with
-    * precision ≤ 18 so `cast("long")` is lossless — a decimal(p>18,0) id
-    * beyond Long range would null out or wrap and silently merge or lose
-    * neighbors. Callers check it and fall back to the join path (where
-    * TopKByScore gates the id loudly at analysis); the query id rides
-    * through in its own type and needs no gate.
+  /** The corpus id as the long the heaps key on. A non-integer id fails
+    * here, at plan construction ([[TopKAggregate.exactIntegerId]], the
+    * contract the merge aggregate checks); a decimal(p>18,0) id beyond Long
+    * range fails the cast whatever `spark.sql.ansi.enabled` says, where a
+    * null or wrapped id would silently merge or lose neighbors. The query id
+    * rides through in its own type and needs no check.
     */
-  def exactIntegerIdType(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case d: DecimalType if d.scale == 0 && d.precision <= 18 => true
-    case _                                             => false
+  private def longId(df: DataFrame, idCol: String): Column = {
+    val dt = df.schema(idCol).dataType
+    require(TopKAggregate.exactIntegerId(dt),
+      s"FusedTopK: corpus id '$idCol' must be an exact integer (integral or decimal(p,0)), " +
+        s"got ${dt.catalogString}")
+    ColumnShim.column(Cast(ColumnShim.expression(col(idCol)), LongType, evalMode = EvalMode.ANSI))
   }
 
   /** Exact cosine top-k per query (the [[Similarity.bruteForceTopK]] inner
@@ -97,8 +96,8 @@ object FusedTopK {
   }
 
   /** ADC (PQ asymmetric-distance) top-k per query — the
-    * [[Pq.adcTopKBatch]] inner loop. Scores are NEGATED distances, exactly
-    * like the join path (the shared buffer keeps highest-first). */
+    * [[Pq.adcTopKBatch]] inner loop. Scores are NEGATED distances (the
+    * shared buffer keeps highest-first). */
   private[operators] def adcTopK(encoded: DataFrame, queryTables: DataFrame, k: Int,
       ksub: Int, idCol: String, codesCol: String, queryIdCol: String,
       tableCol: String, excludeSelf: Boolean,
@@ -106,27 +105,26 @@ object FusedTopK {
     topK(AdcKernel(ksub), k, excludeSelf, maxQueries,
       encoded, idCol, Seq(col(codesCol)), queryTables, queryIdCol, Seq(col(tableCol)))
 
-  /** The fused scan under the join path's merge: corpus rows are
+  /** The fused scan under the one top-k merge: corpus rows are
     * `(id as long, kernel columns…)`, query rows `(query id, self id, pairs,
-    * kernel columns…)`. `excludeSelf` keeps the join's `id =!= qid`
-    * semantics in the query id's own type: `self` is the one corpus id equal
-    * to the query id under Spark's comparison (null: none), and a query whose
-    * comparison is null (a null id) pairs with nothing.
+    * kernel columns…)`. `excludeSelf` keeps SQL's `id =!= qid` semantics in
+    * the query id's own type: `self` is the one corpus id equal to the query
+    * id under Spark's comparison (null: none, as for a query id no long
+    * can hold), and a query whose comparison is null (a null id) pairs with
+    * nothing.
     */
   private def topK(kernel: TopKKernel, k: Int, excludeSelf: Boolean, maxQueries: Int,
-      corpus: DataFrame, idCol: String, corpusCols: Seq[org.apache.spark.sql.Column],
-      queries: DataFrame, queryIdCol: String, queryCols: Seq[org.apache.spark.sql.Column])
+      corpus: DataFrame, idCol: String, corpusCols: Seq[Column],
+      queries: DataFrame, queryIdCol: String, queryCols: Seq[Column])
       : DataFrame = {
     require(maxQueries > 0, s"FusedTopK: maxQueries must be positive, got $maxQueries")
+    val c = corpus.select(longId(corpus, idCol) +: corpusCols: _*)
     val idType = corpus.schema(idCol).dataType
-    require(exactIntegerIdType(idType),
-      s"FusedTopK: fused path needs an exact-integer corpus id (integral or decimal(p,0), " +
-        s"precision <= 18), got ${idType.catalogString} — use the join path (fused = false)")
     val qid = col(queryIdCol)
     val asId = qid.try_cast(idType)
-    val self = (if (excludeSelf) when(asId === qid, asId) else lit(null)).cast("long").as("__self")
+    val self = (if (excludeSelf) when(asId === qid, asId) else lit(null))
+      .try_cast(LongType).as("__self")
     val pairs = (if (excludeSelf) (lit(0).cast(idType) === qid).isNotNull else lit(true)).as("__pairs")
-    val c = corpus.select(col(idCol).cast("long") +: corpusCols: _*)
     val q = queries.select(Seq(qid, self, pairs) ++ queryCols: _*)
     val qidField = queries.schema(queryIdCol)
     val out = Seq(AttributeReference(queryIdCol, qidField.dataType, qidField.nullable)(),
@@ -135,7 +133,7 @@ object FusedTopK {
     ColumnShim.ofRows(corpus.sparkSession, FusedTopKScan(kernel, k, excludeSelf, maxQueries,
         c.queryExecution.analyzed, q.queryExecution.analyzed, out))
       .groupBy(qid)
-      .agg(graft.plans.TopKAggregate.topK(col("__score"), col("__id"), k).as("__tk"))
+      .agg(TopKAggregate.topK(col("__score"), col("__id"), k).as("__tk"))
       .select(qid, explode(col("__tk")).as("__e"))
       .select(qid, col("__e.id").as(idCol), col("__e.score").as("score"))
   }
@@ -144,15 +142,15 @@ object FusedTopK {
     * .semDupesOnIndex]] inner join done without materializing a row per
     * candidate pair. Input: every corpus row replicated to its probe
     * buckets (`origCol` marks the identity copy, i.e. the row standing in
-    * its OWN bucket — the join formulation's base side). [[FusedPairsExec]]
+    * its OWN bucket — the base side of a probe×base join). [[FusedPairsExec]]
     * requires its input clustered and sorted on `(cell, bucket)`, so each
     * group streams contiguously; within a group every member (copy or
     * original) scores against every ORIGINAL with a larger id — exactly the
     * probe×base join with its `id_a < id_b` orientation, each qualifying
     * pair emitted once (a copy never lands in its own bucket: XOR with a
     * nonzero mask). Null cell/bucket rows are dropped up front (equi-join
-    * semantics); null-vector/element/length-mismatch scores are null in the
-    * twin and cannot pass `>= threshold`, so they are skipped identically.
+    * semantics); null-vector/element/length-mismatch scores are null under
+    * CosineSim and cannot pass `>= threshold`, so they are skipped.
     * Output: `(id_a, id_b, score)`, score non-null ≥ threshold.
     */
   private[operators] def cosinePairs(replicated: DataFrame, threshold: Double,
@@ -162,7 +160,7 @@ object FusedTopK {
     val proj = replicated
       .filter(col(cellCol).isNotNull && col(bucketCol).isNotNull)
       .select(col(cellCol).cast("int"), col(bucketCol).cast("int"),
-        col(origCol), col(idCol).cast("long"), col(vecCol))
+        col(origCol), longId(replicated, idCol), col(vecCol))
     val out = Seq(AttributeReference("id_a", LongType, nullable = false)(),
       AttributeReference("id_b", LongType, nullable = false)(),
       AttributeReference("score", DoubleType, nullable = false)())
@@ -270,9 +268,9 @@ object FusedTopK {
     var pairs = 0L
     while (rows.hasNext) {
       val row = rows.next()
-      // join-path parity: `id =!= qid` is null for a null id, so excludeSelf
-      // drops the row; other shapes would feed TopKByScore a null id, which
-      // errors — do so here
+      // SQL's `id =!= qid` is null for a null id, so excludeSelf drops the
+      // row; other shapes would feed TopKByScore a null id, which errors —
+      // do so here
       if (row.isNullAt(0)) require(excludeSelf,
         "FusedTopK: corpus id is null — ids must be non-null exact integers")
       else {
@@ -305,8 +303,8 @@ object FusedTopK {
               val qq = qs(q)
               if (selfOk(qq, id)) {
                 pairs += 1
-                // a null query vector yields a null distance table; the join
-                // path's AdcDistance null-propagates to a null score
+                // a null query vector yields a null distance table, which
+                // AdcDistance null-propagates to a null score
                 if (codes == null || qq.vec == null) bufs(q).insert(nl = true, 0.0, id)
                 else {
                   // AdcDistance.compute, verbatim over the hoisted arrays

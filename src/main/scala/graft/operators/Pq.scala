@@ -105,30 +105,16 @@ object Pq {
   def adcTopKBatch(encoded: DataFrame, cb: PqCodebook, queries: DataFrame, k: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    queryIdCol: String = "query_id", codesCol: String = "codes",
-                   excludeSelf: Boolean = false,
-                   fused: Boolean = true): DataFrame = {
+                   excludeSelf: Boolean = false): DataFrame = {
     require(k > 0, s"Pq.adcTopKBatch: k must be positive, got $k")
-    // per-query distance tables computed by Spark either way (identical
-    // values); the fused path broadcasts the tiny table frame to one fused
-    // scan (FusedTopK)
+    // per-query distance tables computed by Spark; the tiny table frame
+    // broadcasts to one fused scan (FusedTopK), which keeps the highest
+    // NEGATED distances (ties → lower id)
     val q = queries.select(col(queryIdCol),
       V.pqDistTable(col(vecCol), cb.asSeq).as("__qtab"))
-    if (fused && FusedTopK.exactIntegerIdType(encoded.schema(idCol).dataType))
-      // decimal(p>18,0) corpus ids take the join path below (FusedTopK's
-      // heaps are long-keyed — see exactIntegerIdType)
-      FusedTopK.adcTopK(encoded, q, k, cb.ksub, idCol, codesCol, queryIdCol,
-          "__qtab", excludeSelf)
-        .select(col(queryIdCol), col(idCol), (-col("score")).as("distance"))
-    else encoded
-      .join(broadcast(q), if (excludeSelf) col(idCol) =!= col(queryIdCol) else lit(true))
-      // negative distance: the shared top-k aggregate keeps the HIGHEST
-      // scores (ties → lower id), so min-distance rides it unchanged
-      .select(col(queryIdCol), col(idCol),
-        (-V.adcDistance(col(codesCol), col("__qtab"), cb.ksub)).as("score"))
-      .groupBy(col(queryIdCol))
-      .agg(TopKAggregate.topK(col("score"), col(idCol), k).as("__tk"))
-      .select(col(queryIdCol), explode(col("__tk")).as("__e"))
-      .select(col(queryIdCol), col("__e.id").as(idCol), (-col("__e.score")).as("distance"))
+    FusedTopK.adcTopK(encoded, q, k, cb.ksub, idCol, codesCol, queryIdCol,
+        "__qtab", excludeSelf)
+      .select(col(queryIdCol), col(idCol), (-col("score")).as("distance"))
   }
 
   /** IVF+PQ residual encode — FAISS IndexIVFPQ, THE billion-scale

@@ -14,10 +14,10 @@ import graft.functions.{VectorFunctions => V}
   */
 object Similarity {
 
-  /** The shared per-query rank tail: score desc, id tie-break, keep top k.
-    * Shared by every batch path so ranking semantics (incl. NULL-score
-    * placement) cannot fork. Done as a bounded [[graft.plans.TopKAggregate]]
-    * — the map-side partial keeps at most k candidates per query per
+  /** The LSH batch paths' per-query rank tail: score desc, id tie-break,
+    * keep top k — the same [[graft.plans.TopKAggregate]] merge the fused
+    * scans end in, so ranking semantics (incl. NULL-score placement) cannot
+    * fork. The map-side partial keeps at most k candidates per query per
     * partition, so the exchange carries ≤ partitions × queries × k slim
     * rows instead of EVERY scored candidate (the window formulation it
     * replaced shuffled all of them just to rank-filter; ordering parity
@@ -37,8 +37,10 @@ object Similarity {
       s"$who: corpus already has a '$c' column — rename it first"))
 
   /** Exact top-k cosine neighbors of each query row. `queries` is expected to
-    * be small (it is broadcast); the corpus is scanned once, scored per row
-    * inside codegen, then rank-filtered per query (one shuffle on query_id).
+    * be small (it is broadcast); the corpus is scanned once by the fused
+    * scan ([[FusedTopK]]: per-query bounded heaps, no row per scored pair),
+    * then merged per query (one shuffle on query_id). The corpus id must be
+    * an exact integer; the query id keeps its own type.
     * `excludeSelf` skips corpus rows whose id equals the query id — only
     * meaningful when the queries are drawn FROM the corpus (an unrelated
     * query-id space would drop one legitimate neighbor per id collision).
@@ -46,24 +48,9 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      queryIdCol: String = "query_id",
-                     excludeSelf: Boolean = false,
-                     fused: Boolean = true): DataFrame =
-    if (fused && FusedTopK.exactIntegerIdType(corpus.schema(idCol).dataType))
-      // fused scan (FusedTopK): same scores bit-for-bit, same tie
-      // discipline, same slim exchange — without materializing a row per
-      // scored pair (~5× at sf10, see BASELINE.md). `fused = false` keeps
-      // the join formulation for parity pinning; decimal(p>18,0) corpus ids
-      // (the fused heaps are long-keyed) take it automatically.
-      FusedTopK.cosineTopK(corpus, queries, k, idCol, vecCol, queryIdCol,
-        excludeSelf, labelCol = None)
-    else {
-      val q = broadcast(queries.select(col(queryIdCol), col(vecCol).as("__qvec")))
-      rankPerQuery(
-        corpus
-          .join(q, if (excludeSelf) col(idCol) =!= col(queryIdCol) else lit(true))
-          .withColumn("score", V.cosine(col(vecCol), col("__qvec"))),
-        k, queryIdCol, idCol)
-    }
+                     excludeSelf: Boolean = false): DataFrame =
+    FusedTopK.cosineTopK(corpus, queries, k, idCol, vecCol, queryIdCol,
+      excludeSelf, labelCol = None)
 
   /** Top-k for a single query vector id taken from the corpus itself —
     * single-query fast path: ORDER BY + LIMIT compiles to
@@ -262,11 +249,10 @@ object Similarity {
       * collect). Each query's `nprobe` nearest cells are chosen INSIDE the
       * plan — centroids ship as a literal (nlist × dim doubles, small by
       * construction), each query scores them and keeps the best `nprobe` —
-      * then two broadcasts reach the corpus: narrow `(query, cell)` probe
-      * pairs for the candidate equi-join, and each query VECTOR exactly
-      * once (not once per probe cell) for scoring. The bounded top-k
-      * aggregate ranks candidates (map-side discard — only
-      * ≤ partitions × queries × k rows reach the exchange).
+      * then the queries (vector plus probed-cell list) broadcast to the
+      * fused scan ([[FusedTopK]]), where a corpus row scores against a query
+      * only when its cell is probed (an O(1) membership test per pair). Only
+      * ≤ partitions × queries × k rows reach the top-k merge's exchange.
       * A corpus row lives in exactly one
       * cell, so (query, doc) pairs are unique — no dedup stage needed.
       * When the query frame itself outgrows broadcast range, shard it and
@@ -283,8 +269,7 @@ object Similarity {
       */
     def topKBatch(queries: DataFrame, k: Int, nprobe: Int = 4,
                   queryIdCol: String = "query_id",
-                  excludeSelf: Boolean = false,
-                  fused: Boolean = true): DataFrame = {
+                  excludeSelf: Boolean = false): DataFrame = {
       require(nprobe > 0 && k > 0, s"IvfIndex.topKBatch: k=$k nprobe=$nprobe must be positive")
       requireNoReservedCols(assigned, Seq(queryIdCol, "__qvec", "__rank", "score"),
         "IvfIndex.topKBatch")
@@ -309,11 +294,9 @@ object Similarity {
       val withCells = queries.select(
         col(queryIdCol), qv.as("__qvec"),
         transform(slice(array_sort(scoredCells), 1, nprobe), s => s("cell")).as("__cells"))
-      val probePairs = withCells.select(col(queryIdCol), explode(col("__cells")).as("cell"))
-      val qVecs = withCells.select(col(queryIdCol), col("__qvec"))
       // Stored-layout parallelism guard: a writeIvfIndex table is bucketed
-      // by `cell`, so its scan has ≤ nlist NON-EMPTY partitions — and this
-      // join chain does all its candidate scoring in the scan's stage. At
+      // by `cell`, so its scan has ≤ nlist NON-EMPTY partitions — and the
+      // fused scan does all its candidate scoring in the scan's stage. At
       // production nlist that's fine (nlistFor keeps cells ≫ cores), but a
       // small-nlist index meeting a big probe batch concentrates the whole
       // quadratic scoring on nlist cores (sf10 measured: 100.8 s vs the
@@ -326,22 +309,10 @@ object Similarity {
         if (storedCellLayout && centers.length < spark0.sparkContext.defaultParallelism)
           assigned.repartition(spark0.sparkContext.defaultParallelism)
         else assigned
-      if (fused && FusedTopK.exactIntegerIdType(spread.schema(idCol).dataType))
-        // same probe-cell choice (withCells above, identical HOF
-        // arithmetic), scored in FusedTopK's single pass: the cell
-        // equi-join becomes an O(1) membership test per pair — see
-        // bruteForceTopK's fused/join contract
-        FusedTopK.cosineTopK(spread,
-          withCells.select(col(queryIdCol), col("__qvec").as(vecCol), col("__cells")),
-          k, idCol, vecCol, queryIdCol, excludeSelf, labelCol = None,
-          cellCol = Some("cell"), queryCellsCol = Some("__cells"))
-      else rankPerQuery(
-        spread
-          .join(broadcast(probePairs), Seq("cell"))
-          .join(broadcast(qVecs), Seq(queryIdCol))
-          .filter(if (excludeSelf) col(idCol) =!= col(queryIdCol) else lit(true))
-          .withColumn("score", V.cosine(col(vecCol), col("__qvec"))),
-        k, queryIdCol, idCol)
+      FusedTopK.cosineTopK(spread,
+        withCells.select(col(queryIdCol), col("__qvec").as(vecCol), col("__cells")),
+        k, idCol, vecCol, queryIdCol, excludeSelf, labelCol = None,
+        cellCol = Some("cell"), queryCellsCol = Some("__cells"))
     }
   }
 
@@ -465,58 +436,39 @@ object Similarity {
 
   /** [[semDupes]] over an existing IVF index — no quantizer re-fit.
     *
-    * Default path is the exact fused pair scan ([[FusedTopK.cosinePairs]]):
-    * the `(cell, bucket)` self-join materialized an UnsafeRow per CANDIDATE
-    * pair; the fused scan takes the replicated rows clustered and sorted on
-    * `(cell, bucket)`, streams each group, and emits only the qualifying
-    * pairs. Same pair set by
-    * construction (exact cosine, identical orientation and threshold
-    * semantics — parity pinned in FusedTopKSpec); `fused = false` keeps the
-    * join formulation.
+    * Candidates are the `(cell, bucket)` pairs of a probe×base equi-join,
+    * found by the fused pair scan ([[FusedTopK.cosinePairs]]) without
+    * materializing a row per CANDIDATE pair: it takes the probe-replicated
+    * rows clustered and sorted on `(cell, bucket)`, streams each group, and
+    * emits only the pairs `id_a < id_b` with exact cosine ≥ `threshold`
+    * (parity pinned in FusedTopKSpec). The id must be an exact integer.
     */
   def semDupesOnIndex(index: IvfIndex, dim: Int, threshold: Double = 0.95,
-                      nbits: Int = 8, seed: Long = 7L,
-                      fused: Boolean = true): DataFrame = {
+                      nbits: Int = 8, seed: Long = 7L): DataFrame = {
     val idCol = index.idCol; val vecCol = index.vecCol
-    val idx = index.assigned
-      .withColumn("bucket", V.hyperplaneBucket(col(vecCol), dim, nbits, seed))
-    if (fused) {
-      val replicated = idx.select(col("cell"), col(idCol), col(vecCol),
-          col("bucket").as("__obk"),
-          explode(V.probeBuckets(col("bucket"), nbits)).as("bucket"))
-        .withColumn("__orig", col("bucket") === col("__obk"))
-      FusedTopK.cosinePairs(replicated, threshold,
-          "cell", "bucket", "__orig", idCol, vecCol)
-        .dropDuplicates("id_a", "id_b")
-    } else {
-      val probed = idx.select(col("cell"), col(idCol).as("id_a"), col(vecCol).as("v_a"),
-        explode(V.probeBuckets(col("bucket"), nbits)).as("bucket"))
-      val base = idx.select(col("cell"), col(idCol).as("id_b"), col(vecCol).as("v_b"),
-        col("bucket"))
-      probed.join(base, Seq("cell", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        // map-side score → threshold → narrow dedup; see cosineDupes for why
-        // nothing wider than (id, id, score) may reach an exchange here
-        .select(col("id_a"), col("id_b"),
-          V.cosine(col("v_a"), col("v_b")).as("score"))
-        .filter(col("score") >= threshold)
-        .dropDuplicates("id_a", "id_b")
-    }
+    val replicated = index.assigned
+      .withColumn("__obk", V.hyperplaneBucket(col(vecCol), dim, nbits, seed))
+      .select(col("cell"), col(idCol), col(vecCol), col("__obk"),
+        explode(V.probeBuckets(col("__obk"), nbits)).as("bucket"))
+      .withColumn("__orig", col("bucket") === col("__obk"))
+    FusedTopK.cosinePairs(replicated, threshold, "cell", "bucket", "__orig", idCol, vecCol)
+      .dropDuplicates("id_a", "id_b")
   }
 
   /** The corpus with semantic near-duplicates dropped: for every
     * [[semDupes]] pair the higher id goes (greedy min-id-keeps — the same
     * policy as the lexical dedup family; on a chain a~b~c this can drop `c`
     * whose kept neighbor `b` was itself dropped, exactly the paper's
-    * ε-greedy over-drop). Pairs broadcast-anti-join the corpus as a slim id
-    * set — vectors never ride the anti-join exchange.
+    * ε-greedy over-drop). Pairs anti-join the corpus as a slim id set —
+    * vectors never ride the anti-join exchange — and the drop set grows
+    * with the corpus, so Spark's size estimate and AQE choose the join.
     */
   def semDedupe(corpus: DataFrame, dim: Int, threshold: Double = 0.95,
                 nlist: Int = 16, nbits: Int = 8, seed: Long = 7L,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val drops = semDupes(corpus, dim, threshold, nlist, nbits, seed, idCol, vecCol)
       .select(col("id_b").as(idCol)).distinct()
-    corpus.join(broadcast(drops), Seq(idCol), "left_anti")
+    corpus.join(drops, Seq(idCol), "left_anti")
   }
 
   /** Hard-negative mining for contrastive embedding training — the
@@ -525,44 +477,30 @@ object Similarity {
     * separable and teach the model nothing; the near-misses are what a
     * contrastive loss needs, and mining them is an ANN search with a label
     * exclusion — so this composes the exact batch scorer ([[bruteForceTopK]]
-    * shape) with the inequality pushed BELOW the top-k aggregate (filtering
-    * after ranking would under-fill k).
+    * shape) with the inequality pushed BELOW the top-k (filtering after
+    * ranking would under-fill k).
     *
-    * Exact path: anchors broadcast (with vector + label), corpus scanned
-    * once, label-mismatch filtered and cosine-scored inside the scan stage,
-    * then the bounded top-k aggregate ranks per anchor — the one exchange
-    * carries ≤ partitions × anchors × k slim rows. Null-label corpus rows
-    * are never negatives and null-label anchors mine nothing (SQL
-    * three-valued `<>` semantics — the oracle agrees by construction).
+    * Exact path: anchors broadcast (with vector + label) to the fused scan
+    * ([[FusedTopK]]), which scores only label-mismatched pairs in one corpus
+    * pass; the one exchange carries ≤ partitions × anchors × k slim rows to
+    * the top-k merge. Null-label corpus rows are never negatives and
+    * null-label anchors mine nothing (SQL three-valued `<>` semantics — the
+    * oracle agrees by construction).
     *
     * Returns `(anchorIdCol, idCol, score)` rank-ordered per anchor.
     */
   def hardNegatives(corpus: DataFrame, anchors: DataFrame, k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     labelCol: String = "label",
-                    anchorIdCol: String = "anchor_id",
-                    fused: Boolean = true): DataFrame = {
+                    anchorIdCol: String = "anchor_id"): DataFrame = {
     requireNoReservedCols(corpus, Seq(anchorIdCol, "__avec", "__albl", "score"),
       "hardNegatives")
     Seq(vecCol, labelCol).foreach(c => require(anchors.columns.contains(c),
       s"hardNegatives: anchors have no '$c' column"))
     require(anchors.columns.contains(anchorIdCol),
       s"hardNegatives: anchors have no '$anchorIdCol' column")
-    if (fused && FusedTopK.exactIntegerIdType(corpus.schema(idCol).dataType))
-      // the label-mismatch predicate rides the fused pass (both-non-null-
-      // and-different — the `=!=` three-valued semantics); see
-      // bruteForceTopK's note for the fused/join contract
-      FusedTopK.cosineTopK(corpus, anchors, k, idCol, vecCol, anchorIdCol,
-        excludeSelf = false, labelCol = Some(labelCol))
-    else {
-      val a = broadcast(anchors.select(col(anchorIdCol),
-        col(vecCol).as("__avec"), col(labelCol).as("__albl")))
-      rankPerQuery(
-        corpus
-          .join(a, col(labelCol) =!= col("__albl"))
-          .withColumn("score", V.cosine(col(vecCol), col("__avec"))),
-        k, anchorIdCol, idCol)
-    }
+    FusedTopK.cosineTopK(corpus, anchors, k, idCol, vecCol, anchorIdCol,
+      excludeSelf = false, labelCol = Some(labelCol))
   }
 
   /** [[hardNegatives]] through the LSH bucket index — the scale path when

@@ -44,6 +44,16 @@ object TopKAggregate {
     ColumnShim.column(TopKByScore(
       ColumnShim.expression(score), ColumnShim.expression(id), k)
       .toAggregateExpression())
+
+  /** The retrieval id contract, shared by [[TopKByScore]] and the fused
+    * scans of [[graft.operators.FusedTopK]]: an exact integer (the integral
+    * family or a scale-0 decimal — BIGINT routinely arrives as decimal(p,0)
+    * via JDBC/parquet), keyed as a long. */
+  private[graft] def exactIntegerId(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case d: DecimalType                                => d.scale == 0
+    case _                                             => false
+  }
 }
 
 /** Rank-ordered bounded buffer: parallel arrays in output order, n ≤ k.
@@ -105,23 +115,17 @@ case class TopKByScore(score: Expression, id: Expression, k: Int,
   // evaluated to null" mid-job. Enforce the documented contract ("id must
   // be an exact integer; rank anything else with a window") at ANALYSIS
   // time by unwrapping casts (the analyzer's implicit one, and any
-  // user-written chain on top) back to the source type. Accepted sources:
-  // the integral family plus scale-0 decimals — BIGINT routinely arrives
-  // as decimal(p,0) via JDBC/parquet and converts losslessly (overflow
-  // still nulls like any long overflow would). Fractional, string, and
-  // other null-on-failure conversions are rejected.
+  // user-written chain on top) back to the source type, which must pass
+  // TopKAggregate.exactIntegerId (a decimal(p>18,0) value beyond Long range
+  // then fails the cast under ANSI, or nulls and trips the null-id check).
+  // Fractional, string, and other null-on-failure conversions are rejected.
   override def checkInputDataTypes(): TypeCheckResult = {
     @annotation.tailrec def sourceType(e: Expression): DataType = e match {
       case c: Cast => sourceType(c.child)
       case other   => other.dataType
     }
     val idType = sourceType(id)
-    val exactInteger = idType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType if d.scale == 0                => true
-      case _                                             => false
-    }
-    if (!exactInteger)
+    if (!TopKAggregate.exactIntegerId(idType))
       TypeCheckResult.TypeCheckFailure(
         s"graft.TopKByScore: id must be an exact-integer column (integral or " +
           s"decimal(p,0), stored as BIGINT), got ${idType.catalogString}; " +

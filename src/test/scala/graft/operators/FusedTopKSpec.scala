@@ -1,16 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, SparkTestSession, Tables}
+import graft.functions.{VectorFunctions => VF}
+import graft.plans.{VectorExpressions => PV}
 
-/** FusedTopK: the fused retrieval scan must be ROW-IDENTICAL
-  * (scores bit-for-bit, tie order included) to the join + bounded-aggregate
-  * formulation it replaces, across the edge corpus (null vectors, null
-  * elements, zero vectors, mismatched lengths, exact-duplicate vectors → id
-  * tie-breaks, k larger than the corpus) and the real testdata shapes.
+/** FusedTopK: the fused retrieval scans must be ROW-IDENTICAL (scores
+  * bit-for-bit, tie order included) to the join path, across the edge corpus
+  * (null vectors, null elements, zero vectors, mismatched lengths,
+  * exact-duplicate vectors → id tie-breaks, k larger than the corpus) and the
+  * real testdata shapes. The join path is this spec's own reference: the
+  * scored cross product (CosineSim / AdcDistance under the same predicates),
+  * ranked per query by a `row_number` window (score desc, id asc — the
+  * order TopKAggregateSpec pins). It shares no code with TopKAggregate or
+  * the fused scans.
   */
 class FusedTopKSpec extends SparkSpec {
 
@@ -45,29 +52,107 @@ class FusedTopKSpec extends SparkSpec {
   private def usesFusedScan(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("FusedTopK")
 
+  /** The top-k join path: `queries` (its columns renamed apart from the
+    * corpus's) crossed with `corpus`, filtered by `pred`, scored by `score`
+    * and ranked per `qid` by a window. Output `(qid, vec_id as long, score)`,
+    * the fused scans' layout. */
+  private def joinPath(corpus: DataFrame, queries: DataFrame, k: Int, qid: String,
+      pred: Column, score: Column): DataFrame = {
+    val rank = Window.partitionBy(qid).orderBy(desc("score"), col("vec_id"))
+    corpus.crossJoin(queries).filter(pred)
+      .select(col(qid), col("vec_id").cast("long").as("vec_id"), score.as("score"))
+      .withColumn("__rank", row_number().over(rank))
+      .filter(col("__rank") <= k)
+      .drop("__rank")
+  }
+
+  private def selfPred(excludeSelf: Boolean): Column =
+    if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true)
+
+  /** [[Similarity.bruteForceTopK]]'s join path. */
+  private def cosineJoin(corpus: DataFrame, queries: DataFrame, k: Int,
+      excludeSelf: Boolean): DataFrame =
+    joinPath(corpus, queries.select(col("query_id"), col("embedding").as("__qvec")), k,
+      "query_id", selfPred(excludeSelf), VF.cosine(col("embedding"), col("__qvec")))
+
+  /** [[Similarity.hardNegatives]]'s join path. */
+  private def negativesJoin(corpus: DataFrame, anchors: DataFrame, k: Int): DataFrame =
+    joinPath(corpus, anchors.select(col("anchor_id"), col("embedding").as("__avec"),
+        col("label").as("__albl")), k,
+      "anchor_id", col("label") =!= col("__albl"), VF.cosine(col("embedding"), col("__avec")))
+
+  /** [[Pq.adcTopKBatch]]'s join path: negated distances rank highest-first. */
+  private def adcJoin(encoded: DataFrame, cb: Pq.PqCodebook, queries: DataFrame, k: Int,
+      excludeSelf: Boolean): DataFrame =
+    joinPath(encoded,
+        queries.select(col("query_id"), PV.pqDistTable(col("embedding"), cb.asSeq).as("__qtab")),
+        k, "query_id", selfPred(excludeSelf),
+        -PV.adcDistance(col("codes"), col("__qtab"), cb.ksub))
+      .select(col("query_id"), col("vec_id"), (-col("score")).as("distance"))
+
+  /** [[Similarity.IvfIndex.topKBatch]]'s join path. Each query's probed
+    * cells are chosen here, on the driver: the `nprobe` nearest centroids by
+    * squared Euclidean distance folded in index order, ties to the lower
+    * cell. */
+  private def ivfJoin(index: Similarity.IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val probed = queries.select(col("query_id"), col("embedding").cast("array<double>"))
+      .collect().toSeq.map { r =>
+        val q = r.getSeq[Double](1)
+        val cells = index.centers.indices.sortBy { c =>
+          var d = 0.0
+          q.indices.foreach { j => val t = q(j) - index.centers(c)(j); d += t * t }
+          (d, c)
+        }.take(nprobe)
+        (r.getLong(0), q, cells)
+      }
+    import spark.implicits._
+    joinPath(index.assigned, probed.toDF("query_id", "__qvec", "__cells"), k, "query_id",
+      array_contains(col("__cells"), col("cell")) && selfPred(excludeSelf),
+      VF.cosine(col("embedding"), col("__qvec")))
+  }
+
+  /** [[Similarity.semDupesOnIndex]]'s join path: every pair of rows in one
+    * cell where the base row's bucket is among the probe row's probe
+    * buckets, oriented `id_a < id_b`, scored and kept at `>= threshold`. */
+  private def pairsJoin(index: Similarity.IvfIndex, dim: Int, threshold: Double,
+      nbits: Int): DataFrame = {
+    val base = index.assigned.select(col("cell"), col("vec_id"), col("embedding"),
+      VF.hyperplaneBucket(col("embedding"), dim, nbits, 7L).as("bucket"))
+    base.select(col("cell").as("cell_a"), col("vec_id").as("id_a"), col("embedding").as("v_a"),
+        VF.probeBuckets(col("bucket"), nbits).as("probes"))
+      .crossJoin(base)
+      .filter(col("cell_a") === col("cell") && array_contains(col("probes"), col("bucket")) &&
+        col("id_a") < col("vec_id"))
+      .select(col("id_a"), col("vec_id").as("id_b"),
+        VF.cosine(col("v_a"), col("embedding")).as("score"))
+      .filter(col("score") >= threshold)
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
   test("bruteForceTopK: fused == join path on the edge corpus (both excludeSelf modes)") {
     val queries = planted.select(col("vec_id").as("query_id"), col("embedding"))
     for (ex <- Seq(true, false)) {
-      val fused = Similarity.bruteForceTopK(planted, queries, k = 4,
-        excludeSelf = ex, fused = true)
-      val join = Similarity.bruteForceTopK(planted, queries, k = 4,
-        excludeSelf = ex, fused = false)
+      val fused = Similarity.bruteForceTopK(planted, queries, k = 4, excludeSelf = ex)
+      val join = cosineJoin(planted, queries, k = 4, excludeSelf = ex)
       assert(sortedRows(fused) == sortedRows(join), s"excludeSelf=$ex")
     }
   }
 
   test("bruteForceTopK: k exceeding the corpus still matches") {
     val queries = planted.limit(2).select(col("vec_id").as("query_id"), col("embedding"))
-    val fused = Similarity.bruteForceTopK(planted, queries, k = 50, fused = true)
-    val join  = Similarity.bruteForceTopK(planted, queries, k = 50, fused = false)
+    val fused = Similarity.bruteForceTopK(planted, queries, k = 50)
+    val join  = cosineJoin(planted, queries, k = 50, excludeSelf = false)
     assert(sortedRows(fused) == sortedRows(join))
   }
 
   test("hardNegatives: fused == join path incl. null labels") {
     val anchors = planted.select(col("vec_id").as("anchor_id"),
       col("embedding"), col("label"))
-    val fused = Similarity.hardNegatives(planted, anchors, k = 3, fused = true)
-    val join  = Similarity.hardNegatives(planted, anchors, k = 3, fused = false)
+    val fused = Similarity.hardNegatives(planted, anchors, k = 3)
+    val join  = negativesJoin(planted, anchors, k = 3)
     assert(sortedRows(fused) == sortedRows(join))
   }
 
@@ -78,10 +163,8 @@ class FusedTopKSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding"))
     for (ex <- Seq(true, false)) {
-      val fused = Pq.adcTopKBatch(encoded, cb, queries, k = 5,
-        excludeSelf = ex, fused = true)
-      val join = Pq.adcTopKBatch(encoded, cb, queries, k = 5,
-        excludeSelf = ex, fused = false)
+      val fused = Pq.adcTopKBatch(encoded, cb, queries, k = 5, excludeSelf = ex)
+      val join = adcJoin(encoded, cb, queries, k = 5, excludeSelf = ex)
       assert(sortedRows(fused) == sortedRows(join), s"excludeSelf=$ex")
     }
   }
@@ -92,10 +175,8 @@ class FusedTopKSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding"))
     for (nprobe <- Seq(2, 8); ex <- Seq(true, false)) {
-      val fused = index.topKBatch(queries, k = 5, nprobe = nprobe,
-        excludeSelf = ex, fused = true)
-      val join = index.topKBatch(queries, k = 5, nprobe = nprobe,
-        excludeSelf = ex, fused = false)
+      val fused = index.topKBatch(queries, k = 5, nprobe = nprobe, excludeSelf = ex)
+      val join = ivfJoin(index, queries, k = 5, nprobe = nprobe, excludeSelf = ex)
       assert(sortedRows(fused) == sortedRows(join), s"nprobe=$nprobe excludeSelf=$ex")
     }
   }
@@ -119,22 +200,20 @@ class FusedTopKSpec extends SparkSpec {
     val idxPlanted = Similarity.ivfIndex(df, nlist = 2, seed = 7L)
     for (thr <- Seq(0.999, 0.5)) {
       val fused = Similarity.semDupesOnIndex(idxPlanted, dim = 3, threshold = thr,
-        nbits = 4, fused = true).select("id_a", "id_b", "score")
-      val join = Similarity.semDupesOnIndex(idxPlanted, dim = 3, threshold = thr,
-        nbits = 4, fused = false).select("id_a", "id_b", "score")
+        nbits = 4).select("id_a", "id_b", "score")
+      val join = pairsJoin(idxPlanted, dim = 3, threshold = thr, nbits = 4)
       assert(sortedRows(fused) == sortedRows(join), s"threshold=$thr")
     }
     // real embeddings with the q_dedup_semantic shape (planted exact dups);
-    // exact fused (default) and join must produce the identical pair set
+    // the fused scan and the join path must produce the identical pair set
     // with identical scores
     val emb = Tables.load(spark, dir, "embeddings")
     val aug = emb.unionByName(emb.filter(col("vec_id") % 50 === 0)
       .withColumn("vec_id", col("vec_id") + 1000000000L))
     val index = Similarity.ivfIndex(aug, nlist = 8, seed = 7L)
     val fusedR = Similarity.semDupesOnIndex(index, dim = 64, threshold = 0.999)
-    val joinR  = Similarity.semDupesOnIndex(index, dim = 64, threshold = 0.999, fused = false)
-    assert(sortedRows(fusedR.select("id_a", "id_b", "score")) ==
-           sortedRows(joinR.select("id_a", "id_b", "score")))
+    val joinR  = pairsJoin(index, dim = 64, threshold = 0.999, nbits = 8)
+    assert(sortedRows(fusedR.select("id_a", "id_b", "score")) == sortedRows(joinR))
     assert(fusedR.count() > 0) // the planted dups are actually found
   }
 
@@ -154,10 +233,9 @@ class FusedTopKSpec extends SparkSpec {
     val df = spark.createDataFrame(rows.asJava, schema)
     val index = Similarity.ivfIndex(df, nlist = 4, seed = 7L)
     for (thr <- Seq(0.9, 0.5, 0.1, -1.0)) {
-      val fused = Similarity.semDupesOnIndex(index, dim = 8, threshold = thr, nbits = 2,
-        fused = true).select("id_a", "id_b", "score")
-      val join = Similarity.semDupesOnIndex(index, dim = 8, threshold = thr, nbits = 2,
-        fused = false).select("id_a", "id_b", "score")
+      val fused = Similarity.semDupesOnIndex(index, dim = 8, threshold = thr, nbits = 2)
+        .select("id_a", "id_b", "score")
+      val join = pairsJoin(index, dim = 8, threshold = thr, nbits = 2)
       assert(sortedRows(fused) == sortedRows(join), s"threshold=$thr")
       assert(fused.count() > 0, s"threshold=$thr produced no pairs — test is vacuous")
     }
@@ -168,9 +246,9 @@ class FusedTopKSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val fused = Similarity.bruteForceTopK(emb, queries, k = 5,
-      excludeSelf = true, fused = true).orderBy("query_id", "vec_id").collect().toSeq
-    val join = Similarity.bruteForceTopK(emb, queries, k = 5,
-      excludeSelf = true, fused = false).orderBy("query_id", "vec_id").collect().toSeq
+      excludeSelf = true).orderBy("query_id", "vec_id").collect().toSeq
+    val join = cosineJoin(emb, queries, k = 5,
+      excludeSelf = true).orderBy("query_id", "vec_id").collect().toSeq
     assert(fused == join) // Row equality: double scores must match BITWISE
   }
 
@@ -178,8 +256,8 @@ class FusedTopKSpec extends SparkSpec {
     val emb = Tables.load(spark, dir, "embeddings")
     val anchors = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("anchor_id"), col("embedding"), col("label"))
-    val fused = Similarity.hardNegatives(emb, anchors, k = 5, fused = true)
-    val join  = Similarity.hardNegatives(emb, anchors, k = 5, fused = false)
+    val fused = Similarity.hardNegatives(emb, anchors, k = 5)
+    val join  = negativesJoin(emb, anchors, k = 5)
     assert(sortedRows(fused) == sortedRows(join))
   }
 
@@ -193,8 +271,7 @@ class FusedTopKSpec extends SparkSpec {
       "query_id", excludeSelf = false, labelCol = None, maxQueries = 4)
     val single = FusedTopK.cosineTopK(planted, queries, k = 2, "vec_id", "embedding",
       "query_id", excludeSelf = false, labelCol = None)
-    val join = Similarity.bruteForceTopK(planted, queries, k = 2,
-      excludeSelf = false, fused = false)
+    val join = cosineJoin(planted, queries, k = 2, excludeSelf = false)
     assert(usesFusedScan(chunked))
     assert(sortedRows(chunked) == sortedRows(single))
     assert(sortedRows(chunked) == sortedRows(join))
@@ -230,8 +307,7 @@ class FusedTopKSpec extends SparkSpec {
       "query_id", excludeSelf = false, labelCol = None, maxQueries = 4)
     val single = FusedTopK.cosineTopK(planted, queries, k = 2, "vec_id", "embedding",
       "query_id", excludeSelf = false, labelCol = None)
-    val join = Similarity.bruteForceTopK(planted, queries, k = 2,
-      excludeSelf = false, fused = false)
+    val join = cosineJoin(planted, queries, k = 2, excludeSelf = false)
     assert(sortedRows(chunked) == sortedRows(single))
     assert(sortedRows(chunked) == sortedRows(join))
     // one group per id — never k extra rows for a duplicated id
@@ -239,35 +315,51 @@ class FusedTopKSpec extends SparkSpec {
     assert(chunked.count() == single.count())
   }
 
-  test("decimal CORPUS ids beyond long precision take the join path (no lossy cast)") {
-    // the corpus id rides the same cast("long") round-trip inside the fused
-    // scans as the query id — the caller gate must check BOTH sides
-    val corpusDec = planted.withColumn("vec_id", col("vec_id").cast(DecimalType(19, 0)))
+  test("decimal(19,0) corpus ids: in range == the join path, beyond Long range a loud failure") {
+    // the fused heaps key the corpus id as a long: an in-range decimal(19,0)
+    // id converts exactly, and one beyond Long range fails the query under
+    // either ANSI mode — never nulled (excludeSelf would skip the row) or
+    // wrapped (neighbors would merge)
+    val dec = DecimalType(19, 0)
+    val corpusDec = planted.withColumn("vec_id", col("vec_id").cast(dec))
+    val beyond = planted.withColumn("vec_id", when(col("vec_id") === 9L,
+      lit(BigDecimal("9999999999999999999")).cast(dec)).otherwise(col("vec_id").cast(dec)))
     val q = planted.filter(col("vec_id") <= 3)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val viaDefault = Similarity.bruteForceTopK(corpusDec, q, k = 2, fused = true)
-    val viaJoin    = Similarity.bruteForceTopK(corpusDec, q, k = 2, fused = false)
-    assert(sortedRows(viaDefault) == sortedRows(viaJoin))
-    // and the in-operator backstop is loud for direct fused calls
+    // a query id no long can hold equals no corpus id: excludeSelf drops nothing
+    val qBeyond = q.withColumn("query_id", when(col("query_id") === 1L,
+      lit(BigDecimal("9999999999999999999")).cast(dec)).otherwise(col("query_id").cast(dec)))
+    for (ansi <- Seq("true", "false"); ex <- Seq(true, false))
+      SparkTestSession.withConf("spark.sql.ansi.enabled", ansi) {
+        val viaDefault = Similarity.bruteForceTopK(corpusDec, q, k = 2, excludeSelf = ex)
+        assert(usesFusedScan(viaDefault))
+        assert(sortedRows(viaDefault) == sortedRows(cosineJoin(corpusDec, q, k = 2, ex)),
+          s"ansi=$ansi excludeSelf=$ex")
+        assert(sortedRows(Similarity.bruteForceTopK(corpusDec, qBeyond, k = 2, excludeSelf = ex)) ==
+          sortedRows(cosineJoin(corpusDec, qBeyond, k = 2, ex)), s"ansi=$ansi excludeSelf=$ex")
+        val e = intercept[Exception] {
+          Similarity.bruteForceTopK(beyond, q, k = 2, excludeSelf = ex).collect()
+        }
+        assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("CAST_OVERFLOW")),
+          s"ansi=$ansi excludeSelf=$ex: $e")
+      }
+    // and a non-integer corpus id fails at plan construction, on a direct
+    // fused call too
     val e = intercept[IllegalArgumentException] {
-      FusedTopK.cosineTopK(corpusDec, q, k = 2, "vec_id", "embedding",
-        "query_id", excludeSelf = false, labelCol = None)
+      FusedTopK.cosineTopK(planted.withColumn("vec_id", col("vec_id").cast("double")), q,
+        k = 2, "vec_id", "embedding", "query_id", excludeSelf = false, labelCol = None)
     }
     assert(e.getMessage.contains("corpus id"))
   }
 
   test("decimal(19,0) query ids ride the fused scan, == the join path") {
     // decimal(19,0) CAN hold values a long cannot: the query id rides the
-    // fused scan in its own type (only the CORPUS id is cast to long, and
-    // gated by TYPE — precision > 18 — not by runtime values)
-    assert(!FusedTopK.exactIntegerIdType(DecimalType(19, 0)))
-    assert(!FusedTopK.exactIntegerIdType(DecimalType(38, 0)))
-    assert(FusedTopK.exactIntegerIdType(DecimalType(18, 0)))
+    // fused scan in its own type (only the CORPUS id is cast to long)
     val qDec = planted.filter(col("vec_id") <= 3)
       .select(col("vec_id").cast(DecimalType(19, 0)).as("query_id"), col("embedding"))
     for (ex <- Seq(true, false)) {
       val viaDefault = Similarity.bruteForceTopK(planted, qDec, k = 2, excludeSelf = ex)
-      val viaJoin = Similarity.bruteForceTopK(planted, qDec, k = 2, excludeSelf = ex, fused = false)
+      val viaJoin = cosineJoin(planted, qDec, k = 2, excludeSelf = ex)
       assert(usesFusedScan(viaDefault))
       assert(sortedRows(viaDefault) == sortedRows(viaJoin), s"excludeSelf=$ex")
       assert(viaDefault.schema("query_id").dataType == DecimalType(19, 0))
@@ -281,28 +373,28 @@ class FusedTopKSpec extends SparkSpec {
       .select(when(col("vec_id") === 1L, lit("0123"))
         .when(col("vec_id") === 2L, lit("123"))
         .otherwise(lit("q3")).as("query_id"), col("embedding"))
-    val viaDefault = Similarity.bruteForceTopK(planted, q2, k = 3, fused = true)
-    val viaJoin    = Similarity.bruteForceTopK(planted, q2, k = 3, fused = false)
+    val viaDefault = Similarity.bruteForceTopK(planted, q2, k = 3)
+    val viaJoin    = cosineJoin(planted, q2, k = 3, excludeSelf = false)
     assert(usesFusedScan(viaDefault))
     assert(sortedRows(viaDefault) == sortedRows(viaJoin))
     // three distinct query ids, each with its own full top-3
     assert(viaDefault.select("query_id").distinct().count() == 3)
     assert(viaDefault.count() == 9)
     assert(viaDefault.schema("query_id").dataType == StringType)
-    // excludeSelf compares corpus and query ids as the join's `=!=` does
+    // excludeSelf compares corpus and query ids as SQL's `=!=` does
     // (Spark's own coercion), so both paths drop the same rows
     val numeric = planted.filter(col("vec_id").isin(1L, 2L))
       .select(when(col("vec_id") === 1L, lit("01")).otherwise(lit("2")).as("query_id"),
         col("embedding"))
     assert(sortedRows(Similarity.bruteForceTopK(planted, numeric, k = 3, excludeSelf = true)) ==
-      sortedRows(Similarity.bruteForceTopK(planted, numeric, k = 3, excludeSelf = true, fused = false)))
+      sortedRows(cosineJoin(planted, numeric, k = 3, excludeSelf = true)))
   }
 
   test("fused output keeps the original exact-integer query-id type") {
     val qInt = planted.filter(col("vec_id") <= 3)
       .select(col("vec_id").cast("int").as("query_id"), col("embedding"))
-    val fused = Similarity.bruteForceTopK(planted, qInt, k = 2, fused = true)
-    val join  = Similarity.bruteForceTopK(planted, qInt, k = 2, fused = false)
+    val fused = Similarity.bruteForceTopK(planted, qInt, k = 2)
+    val join  = cosineJoin(planted, qInt, k = 2, excludeSelf = false)
     assert(fused.schema("query_id").dataType == join.schema("query_id").dataType)
     assert(fused.schema("query_id").dataType == IntegerType)
     assert(sortedRows(fused) == sortedRows(join))
@@ -313,12 +405,12 @@ class FusedTopKSpec extends SparkSpec {
     val corpus = planted.filter(col("vec_id").isin(1L, 3L, 4L))
     val encoded = Pq.encode(corpus, cb)
     // query 6 has a NULL embedding → null __qtab; the join path ranks its
-    // neighbors with null distances, the fused path must do the same (it
+    // neighbors with null distances, the fused scan must do the same (it
     // NPE'd at table.length before r19)
     val queries = planted.filter(col("vec_id").isin(1L, 6L))
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val fused = Pq.adcTopKBatch(encoded, cb, queries, k = 2, fused = true)
-    val join  = Pq.adcTopKBatch(encoded, cb, queries, k = 2, fused = false)
+    val fused = Pq.adcTopKBatch(encoded, cb, queries, k = 2)
+    val join  = adcJoin(encoded, cb, queries, k = 2, excludeSelf = false)
     assert(sortedRows(fused) == sortedRows(join))
     assert(fused.filter(col("query_id") === 6L).count() == 2) // null-ranked, not dropped
   }

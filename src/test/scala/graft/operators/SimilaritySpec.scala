@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, SparkTestSession}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -61,6 +61,39 @@ class SimilaritySpec extends SparkSpec {
     val kept = Similarity.semDedupe(withDups, dim, threshold = 0.999, nlist = 4, nbits = 6)
       .select("vec_id").as[Long].collect().toSet
     assert(kept == (0L until 200L).toSet, s"semDedupe kept wrong set: ${kept -- (0L until 200L)}")
+  }
+
+  test("semDedupe's anti-join is not forced to broadcast: planned with thresholds off, same kept set") {
+    // the drop set grows with the corpus, so Spark's size estimate and AQE
+    // choose the join; with both broadcast thresholds off nothing broadcasts
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val planted = Seq.tabulate(3)(i => (900L + i, vecs.find(_._1 == i.toLong).get._2))
+    val withDups = emb.union(planted.toDF("vec_id", "embedding"))
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      SparkTestSession.withConf("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1") {
+        val df = Similarity.semDedupe(withDups, dim, threshold = 0.999, nlist = 4, nbits = 6)
+        val kept = df.collect().map(_.getAs[Long]("vec_id")).toSet
+        assert(kept == (0L until 200L).toSet, s"semDedupe kept wrong set: ${kept -- (0L until 200L)}")
+        val plan = df.queryExecution.executedPlan
+        assert(Aqe.collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
+        assert(Aqe.collect(plan) { case j: BaseJoinExec => j.joinType }.contains(LeftAnti), plan)
+      }
+    }
+  }
+
+  test("semDupesOnIndex rejects a non-integer id at plan construction") {
+    // ids 1.2 and 1.7 carry the same vector: a long cast would make both 1,
+    // and `id_a < id_b` would drop the pair without a word
+    val rows = Seq((1.2, Seq(1f, 0f, 0f)), (1.7, Seq(1f, 0f, 0f)), (3.0, Seq(0f, 1f, 0f)))
+    for (ids <- Seq(rows.toDF("vec_id", "embedding"),
+                    rows.map { case (id, v) => (id.toString, v) }.toDF("vec_id", "embedding"))) {
+      val index = Similarity.ivfIndex(ids, nlist = 2)
+      val e = intercept[IllegalArgumentException](Similarity.semDupesOnIndex(index, dim = 3))
+      assert(e.getMessage.contains("exact integer"), e.getMessage)
+    }
   }
 
   test("nlistFor: constant-cell-size policy — candidate volume linear in N, floors pinned") {
